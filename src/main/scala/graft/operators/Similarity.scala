@@ -83,13 +83,12 @@ object Similarity {
     * pure relevance; ties break to the lower candidate id at every
     * step, so the selection is a pure function of the data.
     *
-    * Distributed shape: the pool is the bounded-heap top-k (|Q|·poolK
-    * rows), pool-internal pairwise sims are one self-join on qid
-    * (|Q|·poolK² rows — poolK is a constant, so this never scales with
-    * the corpus), and each greedy step is one aggregate + one argmax
-    * over those constant-size frames. selectK is unrolled statically —
-    * no driver loop over data-dependent state, so the whole selection
-    * stays one Catalyst plan an ANSI engine can replay as an oracle.
+    * Plan shape: one lazy plan, no barrier and no build-time job. The
+    * pool is the bounded-heap top-k (|Q|·poolK rows), joined to the
+    * candidate vectors and collected per query; the greedy loop is one
+    * [[graft.functions.MmrKernel]] call per query row (poolK·selectK
+    * cosines in doubles), exploded back to rows. poolK is a constant, so
+    * nothing after the pool scales with the corpus.
     */
   def mmrRerank(
       queries: DataFrame, // (qid, qvec)
@@ -99,49 +98,13 @@ object Similarity {
       lambda: Double): DataFrame = {
     require(selectK >= 1 && selectK <= poolK, s"selectK $selectK vs poolK $poolK")
     VectorFunctions.register(candidates.sparkSession)
-    // localCheckpoint barriers: pool feeds the pairwise join, every
-    // step's anti join, and the final rel join — and each unrolled step
-    // stacks on the previous selection. Unbarriered, the brute top-k
-    // re-evaluates once per downstream branch per step (exponential in
-    // selectK — the kcore lineage pattern; measured 5.2 s → ~1 s at
-    // sf0.1). Both frames are |Q|·poolK(²) rows, so the barrier is an
-    // O(constant) materialization.
-    val pool = bruteForceTopK(queries, candidates, poolK)
+    bruteForceTopK(queries, candidates, poolK)
       .select(col("query_id").as("qid"), col("neighbor_id").as("cid"),
         col("sim").as("rel"))
-      .localCheckpoint()
-    val vecs = candidates.select(col("cid"), col("cvec"))
-    val poolV = pool.join(vecs, "cid")
-    val pairs = poolV.select(col("qid"), col("cid").as("c1"), col("cvec").as("v1"))
-      .join(poolV.select(col("qid").as("q2"), col("cid").as("c2"),
-        col("cvec").as("v2")), col("qid") === col("q2") && col("c1") =!= col("c2"))
-      .select(col("qid"), col("c1"), col("c2"),
-        VectorFunctions.cosineSim(col("v1"), col("v2")).as("s12"))
-      .localCheckpoint()
-    // argmax by (score desc, cid asc) via max(struct(score, -cid))
-    def argmax(df: DataFrame, score: Column): DataFrame = df
+      .join(candidates.select(col("cid"), col("cvec")), "cid")
       .groupBy(col("qid"))
-      .agg(max(struct(score.as("s"), (-col("cid")).as("nc"))).as("m"))
-      .select(col("qid"), (-col("m.nc")).as("cid"))
-    var selected = argmax(pool, col("rel"))
-      .withColumn("rank", lit(1))
-    for (step <- 2 to selectK) {
-      val remaining = pool.join(selected.select(col("qid"), col("cid")),
-        Seq("qid", "cid"), "left_anti")
-      val pairsR = pairs.select(col("qid").as("pq"), col("c1"), col("c2"),
-        col("s12"))
-      val withMaxSim = remaining
-        .join(pairsR, col("qid") === col("pq") && col("cid") === col("c1"))
-        .join(selected.select(col("qid").as("sq"), col("cid").as("sc")),
-          col("qid") === col("sq") && col("c2") === col("sc"))
-        .groupBy(col("qid"), col("cid"), col("rel"))
-        .agg(max(col("s12")).as("max_sim"))
-      val pick = argmax(withMaxSim,
-        lit(lambda) * col("rel") - lit(1.0 - lambda) * col("max_sim"))
-        .withColumn("rank", lit(step))
-      selected = selected.unionByName(pick).localCheckpoint()
-    }
-    selected.join(pool, Seq("qid", "cid"))
+      .agg(collect_list(struct(col("cid"), col("rel"), col("cvec"))).as("pool"))
+      .select(col("qid"), inline(VectorFunctions.mmrSelect(col("pool"), selectK, lambda)))
       .select(col("qid").as("query_id"), col("rank"),
         col("cid").as("neighbor_id"), col("rel"))
       .orderBy(col("query_id"), col("rank"))
@@ -1445,8 +1408,9 @@ object Similarity {
       scaleBits: Int = 20): DataFrame = {
     val v = prepKmeans(vectors)
     val (ids, mat) = seedCentroids(v, numCentroids)
+    // ≤ numCentroids rows: sorted on the driver, not by a range shuffle
     val it1 = lloydAgg(v, ids, mat, scaleBits)
-      .select(col("cell"), col("sums")).orderBy(col("cell")).collect()
+      .select(col("cell"), col("sums")).collect().sortBy(_.getLong(0))
     val ids2: Seq[Long] = it1.map(_.getLong(0)).toSeq
     val mat2: Seq[Seq[Float]] =
       it1.map(_.getSeq[Long](1).map(_.toFloat).toSeq).toSeq
@@ -1490,8 +1454,9 @@ object Similarity {
         s"without the flag), got $maxIters")
     val v = prepKmeans(vectors)
     val (ids0, mat0) = seedCentroids(v, numCentroids)
+    // ≤ numCentroids rows: sorted on the driver, not by a range shuffle
     def state(ids: Seq[Long], mat: Seq[Seq[Float]]): Seq[(Long, Long, Seq[Long])] =
-      lloydAgg(v, ids, mat, scaleBits).orderBy(col("cell")).collect()
+      lloydAgg(v, ids, mat, scaleBits).collect().sortBy(_.getLong(0))
         .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2).toSeq)).toSeq
     var cur = state(ids0, mat0)
     var converged = false

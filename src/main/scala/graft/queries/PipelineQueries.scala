@@ -1181,8 +1181,9 @@ object PipelineQueries extends QueryModule {
     //    step). λ = 0.75 is chosen so BOTH coefficients are exact binary
     //    fractions — the Scala-side 1−λ fold and the SQL literals are
     //    the same doubles, so every mmr comparison is bit-identical.
-    //    The greedy steps are statically unrolled (one Catalyst plan, no
-    //    driver loop); all frames are |Q|·poolK ≤ constant. ─────────────
+    //    One lazy plan, no build-time job: the pool is collected per
+    //    query and one greedy kernel per query picks the 4 (|Q|·poolK
+    //    rows ≤ constant after the top-k heap). ────────────────────────
     QueryDef("sim_rerank_mmr",
       (s, dir) => {
         val emb = Tables.load(s, dir, "embeddings")
@@ -2876,15 +2877,18 @@ object PipelineQueries extends QueryModule {
     //    `text_bpe_apply` encodes with a GIVEN merge list — this learns
     //    the list, recounting between merges exactly like the reference
     //    algorithm): each round counts adjacent symbol pairs over the
-    //    weighted word-type table, picks the argmax pair (ties to the
+    //    weighted word-type table, collects the argmax pair (ties to the
     //    lexicographically smallest — TakeOrdered(1), total order), and
     //    greedily merges it left-to-right inside every word via an
-    //    array-accumulator fold (the same engine-parity fold class as
-    //    window_holt_linear; string state, no floats at all). Emits the
-    //    learned merge per round plus the corpus token count after it —
-    //    the compression trajectory. 100 TB: the corpus collapses to
-    //    the vocabulary in the FIRST aggregate; every round after is
-    //    vocab-sized with 1-row broadcast merge decisions. ──────────────
+    //    array-accumulator fold with the pair as string literals (the
+    //    same engine-parity fold class as window_holt_linear; string
+    //    state, no floats at all). Emits the learned merge per round, as
+    //    literals, plus the corpus token count after it — the
+    //    compression trajectory. A round with no pair left ends the
+    //    loop. 100 TB: the corpus collapses to the vocabulary in the
+    //    FIRST aggregate; the symbol table is checkpointed once and after
+    //    each merge (each is read by the next count, merge and emit), and
+    //    the only driver traffic is one collected row per round. ────────
     QueryDef("text_bpe_train3",
       (s, dir) => {
         import s.implicits._
@@ -2892,19 +2896,14 @@ object PipelineQueries extends QueryModule {
           .select(explode(tokens($"text")).as("w"))
           .filter($"w".rlike("^[a-z]+$") && length($"w") >= 2)
           .groupBy($"w").agg(count(lit(1)).as("c_w"))
-        // r16 (guide §5): the symbol table is vocab-sized (word types ×
-        // short arrays) but each merge round references its predecessor
-        // twice (pair count + merge rewrite) and the emit reads it again
-        // — unbarriered, the before-plan re-ran the corpus tokenize +
-        // type aggregate 42 scans deep (1,795 plan lines). Checkpointing
-        // syms0 and each round's state keeps the corpus-sized work in
-        // the first aggregate only, exactly what the scaladoc promises.
-        val syms0 = types.select($"c_w",
+        var syms = types.select($"c_w",
           transform(sequence(lit(1), length($"w")),
             i => $"w".substr(i, lit(1))).as("syms"))
           .localCheckpoint()
-        def round(symsDf: org.apache.spark.sql.DataFrame): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-          val pairs = symsDf
+        val rounds = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
+        var done = false
+        while (rounds.size < 3 && !done) {
+          val best = syms
             .filter(size($"syms") >= 2)
             .select($"c_w", explode(transform(
               sequence(lit(1), size($"syms") - 1),
@@ -2912,33 +2911,32 @@ object PipelineQueries extends QueryModule {
                 element_at($"syms", i + 1).as("b")))).as("p"))
             .groupBy($"p.a".as("a"), $"p.b".as("b"))
             .agg(sum($"c_w").as("pair_count"))
-          // best is 1 row read by the merge AND the emit; merged is the
-          // next round's twice-read input — both checkpointed (see syms0)
-          val best = pairs.orderBy($"pair_count".desc, $"a", $"b").limit(1)
-            .localCheckpoint()
-          val merged = symsDf
-            .crossJoin(broadcast(best.select($"a".as("ma"), $"b".as("mb"))))
-            .select($"c_w", aggregate(
-              slice($"syms", lit(2), greatest(size($"syms") - 1, lit(0))),
-              array(element_at($"syms", 1)),
-              (acc, x) => when(
-                element_at(acc, -1) === $"ma" && x === $"mb",
-                concat(slice(acc, lit(1), size(acc) - 1),
-                  array(concat($"ma", $"mb"))))
-                .otherwise(concat(acc, array(x)))).as("syms"))
-            .localCheckpoint()
-          (best, merged)
+            .orderBy($"pair_count".desc, $"a", $"b").limit(1)
+            .collect().headOption
+          best match {
+            case None => done = true
+            case Some(b) =>
+              val (ma, mb) = (b.getString(0), b.getString(1))
+              syms = syms
+                .select($"c_w", aggregate(
+                  slice($"syms", lit(2), greatest(size($"syms") - 1, lit(0))),
+                  array(element_at($"syms", 1)),
+                  (acc, x) => when(
+                    element_at(acc, -1) === lit(ma) && x === lit(mb),
+                    concat(slice(acc, lit(1), size(acc) - 1), array(lit(ma + mb))))
+                    .otherwise(concat(acc, array(x)))).as("syms"))
+                .localCheckpoint()
+              rounds += syms
+                .agg(sum($"c_w" * size($"syms")).as("corpus_tokens_after"))
+                .select(lit(rounds.size + 1).as("round"), lit(ma).as("merge_a"),
+                  lit(mb).as("merge_b"), lit(b.getLong(2)).as("pair_count"),
+                  $"corpus_tokens_after")
+          }
         }
-        val (b1, s1) = round(syms0)
-        val (b2, s2) = round(s1)
-        val (b3, s3) = round(s2)
-        def emit(r: Int, best: org.apache.spark.sql.DataFrame, after: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-          best.crossJoin(broadcast(
-            after.agg(sum($"c_w" * size($"syms")).as("corpus_tokens_after"))))
-            .select(lit(r).as("round"), $"a".as("merge_a"),
-              $"b".as("merge_b"), $"pair_count", $"corpus_tokens_after")
-        emit(1, b1, s1).unionByName(emit(2, b2, s2))
-          .unionByName(emit(3, b3, s3))
+        rounds.reduceOption(_ unionByName _)
+          .getOrElse(syms.limit(0).select(lit(0).as("round"), lit("").as("merge_a"),
+            lit("").as("merge_b"), lit(0L).as("pair_count"),
+            lit(0L).as("corpus_tokens_after")))
           .orderBy($"round")
       },
       Some("""WITH toks AS (SELECT unnest(string_split_regex(lower(trim(text)), '\s+')) AS w
@@ -6843,7 +6841,7 @@ object PipelineQueries extends QueryModule {
         val hits = ivf10.join(brute, Seq("qid", "cid"))
           .groupBy($"np").agg(count(lit(1)).as("n_hits"))
         val qn = queries.agg(count(lit(1)).as("nq"))
-        broadcast(budgets).join(hits, Seq("np"), "left")
+        budgets.join(hits, Seq("np"), "left")
           .crossJoin(broadcast(qn))
           .select($"np".as("n_probe"), $"nq".as("n_queries"),
             coalesce($"n_hits", lit(0L)).as("n_hits"),

@@ -264,6 +264,9 @@ class PlanAuditSpec extends AnyFunSuite {
     "agg_incremental_distinct_exact", "agg_sketch_error_bounds",
     "agg_approx_topk_bounds", "agg_hll_mergeable_bounds", "agg_countmin_bounds",
     "dedup_embedding_cosine", "sim_topk_brute", "sim_topk_filtered", "sim_topk_ivf",
+    // mmr rerank: its pool is topk_brute (the same non-equi qid≠cid probe
+    // broadcast); the per-query greedy after it is a kernel, no join
+    "sim_rerank_mmr",
     // index_probe/rotate: same vector×centroid routing cross join as
     // topk_ivf, against the STORED |centroids|-row broadcast table
     "sim_index_probe", "sim_index_rotate",
@@ -400,9 +403,6 @@ class PlanAuditSpec extends AnyFunSuite {
     "embed_matryoshka_eval",
     // hard negatives: sim_topk_brute's non-equi qid≠cid probe broadcast
     "sample_hard_negatives",
-    // bpe training: per round a 1-row argmax-merge broadcast onto the
-    // vocab-sized symbol table, plus 1-row×1-row emit recombines
-    "text_bpe_train3",
     // negative sampling: the orders×slots frame × 1-row part-key-domain
     // broadcast recombine; candidate validation and the positive
     // exclusion are equi joins
@@ -629,10 +629,11 @@ class PlanAuditSpec extends AnyFunSuite {
     // held-out bigram frame (the text_lm_score n_tokens shape)
     "text_lm_kneser_ney")
 
-  test("agg_sketch_error_bounds builds and explains with zero Spark jobs") {
-    // The sketch-vs-exact booleans must live IN the plan (1×1 broadcast
-    // cross join), not in eager .head() calls — otherwise every plan
-    // audit or dry explain of the registry pays two full aggregations.
+  /** Spark jobs started while `f` runs. Query construction is counted
+    * after one warm build, so the memoized table-footer inference job of
+    * a first table touch is not charged to the query.
+    */
+  private def buildJobs(name: String)(f: org.apache.spark.sql.DataFrame => Unit): Int = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
@@ -640,17 +641,39 @@ class PlanAuditSpec extends AnyFunSuite {
         jobs.incrementAndGet(); ()
       }
     }
-    // warm the memoized lineitem schema first — the footer-inference job
-    // belongs to first table touch, not to this query's construction
-    SparkEntry.queries("agg_sketch_error_bounds")(spark, sfDir)
+    SparkEntry.queries(name)(spark, sfDir)
     spark.sparkContext.addSparkListener(listener)
     try {
-      val df = SparkEntry.queries("agg_sketch_error_bounds")(spark, sfDir)
+      f(SparkEntry.queries(name)(spark, sfDir))
+      Thread.sleep(1500) // listener bus is async; give any job event time to land
+      jobs.get()
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("agg_sketch_error_bounds builds and explains with zero Spark jobs") {
+    // The sketch-vs-exact booleans must live IN the plan (1×1 broadcast
+    // cross join), not in eager .head() calls — otherwise every plan
+    // audit or dry explain of the registry pays two full aggregations.
+    val n = buildJobs("agg_sketch_error_bounds") { df =>
       df.queryExecution.executedPlan.toString
       df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
-      Thread.sleep(1500) // listener bus is async; give any job event time to land
-      assert(jobs.get() == 0, s"plan construction/explain ran ${jobs.get()} Spark jobs")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(n == 0, s"plan construction/explain ran $n Spark jobs")
+  }
+
+  test("iterative queries' build-time Spark jobs: none for mmr, pinned for bpe and k-means") {
+    // Job counts are work counters load cannot move, unlike wall time.
+    // sim_rerank_mmr is one lazy plan (pool, per-query greedy kernel).
+    val mmr = buildJobs("sim_rerank_mmr")(_.queryExecution.executedPlan.toString)
+    assert(mmr == 0, s"sim_rerank_mmr build/plan ran $mmr Spark jobs")
+    // Pinned at the counts measured at sf0.001 with the collected-literal
+    // merges (bpe: the symbol-table checkpoints plus one 1-row collect per
+    // round) and the driver-sorted k-means state; a rise means a new
+    // build-time barrier or action.
+    val bpe = buildJobs("text_bpe_train3")(_.queryExecution.executedPlan.toString)
+    assert(bpe <= 11, s"text_bpe_train3 build/plan ran $bpe Spark jobs")
+    val km = buildJobs("embed_kmeans_converged")(_.queryExecution.executedPlan.toString)
+    assert(km <= 7, s"embed_kmeans_converged build/plan ran $km Spark jobs")
   }
 
   test("no registered query plans an unpartitioned window over unreduced input") {

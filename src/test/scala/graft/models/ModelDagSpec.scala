@@ -1,9 +1,9 @@
 package graft.models
 
-import graft.TestSpark
+import graft.{TempDirs, TestSpark}
 import org.scalatest.funsuite.AnyFunSuite
 
-class ModelDagSpec extends AnyFunSuite {
+class ModelDagSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   test("example models build in DAG order with exact dbt-faithful contents") {
@@ -33,16 +33,14 @@ class ModelDagSpec extends AnyFunSuite {
   }
 
   test("table materialization persists to the warehouse dir") {
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "wh").toString
+    val dir = tempDir("wh").toString
     val out = ModelDag.run(spark, ExampleModels.all, warehouseDir = Some(dir))
     assert(new java.io.File(s"$dir/my_first_dbt_model").exists())
     assert(out("my_first_dbt_model").count() == 2)
   }
 
   test("catalog mode: table model becomes a catalog table, view model a CREATE OR REPLACE VIEW") {
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "whcat").toString
+    val dir = tempDir("whcat").toString
     val out = ModelDag.run(spark, ExampleModels.all,
       warehouseDir = Some(dir), catalogViews = true)
     // both are persistent catalog objects now, not session temp views
@@ -93,8 +91,7 @@ class ModelDagSpec extends AnyFunSuite {
   }
 
   test("catalog mode inlines ephemeral sqlText as a CTE into downstream persistent views") {
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "wheph").toString
+    val dir = tempDir("wheph").toString
     val base = Model("eph_cat_base", Nil, Materialization.View,
       s => s.sql("SELECT id FROM range(10)"),
       sqlText = Some("SELECT id FROM range(10)"))
@@ -118,8 +115,7 @@ class ModelDagSpec extends AnyFunSuite {
   }
 
   test("catalog mode rejects a view over an ephemeral that has no sqlText (nothing to inline)") {
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "whephbad").toString
+    val dir = tempDir("whephbad").toString
     val mid = Model("eph_bad_mid", Nil, Materialization.Ephemeral,
       s => s.range(5).toDF("id")) // DataFrame-only: cannot inline into SQL
     val top = Model("eph_bad_top", Seq("eph_bad_mid"), Materialization.View,
@@ -134,8 +130,7 @@ class ModelDagSpec extends AnyFunSuite {
   }
 
   test("inlined ephemeral CTEs are prefixed so a view-local CTE of the same name can't collide") {
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "whephcte").toString
+    val dir = tempDir("whephcte").toString
     val mid = Model("eph_pfx_mid", Nil, Materialization.Ephemeral,
       s => s.sql("SELECT id, id * 3 AS tri FROM range(6)"),
       sqlText = Some("SELECT id, id * 3 AS tri FROM range(6)"))

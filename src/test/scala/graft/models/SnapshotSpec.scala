@@ -1,10 +1,10 @@
 package graft.models
 
-import graft.TestSpark
+import graft.{TempDirs, TestSpark}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class SnapshotSpec extends AnyFunSuite {
+class SnapshotSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -47,8 +47,7 @@ class SnapshotSpec extends AnyFunSuite {
   }
 
   test("incremental materialization merges on unique key across runs") {
-    val wh = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "inc").toString
+    val wh = tempDir("inc").toString
     def model(rows: Seq[(Long, String)]): Model =
       Model("inc_t", Nil, Materialization.Incremental(Seq("k")),
         s => { import s.implicits._; rows.toDF("k", "v") })

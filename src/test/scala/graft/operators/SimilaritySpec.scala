@@ -760,37 +760,84 @@ class SimilaritySpec extends AnyFunSuite {
     assert(plan.contains("ObjectHashAggregate"), plan)
   }
 
-  test("mmrRerank equals the driver greedy replay (pool, pairwise sims, unrolled picks)") {
-    val poolK = 8; val selectK = 4; val lambda = 0.75
-    val got = Similarity.mmrRerank(asQ(emb.filter($"vec_id" < 10)), asC(emb),
-        poolK, selectK, lambda)
-      .collect()
-      .groupBy(_.getLong(0))
-      .map { case (q, rs) =>
-        q -> rs.sortBy(_.getInt(1)).map(_.getLong(2)).toSeq }
-    val vecs = emb.collect().map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
+  /** Driver replay of the MMR greedy over (id, vector) rows: the pool is
+    * each query's top-poolK by (rel desc, id asc), then picks maximize
+    * λ·rel − (1−λ)·maxSim. Doubles compare as Spark's SQL ordering does
+    * (`SQLOrderingUtil.compareDoubles`: 0.0 = −0.0, NaN largest), ties to
+    * the lower id. Returns qid → [(cid, rel)] in pick order.
+    */
+  private def mmrReplay(vecs: Seq[(Long, Array[Float])], qids: Seq[Long],
+      poolK: Int, selectK: Int, lambda: Double): Map[Long, Seq[(Long, Double)]] = {
+    import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
     def cos(x: Array[Float], y: Array[Float]): Double = {
       var d = 0.0; var nx = 0.0; var ny = 0.0
       for (i <- x.indices) { val a = x(i).toDouble; val b = y(i).toDouble; d += a*b; nx += a*a; ny += b*b }
       val den = math.sqrt(nx) * math.sqrt(ny); if (den == 0) 0 else d / den
     }
-    val byId = vecs.toMap
-    for ((q, qv) <- vecs if q < 10) {
-      val pool = vecs.filter(_._1 != q)
-        .map { case (c, cv) => (c, cos(qv, cv)) }
-        .sortBy { case (c, s) => (-s, c) }.take(poolK)
-      val selected = scala.collection.mutable.ArrayBuffer.empty[Long]
-      selected += pool.head._1 // first pick: pure relevance, tie → lower id
-      while (selected.size < selectK) {
-        val next = pool.filterNot(p => selected.contains(p._1))
-          .map { case (c, rel) =>
-            val maxSim = selected.map(s => cos(byId(c), byId(s))).max
-            (c, lambda * rel - (1.0 - lambda) * maxSim)
-          }
-          .minBy { case (c, m) => (-m, c) }._1
-        selected += next
-      }
-      assert(got(q) == selected.toSeq, s"query $q: got ${got(q)} want $selected")
+    // (score desc, id asc) as one total order
+    val byScore: Ordering[(Long, Double)] = (a, b) => {
+      val c = compareDoubles(b._2, a._2); if (c != 0) c else a._1.compare(b._1)
     }
+    val byId = vecs.toMap
+    qids.map { q =>
+      val pool = vecs.filter(_._1 != q).map { case (c, cv) => (c, cos(byId(q), cv)) }
+        .sorted(byScore).take(poolK)
+      val rel = pool.toMap
+      val selected = scala.collection.mutable.ArrayBuffer(pool.head._1)
+      while (selected.size < math.min(selectK, pool.size)) {
+        selected += pool.filterNot(p => selected.contains(p._1))
+          .map { case (c, r) =>
+            val maxSim = selected.map(s => cos(byId(c), byId(s)))
+              .reduce((a, b) => if (compareDoubles(b, a) > 0) b else a)
+            (c, lambda * r - (1.0 - lambda) * maxSim)
+          }
+          .min(byScore)._1
+      }
+      q -> selected.map(c => (c, rel(c))).toSeq
+    }.toMap
+  }
+
+  private def mmrGot(df: DataFrame, qids: Seq[Long], poolK: Int, selectK: Int,
+      lambda: Double): Map[Long, Seq[(Long, Double)]] = {
+    val rows = Similarity.mmrRerank(asQ(df.filter($"vec_id".isin(qids: _*))), asC(df),
+      poolK, selectK, lambda).collect()
+    // the plan orders by (query_id, rank) and ranks are 1..n per query
+    assert(rows.map(r => (r.getLong(0), r.getInt(1))).toSeq ==
+      rows.groupBy(_.getLong(0)).toSeq.sortBy(_._1)
+        .flatMap { case (q, rs) => rs.indices.map(i => (q, i + 1)) })
+    rows.groupBy(_.getLong(0)).map { case (q, rs) =>
+      q -> rs.map(r => (r.getLong(2), r.getDouble(3))).toSeq }
+  }
+
+  test("mmrRerank equals the driver greedy replay (pool, pairwise sims, unrolled picks)") {
+    val vecs = emb.collect().map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toSeq
+    val qids = vecs.map(_._1).filter(_ < 10)
+    assert(mmrGot(emb, qids, 8, 4, 0.75) == mmrReplay(vecs, qids, 8, 4, 0.75))
+
+    def check(rows: Seq[(Long, Seq[Float])], qids: Seq[Long], poolK: Int, selectK: Int,
+        lambda: Double): Map[Long, Seq[(Long, Double)]] = {
+      val got = mmrGot(rows.toDF("vec_id", "embedding"), qids, poolK, selectK, lambda)
+      assert(got == mmrReplay(rows.map { case (i, v) => (i, v.toArray) }, qids,
+        poolK, selectK, lambda))
+      got
+    }
+    // exact ties: 11/12 and 13/14 share vectors and all four have the same
+    // rel, so steps 1-3 each face an exact tie and take the lower id
+    val dups = check(Seq(0L -> Seq(1f, 0f, 0f), 12L -> Seq(1f, 1f, 0f),
+      11L -> Seq(1f, 1f, 0f), 14L -> Seq(1f, 0f, 1f), 13L -> Seq(1f, 0f, 1f),
+      15L -> Seq(0f, 1f, 1f)), Seq(0L), 6, 5, 0.75)
+    assert(dups(0L).map(_._1) == Seq(11L, 13L, 12L, 14L, 15L), dups)
+    // 0.0 vs −0.0: with λ = 0, 0·rel − 1·maxSim is −0.0 for id 1 (rel < 0)
+    // and 0.0 for id 2 (rel > 0), both orthogonal to the first pick 3.
+    // SQL ordering ties them, so the lower id wins; java.lang.Double.compare
+    // would have picked 2.
+    val signed = check(Seq(0L -> Seq(1f, 0f, 2f), 3L -> Seq(0f, 0f, 1f),
+      2L -> Seq(1f, 0f, 0f), 1L -> Seq(-1f, 0f, 0f)), Seq(0L), 3, 3, 0.0)
+    assert(signed(0L).map(_._1) == Seq(3L, 1L, 2L), signed)
+    // a pool smaller than selectK: every pool member, ranked
+    val few = check(Seq(0L -> Seq(1f, 0f, 0f), 1L -> Seq(1f, 1f, 0f),
+      2L -> Seq(0f, 1f, 0f), 3L -> Seq(1f, 0f, 1f), 9L -> Seq(0f, 0f, 1f)),
+      Seq(0L, 9L), 8, 6, 0.75)
+    assert(few.values.map(_.size).toSet == Set(4), few)
   }
 }

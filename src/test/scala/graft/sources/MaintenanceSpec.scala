@@ -2,16 +2,15 @@ package graft.sources
 
 import java.nio.file.{Files, Paths}
 
-import graft.TestSpark
+import graft.{TempDirs, TestSpark}
 import org.scalatest.funsuite.AnyFunSuite
 
-class MaintenanceSpec extends AnyFunSuite {
+class MaintenanceSpec extends AnyFunSuite with TempDirs {
   private val spark = TestSpark.spark
   import spark.implicits._
 
   test("compactParquet merges fragmented files, preserves rows, swaps atomically") {
-    val dir = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "compact").resolve("t").toString
+    val dir = tempDir("compact").resolve("t").toString
     val df = (1L to 5000L).toDF("id")
     df.repartition(20).write.parquet(dir)
     val stats = Maintenance.compactParquet(spark, dir, targetBytes = 512L * 1024 * 1024)
@@ -26,8 +25,7 @@ class MaintenanceSpec extends AnyFunSuite {
   }
 
   test("compactParquet preserves a Hive partition layout") {
-    val dir = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "compactp").resolve("t").toString
+    val dir = tempDir("compactp").resolve("t").toString
     val df = (1L to 1000L).map(i => (i, (i % 3).toString)).toDF("id", "p")
     df.repartition(8).write.partitionBy("p").parquet(dir)
     Maintenance.compactParquet(spark, dir, targetBytes = 512L * 1024 * 1024)
@@ -43,8 +41,7 @@ class MaintenanceSpec extends AnyFunSuite {
   }
 
   test("vacuumOrphans deletes only unreferenced files and restores listing == manifest") {
-    val dir = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "vacuum").resolve("t").toString
+    val dir = tempDir("vacuum").resolve("t").toString
     (1L to 1000L).toDF("id").repartition(3).write.parquet(dir)
     val manifest = Maintenance.listDataFiles(dir)
     assert(manifest.size == 3)
@@ -61,8 +58,7 @@ class MaintenanceSpec extends AnyFunSuite {
   }
 
   test("vacuumOrphans refuses a manifest referencing files absent on disk") {
-    val dir = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "vacuumm").resolve("t").toString
+    val dir = tempDir("vacuumm").resolve("t").toString
     (1L to 10L).toDF("id").repartition(1).write.parquet(dir)
     val manifest = Maintenance.listDataFiles(dir) :+ "part-lost.parquet"
     val e = intercept[IllegalArgumentException] {
@@ -75,8 +71,7 @@ class MaintenanceSpec extends AnyFunSuite {
 
   test("time travel: versioned commits, as-of reads, vacuum interplay") {
     import org.apache.spark.sql.functions.sum
-    val dir = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "ttravel").resolve("t").toString
+    val dir = tempDir("ttravel").resolve("t").toString
     (1L to 100L).toDF("id").repartition(2).write.parquet(dir)
     val c1 = Maintenance.commitVersion(dir, 100L * 101 / 2)
     assert(c1.version == 1 && c1.files.size == 2)

@@ -1,5 +1,6 @@
 package graft.dq
 
+import graft.Concurrently
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -74,12 +75,11 @@ object DqEngine {
     !ok
   }
 
-  private def rate(failed: Column, total: Column): Column =
-    when(total === 0, 0.0).otherwise(failed.cast(DoubleType) / total)
-
   /** Run every configured check against `df`; ONE scan for all row-local
     * rules + one shuffle per uniqueness key set + one job per non-fusable
-    * custom rule. `testDate` is the reference's `fecha` run parameter.
+    * custom rule or full-SELECT rule, all at once. Results come back in
+    * config category order. `testDate` is the reference's `fecha` run
+    * parameter.
     */
   def run(spark: SparkSession, df0: DataFrame, cfg: DqConfig, testDate: String): Dataset[DqResult] = {
     import spark.implicits._
@@ -125,78 +125,76 @@ object DqEngine {
     }
 
     val rowRules = completeness ++ format ++ range ++ custom
-    val needTotal = rowRules.nonEmpty || cfg.tests.uniqueness.nonEmpty ||
-      unfusableCustom.nonEmpty || cfg.tests.customSelect.nonEmpty
-    // ONE scan computes the total AND every fused rule counter — also when
-    // only uniqueness/custom rules need the denominator (no second
-    // df.count() pass).
-    val (fusedResults: Seq[DqResult], total: Long) =
-      if (!needTotal) (Nil, 0L)
-      else {
-        val aggCols = count(lit(1)).as("__total") +:
-          rowRules.zipWithIndex.map { case (r, i) =>
-            sum(when(r.failCond, 1L).otherwise(0L)).as(s"__f$i")
-          }
-        val row = df.agg(aggCols.head, aggCols.tail: _*).collect()(0)
-        val t = row.getLong(0)
-        val rs = rowRules.zipWithIndex.map { case (r, i) =>
-          val failed = if (row.isNullAt(i + 1)) 0L else row.getLong(i + 1)
-          r.meta.copy(
-            status = if (failed == r.expected) "PASS" else "FAIL",
-            failed_records = failed,
-            total_records = t,
-            failure_rate = if (t == 0) 0.0 else failed.toDouble / t)
-        }
-        (rs, t)
-      }
 
-    // ── uniqueness: one shuffle per key combination ───────────────────
-    val uniqueResults = cfg.tests.uniqueness.map { keys =>
-      val dupGroups = df.groupBy(keys.map(col): _*).count()
-        .filter(col("count") > 1).count()
-      DqResult(testDate, s"uniqueness_${keys.mkString("_")}", "uniqueness",
-        if (dupGroups == 0) "PASS" else "FAIL",
-        dupGroups, total,
-        if (total == 0) 0.0 else dupGroups.toDouble / total,
-        key_columns = Some(keys.mkString(",")))
+    // ── every other rule is one count job ─────────────────────────────
+    final case class JobRule(meta: DqResult, failed: () => Long, expected: Long = 0L)
+    // uniqueness: one shuffle per key combination
+    val uniqueness = cfg.tests.uniqueness.map { keys =>
+      JobRule(
+        DqResult(testDate, s"uniqueness_${keys.mkString("_")}", "uniqueness", "", 0, 0, 0.0,
+          key_columns = Some(keys.mkString(","))),
+        () => df.groupBy(keys.map(col): _*).count().filter(col("count") > 1).count())
     }
-
-    // ── non-row-local custom SQL: reference-faithful spark.sql ────────
-    // The input slice registers under a per-run unique view name (Verify
-    // runs queries concurrently in one session — a fixed name would
-    // cross-contaminate runs); the reference's `temp_table` contract
-    // (dq_sql_notes.md:228) is preserved by aliasing inside the statement.
-    val customResults =
-      if (unfusableCustom.isEmpty) Nil
-      else {
-        val view = s"graft_dq_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-        df.createOrReplaceTempView(view)
-        try unfusableCustom.map { t =>
-          val failed = spark
-            .sql(s"SELECT COUNT(*) AS failed_count FROM $view temp_table WHERE NOT (${t.sqlCondition})")
-            .collect()(0).getLong(0)
-          DqResult(testDate, s"custom_${t.testName}", "custom",
-            if (failed == t.expectedResult) "PASS" else "FAIL",
-            failed, total,
-            if (total == 0) 0.0 else failed.toDouble / total,
-            sql_condition = Some(t.sqlCondition))
-        } finally spark.catalog.dropTempView(view)
-      }
-
-    // ── full-SELECT rules: the reference's flagship shape — a complete
-    //    statement (joins/NOT EXISTS against other registered tables)
-    //    whose result rows ARE the failures (dq_sql_notes.md:17-29,36-44).
-    val selectResults = cfg.tests.customSelect.map { t =>
+    // non-row-local custom SQL: reference-faithful spark.sql. The input
+    // slice registers under a per-run unique view name (Verify runs queries
+    // concurrently in one session — a fixed name would cross-contaminate
+    // runs); the reference's `temp_table` contract (dq_sql_notes.md:228) is
+    // preserved by aliasing inside the statement.
+    val view = s"graft_dq_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+    val unfused = unfusableCustom.map { t =>
+      JobRule(
+        DqResult(testDate, s"custom_${t.testName}", "custom", "", 0, 0, 0.0,
+          sql_condition = Some(t.sqlCondition)),
+        () => spark
+          .sql(s"SELECT COUNT(*) AS failed_count FROM $view temp_table WHERE NOT (${t.sqlCondition})")
+          .collect()(0).getLong(0),
+        t.expectedResult)
+    }
+    // full-SELECT rules: the reference's flagship shape — a complete
+    // statement (joins/NOT EXISTS against other registered tables) whose
+    // result rows ARE the failures (dq_sql_notes.md:17-29,36-44).
+    val select = cfg.tests.customSelect.map { t =>
       Validators.validateCustomSelect(t.sql)
-      val failed = spark.sql(t.sql).count()
-      DqResult(testDate, s"custom_${t.testName}", "custom_select",
-        if (failed == t.expectedResult) "PASS" else "FAIL",
-        failed, total,
-        if (total == 0) 0.0 else failed.toDouble / total,
-        sql_condition = Some(t.sql))
+      JobRule(
+        DqResult(testDate, s"custom_${t.testName}", "custom_select", "", 0, 0, 0.0,
+          sql_condition = Some(t.sql)),
+        () => spark.sql(t.sql).count(),
+        t.expectedResult)
     }
+    val jobRules = uniqueness ++ unfused ++ select
 
-    spark.createDataset(fusedResults ++ uniqueResults ++ customResults ++ selectResults)
+    // ONE scan computes the total AND every fused rule counter — also when
+    // only job rules need the denominator (no second df.count() pass). It
+    // and every job rule's count run at once (at most cores-many).
+    val fused: () => Seq[Long] = () => {
+      val aggCols = count(lit(1)).as("__total") +:
+        rowRules.zipWithIndex.map { case (r, i) =>
+          sum(when(r.failCond, 1L).otherwise(0L)).as(s"__f$i")
+        }
+      val row = df.agg(aggCols.head, aggCols.tail: _*).collect()(0)
+      (0 until row.length).map(i => if (row.isNullAt(i)) 0L else row.getLong(i))
+    }
+    val counts =
+      if (rowRules.isEmpty && jobRules.isEmpty) Nil
+      else {
+        if (unfused.nonEmpty) df.createOrReplaceTempView(view)
+        try Concurrently(spark)(fused +: jobRules.map(r => () => Seq(r.failed())))
+        finally if (unfused.nonEmpty) spark.catalog.dropTempView(view)
+      }
+
+    // ── results in config category order ──────────────────────────────
+    val (total, failed) = counts match {
+      case fusedRow +: jobs => (fusedRow.head, fusedRow.tail ++ jobs.map(_.head))
+      case _                => (0L, Nil)
+    }
+    val rules = rowRules.map(r => (r.meta, r.expected)) ++ jobRules.map(r => (r.meta, r.expected))
+    spark.createDataset(rules.zip(failed).map { case ((meta, expected), f) =>
+      meta.copy(
+        status = if (f == expected) "PASS" else "FAIL",
+        failed_records = f,
+        total_records = total,
+        failure_rate = if (total == 0) 0.0 else f.toDouble / total)
+    })
   }
 
   /** Column-expression form of [[classify]] — classification stays in the

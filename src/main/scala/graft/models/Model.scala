@@ -1,5 +1,6 @@
 package graft.models
 
+import graft.Concurrently
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** A transformation model: the engine's equivalent of a dbt model
@@ -89,6 +90,12 @@ object ModelDag {
     * given — the CTAS full-rebuild semantics of dbt_project.yml:38-42).
     * Returns the materialized frames by name.
     *
+    * Like dbt's `threads`, a model starts as soon as every one of its
+    * `deps` has registered its view, so independent materializations run
+    * at the same time ([[graft.Concurrently]], at most cores-many). If a
+    * model fails, its dependents never build, the models already running
+    * finish, and the model's own exception is rethrown.
+    *
     * `catalogViews = true` is the exact dbt-default parity mode
     * (dbt_project.yml:31-35): Table models register as catalog tables
     * (`saveAsTable`, external at the warehouse path) and View models with
@@ -102,7 +109,8 @@ object ModelDag {
       models: Seq[Model],
       warehouseDir: Option[String] = None,
       catalogViews: Boolean = false): Map[String, DataFrame] = {
-    val built = topoSort(models).map { m =>
+    val byName = topoSort(models).map(m => m.name -> m).toMap
+    def node(m: Model): DataFrame = {
       if (catalogViews) spark.catalog.dropTempView(m.name) // unshadow catalog names
       val df = m.build(spark)
       val materialized = (m.materialization, warehouseDir) match {
@@ -207,17 +215,21 @@ object ModelDag {
         case _ =>
           materialized.createOrReplaceTempView(m.name)
       }
-      m -> spark.table(m.name)
+      spark.table(m.name)
     }
-    // ephemeral views vanish with the run: downstream frames already
-    // carry the resolved subtrees, so dropping the name now makes the
-    // model non-addressable afterward (dbt: you cannot SELECT an
-    // ephemeral model)
-    models.filter(_.materialization == Materialization.Ephemeral)
-      .foreach(m => spark.catalog.dropTempView(m.name))
-    built.collect {
-      case (m, df) if m.materialization != Materialization.Ephemeral =>
-        m.name -> df
+    val names = byName.keys.toSeq.sorted
+    val built =
+      try Concurrently.dag(spark, names)(byName(_).deps)(n => node(byName(n)))
+      finally {
+        // ephemeral views vanish with the run, once every model is done:
+        // downstream frames already carry the resolved subtrees, so
+        // dropping the name makes the model non-addressable afterward
+        // (dbt: you cannot SELECT an ephemeral model)
+        models.filter(_.materialization == Materialization.Ephemeral)
+          .foreach(m => spark.catalog.dropTempView(m.name))
+      }
+    names.zip(built).filter { case (n, _) =>
+      byName(n).materialization != Materialization.Ephemeral
     }.toMap
   }
 }
@@ -239,16 +251,24 @@ object SchemaTests {
   final case class TestResult(
       model_name: String, column_name: String, test_name: String, status: String)
 
+  private val kinds: Map[String, (DataFrame, String) => DataFrame] =
+    Map("unique" -> (unique _), "not_null" -> (notNull _))
+
+  /** Runs every test at once (at most cores-many, as dbt does with its
+    * `threads`); results in input order. Every test kind is checked before
+    * any job starts.
+    */
   def runAll(
       spark: SparkSession,
-      tests: Seq[(String, String, String)]): Seq[TestResult] =
-    tests.map { case (model, column, kind) =>
-      val df = spark.table(model)
-      val violations = kind match {
-        case "unique"   => unique(df, column).count()
-        case "not_null" => notNull(df, column).count()
-        case other      => throw new IllegalArgumentException(s"unknown test $other")
-      }
-      TestResult(model, column, kind, if (violations == 0) "PASS" else "FAIL")
+      tests: Seq[(String, String, String)]): Seq[TestResult] = {
+    tests.foreach { case (_, _, kind) =>
+      if (!kinds.contains(kind)) throw new IllegalArgumentException(s"unknown test $kind")
     }
+    val violations = Concurrently(spark)(tests.map { case (model, column, kind) =>
+      () => kinds(kind)(spark.table(model), column).count()
+    })
+    tests.zip(violations).map { case ((model, column, kind), n) =>
+      TestResult(model, column, kind, if (n == 0) "PASS" else "FAIL")
+    }
+  }
 }

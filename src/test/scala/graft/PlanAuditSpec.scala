@@ -20,10 +20,36 @@ class PlanAuditSpec extends AnyFunSuite {
   private val built =
     scala.collection.mutable.HashMap.empty[String, org.apache.spark.sql.DataFrame]
   private def builtQuery(name: String): org.apache.spark.sql.DataFrame =
-    built.getOrElseUpdate(name, SparkEntry.queries(name)(spark, sfDir))
+    built.getOrElseUpdate(name, { auditing = name; SparkEntry.queries(name)(spark, sfDir) })
 
-  private def plan(name: String): String =
-    builtQuery(name).queryExecution.executedPlan.toString
+  private def plan(name: String): String = {
+    val df = builtQuery(name)
+    auditing = name
+    df.queryExecution.executedPlan.toString
+  }
+
+  // Spark drops a hint it cannot apply (a broadcast hint on the preserved
+  // side of an outer join, an unknown hint name) with a warning through
+  // HintErrorLogger and plans without it. Every build and plan of this
+  // suite's single pass is watched, tagged with the query being audited.
+  @volatile private var auditing = ""
+  private val hintErrors = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  locally {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{Configurator, Property}
+    val name = "org.apache.spark.sql.catalyst.analysis.HintErrorLogger"
+    Configurator.setLevel(name, Level.WARN)
+    val appender = new AbstractAppender("graft-hint-errors", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = {
+        hintErrors.add(s"$auditing: ${e.getMessage.getFormattedMessage}"); ()
+      }
+    }
+    appender.start()
+    LogManager.getLogger(name).asInstanceOf[Logger].addAppender(appender)
+  }
 
   test("date filter is pushed down to the parquet scan") {
     val p = plan("filter_partition_date")
@@ -848,6 +874,12 @@ class PlanAuditSpec extends AnyFunSuite {
       if (cart || bnlj) Some(s"$name cartesian=$cart unexpectedBnlj=$bnlj") else None
     }
     assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("no registered query carries a hint Spark ignores") {
+    SparkEntry.queries.keys.toSeq.sorted.foreach(plan)
+    assert(hintErrors.isEmpty, "ignored hints (remove them):\n" +
+      hintErrors.toArray.distinct.mkString("\n"))
   }
 
   // The SCALING.md stress set: plans must keep their shape when the data

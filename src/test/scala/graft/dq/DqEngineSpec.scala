@@ -155,4 +155,39 @@ class DqEngineSpec extends AnyFunSuite {
     assert(DqEngine.classify(res("format", Some("x"), 0.10, "FAIL"), th) == "CRITICAL")
     assert(DqEngine.classify(res("completeness", Some("x"), 0.10, "FAIL"), th) == "CRITICAL")
   }
+
+  test("all rule kinds come back in config category order; the run's temp view is dropped") {
+    def dqViews = spark.catalog.listTables().collect().map(_.name).filter(_.startsWith("graft_dq_"))
+    Seq(3, 4).toDF("id").createOrReplaceTempView("dq_spec_order_ref")
+    val df = Seq((1, "a", 10.0), (1, "b", -1.0), (2, "a", 5.0), (3, "a", 7.0), (4, null, 1.0))
+      .toDF("id", "s", "v")
+    val tests = DqTests(
+      completeness = Seq("s"),
+      range = Seq("v" -> RangeBounds(Some(0.0), None)),
+      uniqueness = Seq(Seq("id"), Seq("s")),
+      customSql = Seq(
+        CustomSqlTest("v_small", "temp_table.v < 8"),
+        CustomSqlTest("id_low", "temp_table.id <= 3", expectedResult = 1)),
+      customSelect = Seq(CustomSelectTest("ref_hit",
+        "SELECT r.id FROM dq_spec_order_ref r WHERE r.id IN (1, 3)")))
+    val rows = DqEngine.run(spark, df, DqConfig(tableName = "t", tests = tests), "d").collect()
+    assert(rows.map(r => (r.test_name, r.test_category, r.failed_records, r.status)).toSeq == Seq(
+      ("completeness_s", "completeness", 1L, "FAIL"),
+      ("range_v", "range", 1L, "FAIL"),
+      ("uniqueness_id", "uniqueness", 1L, "FAIL"), // id 1 twice
+      ("uniqueness_s", "uniqueness", 1L, "FAIL"), // 'a' three times; null once
+      ("custom_v_small", "custom", 1L, "FAIL"), // 10.0
+      ("custom_id_low", "custom", 1L, "PASS"), // id 4, expected 1
+      ("custom_ref_hit", "custom_select", 1L, "FAIL"))) // id 3
+    assert(rows.forall(_.total_records == 5L))
+    assert(dqViews.isEmpty, dqViews.mkString(","))
+    // a statement that throws still drops the view
+    intercept[Exception] {
+      DqEngine.run(spark, df, DqConfig(tableName = "t", tests = DqTests(
+        uniqueness = Seq(Seq("id")),
+        customSql = Seq(CustomSqlTest("boom", "temp_table.id / 0 > 1")))), "d").collect()
+    }
+    assert(dqViews.isEmpty, dqViews.mkString(","))
+    spark.catalog.dropTempView("dq_spec_order_ref")
+  }
 }

@@ -173,4 +173,75 @@ class ModelDagSpec extends AnyFunSuite with TempDirs {
     spark.catalog.dropTempView("eph_base2")
     spark.catalog.dropTempView("eph_top2")
   }
+
+  test("diamond DAG: independent models build at once, each after its deps' views exist") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    val dir = tempDir("whdiamond").toString
+    // each side waits for the other to start, so the run finishes only if
+    // both independent models are in flight at the same time
+    val bothStarted = new CountDownLatch(2)
+    def side(name: String, from: Long) = Model(name, Nil, Materialization.Table, s => {
+      bothStarted.countDown()
+      assert(bothStarted.await(30, TimeUnit.SECONDS), s"$name built alone")
+      s.range(from, from + 5).toDF("id")
+    })
+    val seenDeps = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val top = Model("dia_top", Seq("dia_left", "dia_right"), Materialization.Table, s => {
+      seenDeps.set(s.catalog.tableExists("dia_left") && s.catalog.tableExists("dia_right"))
+      s.table("dia_left").union(s.table("dia_right"))
+    })
+    val out = ModelDag.run(spark, Seq(top, side("dia_left", 0), side("dia_right", 5)),
+      warehouseDir = Some(dir))
+    assert(seenDeps.get(), "dia_top built before its deps registered their views")
+    assert(out.keySet == Set("dia_left", "dia_right", "dia_top"))
+    assert(out("dia_left").collect().map(_.getLong(0)).sorted.toSeq == (0L until 5L))
+    assert(out("dia_right").collect().map(_.getLong(0)).sorted.toSeq == (5L until 10L))
+    assert(out("dia_top").collect().map(_.getLong(0)).sorted.toSeq == (0L until 10L))
+    assert(spark.read.parquet(s"$dir/dia_top").count() == 10)
+    Seq("dia_left", "dia_right", "dia_top").foreach(spark.catalog.dropTempView)
+  }
+
+  test("a failing model rethrows its own exception after its running sibling finishes; " +
+      "its dependents never build") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicBoolean
+    final class ModelFailed extends RuntimeException("model failed")
+    val siblingStarted = new CountDownLatch(1)
+    val siblingDone = new AtomicBoolean(false)
+    val topBuilt = new AtomicBoolean(false)
+    val bad = Model("fail_bad", Nil, Materialization.View, _ => {
+      assert(siblingStarted.await(30, TimeUnit.SECONDS), "sibling never started")
+      throw new ModelFailed
+    })
+    val slow = Model("fail_slow", Nil, Materialization.View, s => {
+      siblingStarted.countDown()
+      Thread.sleep(300)
+      siblingDone.set(true)
+      s.range(3).toDF("id")
+    })
+    val top = Model("fail_top", Seq("fail_bad", "fail_slow"), Materialization.View, s => {
+      topBuilt.set(true)
+      s.table("fail_slow")
+    })
+    intercept[ModelFailed](ModelDag.run(spark, Seq(bad, slow, top)))
+    assert(siblingDone.get(), "run returned while a sibling model was still building")
+    assert(!topBuilt.get(), "a dependent of the failed model was built")
+    spark.catalog.dropTempView("fail_slow")
+  }
+
+  test("schema tests reject an unknown test kind before any job runs") {
+    import org.apache.spark.sql.functions.{col, udf}
+    val rowsRead = spark.sparkContext.longAccumulator("schema-test rows read")
+    val touch = udf((x: Long) => { rowsRead.add(1); x }).asNondeterministic()
+    spark.range(5).select(touch(col("id")).as("id")).createOrReplaceTempView("ff_model")
+    val e = intercept[IllegalArgumentException] {
+      SchemaTests.runAll(spark, Seq(("ff_model", "id", "unique"), ("ff_model", "id", "bogus")))
+    }
+    assert(e.getMessage.contains("bogus"), e.getMessage)
+    assert(rowsRead.value == 0L, s"a test job ran before the kind check (${rowsRead.value} rows)")
+    assert(SchemaTests.runAll(spark, Seq(("ff_model", "id", "unique"))).map(_.status) ==
+      Seq("PASS"))
+    assert(rowsRead.value > 0L)
+    spark.catalog.dropTempView("ff_model")
+  }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark: runs every registered query on
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line (driver contract).
   *
@@ -52,24 +50,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // Shuffle FILES (unlike RDD blocks, which the per-pass release
-      // sweep frees) are only deleted when ContextCleaner sees the
-      // shuffle dependency get GC'd — across a heavy multi-query run at
-      // big sf they accumulate until the disk fills (the sf10 ktruss
-      // measurement died on SPILL_OUT_OF_MEMORY/ENOSPC with ~70 GB of
-      // dead shuffle files from the six previous queries still on
-      // disk). The 2-min periodic driver GC bounds that accumulation;
-      // at sf0.1 suite pace it fires ~4 times (~1 s total).
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession()
 
     /** Release every persisted RDD block after a pass. The iterative
       * queries (graph family, dedup_clusters, MMR) barrier 3-6

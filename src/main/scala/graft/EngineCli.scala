@@ -25,15 +25,7 @@ object EngineCli {
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: EngineCli <run|test|dq|profile|clean> [args]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession()
     try execute(spark, args.head, args.tail.toIndexedSeq)
     finally spark.stop()
   }

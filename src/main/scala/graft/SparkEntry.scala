@@ -35,4 +35,31 @@ object SparkEntry {
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     allDefs.flatMap(d => d.oracle.map(d.name -> _)).toMap
+
+  /** The one local session every entry point (Bench, Verify, EngineCli,
+    * the test suite) runs on: `local[cpus]` with one shuffle partition per
+    * thread, UTC, nanosecond parquet timestamps read as longs, no UI,
+    * WARN logging. `cpus` defaults to `SPARK_GRAFT_CPUS`, else 4.
+    */
+  def localSession(
+      cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+      // Shuffle FILES (unlike RDD blocks, which Bench's per-pass release
+      // sweep frees) are only deleted when ContextCleaner sees the
+      // shuffle dependency get GC'd — across a heavy multi-query run at
+      // big sf they accumulate until the disk fills (the sf10 ktruss
+      // measurement died on SPILL_OUT_OF_MEMORY/ENOSPC with ~70 GB of
+      // dead shuffle files from the six previous queries still on
+      // disk). The 2-min periodic driver GC bounds that accumulation;
+      // at sf0.1 suite pace it fires ~4 times (~1 s total).
+      .config("spark.cleaner.periodicGC.interval", "2min")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

@@ -197,8 +197,11 @@ object DqEngine {
     })
   }
 
-  /** Column-expression form of [[classify]] — classification stays in the
-    * plan (no driver round-trip) when gating a whole results relation.
+  /** Threshold/severity gating (example_templates.yaml:30,45,51-54):
+    * classifies each row of a results relation for alerting, in the plan
+    * (no driver round-trip). Critical columns and completeness use the
+    * configured thresholds; failure rates are in [0,1] while thresholds
+    * are percentages.
     */
   def classificationColumn(th: QualityThresholds): Column = {
     val pct = col("failure_rate") * 100.0
@@ -211,20 +214,5 @@ object DqEngine {
         (lit(100.0) - pct) < th.completenessThreshold, "CRITICAL")
       .when(pct > th.maxFailureRate, "CRITICAL")
       .otherwise("WARNING")
-  }
-
-  /** Threshold/severity gating (example_templates.yaml:30,45,51-54):
-    * classify each result row for alerting. Critical columns and
-    * completeness use the configured thresholds; failure rates are in
-    * [0,1] while thresholds are percentages.
-    */
-  def classify(r: DqResult, th: QualityThresholds): String = {
-    val pct = r.failure_rate * 100.0
-    val isCritical = r.column_name.exists(th.criticalColumns.contains)
-    if (r.status == "PASS") "OK"
-    else if (isCritical) "CRITICAL"
-    else if (r.test_category == "completeness" && (100.0 - pct) < th.completenessThreshold) "CRITICAL"
-    else if (pct > th.maxFailureRate) "CRITICAL"
-    else "WARNING"
   }
 }

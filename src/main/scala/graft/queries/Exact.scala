@@ -32,17 +32,12 @@ object Exact {
   // ── BigQuery NUMERIC-faithful money mode (SURVEY §1.2) ────────────────
   // The engine's default money type is DoubleType because the driver
   // parquet stores doubles; BigQuery NUMERIC is exactly DecimalType(38,9).
-  // MoneyMode gates which arithmetic a query runs — set the
-  // GRAFT_MONEY_MODE=numeric env (or pass NumericMode explicitly) for
-  // decimal-exact money columns end to end, including the OUTPUT type
-  // (dsum above is decimal-exact internally but returns DOUBLE).
+  // MoneyMode gates which arithmetic a query runs — a query passes
+  // NumericMode for decimal-exact money columns end to end, including the
+  // OUTPUT type (dsum above is decimal-exact internally but returns DOUBLE).
   sealed trait MoneyMode
   case object DoubleMode extends MoneyMode
   case object NumericMode extends MoneyMode
-  def moneyModeFromEnv: MoneyMode =
-    if (sys.env.get("GRAFT_MONEY_MODE").exists(_.equalsIgnoreCase("numeric")))
-      NumericMode
-    else DoubleMode
 
   /** A money column in the configured representation. */
   def money(c: Column, mode: MoneyMode): Column = mode match {

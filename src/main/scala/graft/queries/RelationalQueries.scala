@@ -41,6 +41,70 @@ object RelationalQueries extends QueryModule {
       .select(col("a"), explode(slice(col("ps"), col("i") + lit(2),
         size(col("ps")) - col("i") - lit(1))).as("b"))
 
+  // EDGE-ITERATOR k-truss support of an (a, b) edge set (r11 verdict
+  // item 2 — the wedge-join formulation shuffled ~41 M wedge rows per
+  // pass at sf0.1, 16-30 s/run): support(a,b) = |N(a) ∩ N(b)| directly.
+  // Two |E|-row equi joins co-locate each edge with both endpoints'
+  // sorted adjacency arrays; the intersection size is computed MAP-SIDE
+  // — nothing wedge-sized ever crosses an exchange, and the arithmetic
+  // (Σ_e deg(a)+deg(b) element steps, the same total work as the wedge
+  // enumeration) runs at memory speed inside one stage. Skew bound = max
+  // adjacency array (max degree 97 at sf0.1); a 100 TB hub-heavy graph
+  // pairs this with the degree cap of `graph_ktruss_capped`.
+  private def ktrussSupport(ed: DataFrame): DataFrame = {
+    graft.functions.SketchFunctions.register(ed.sparkSession)
+    val adj = ed.select(col("a").as("n"), col("b").as("m"))
+      .union(ed.select(col("b").as("n"), col("a").as("m")))
+      .groupBy(col("n")).agg(sort_array(collect_list(col("m"))).as("nbrs"))
+    // shuffle_hash on the adjacency side of BOTH joins: under the
+    // default sort-merge plan the SECOND join sorts its left input — the
+    // |E|-row edge⋈adjacency intermediate already carrying one endpoint's
+    // full array (~Σdeg² elements wide) — and that sort is the spill that
+    // killed the sf10 measurement (~70 GB scratch, ENOSPC). Hashing the
+    // SMALL side (|V| adjacency rows) instead lets the wide side stream
+    // unsorted: scratch drops to the hash tables (|V|·deg elements per
+    // partition).
+    ed.join(adj.select(col("n").as("a"), col("nbrs").as("na")).hint("shuffle_hash"), "a")
+      .join(adj.select(col("n").as("b"), col("nbrs").as("nb")).hint("shuffle_hash"), "b")
+      .select(col("a"), col("b"),
+        // native two-pointer merge count over the SORTED adjacency arrays
+        // — array_intersect pays a boxed hash set + a materialized
+        // intersection array per edge
+        graft.functions.SketchFunctions
+          .sortedIntersectCount(col("na"), col("nb")).as("sup"))
+  }
+
+  // Two-round k-truss peel at k−2 = 12 with per-round stats (round,
+  // n_edges, min_support, max_support). ONE support pass per level: its
+  // checkpointed result serves both the round's stats and the next peel
+  // (a stats+peel split would run the support pass twice per level).
+  private def ktrussPeelStats(edges: DataFrame): DataFrame = {
+    def stats(sup: DataFrame, round: Long): DataFrame =
+      sup.agg(count(lit(1)).as("n_edges"),
+        min(col("sup")).as("min_support"), max(col("sup")).as("max_support"))
+        .select(lit(round).as("round"), col("n_edges"), col("min_support"),
+          col("max_support"))
+    val sup0 = ktrussSupport(edges).localCheckpoint()
+    val sup1 = ktrussSupport(sup0.filter(col("sup") >= 12L).select(col("a"), col("b")))
+      .localCheckpoint()
+    val sup2 = ktrussSupport(sup1.filter(col("sup") >= 12L).select(col("a"), col("b")))
+      .localCheckpoint()
+    stats(sup0, 0L).unionByName(stats(sup1, 1L))
+      .unionByName(stats(sup2, 2L))
+      .orderBy(col("round"))
+  }
+
+  // Frees exactly the blocks a `localCheckpoint()` pinned: the checkpointed
+  // frame's plan root is the LogicalRDD over the checkpointed RDD. Other
+  // frames' checkpoints, including those of queries running concurrently
+  // on the same session, stay untouched.
+  private[queries] def releaseCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = true)
+      case p => throw new IllegalArgumentException(
+        s"not a checkpointed frame (plan root ${p.nodeName})")
+    }
+
   // One tuned clone per parent session for join_bloom_pruned, not one
   // per build: a fresh SessionState each call re-registers functions and
   // re-infers every parquet footer (the per-session Tables memo starts
@@ -2104,8 +2168,8 @@ object RelationalQueries extends QueryModule {
 
     // BigQuery NUMERIC-faithful money mode (SURVEY §1.2, r2-verdict
     // missing #2): the same money aggregation the engine usually runs in
-    // DOUBLE, computed end-to-end as DECIMAL(38,9) — config-gated via
-    // Exact.MoneyMode / GRAFT_MONEY_MODE. All money inputs carry ≤ 2
+    // DOUBLE, computed end-to-end as DECIMAL(38,9) — selected by passing
+    // Exact.NumericMode. All money inputs carry ≤ 2
     // decimal digits, so the double→NUMERIC cast is lossless.
     // The registered result canonicalizes each decimal to its plain string
     // ('13169277.090000000' in both engines): parquet readers disagree on
@@ -10591,61 +10655,12 @@ object RelationalQueries extends QueryModule {
     //    is data-driven, not a guess. ──────────────────────────────────
     QueryDef("graph_ktruss_peel",
       (s, dir) => {
-        import s.implicits._
         // r16: map-side pair generation (copurchasePairsRaw) replaces
         // the io self-join — one less shuffle feeding the same distinct.
         val e0 = copurchasePairsRaw(s, dir)
           .distinct()
           .localCheckpoint()
-        // EDGE-ITERATOR support (r11 verdict item 2 — the wedge-join
-        // formulation shuffled ~41 M wedge rows per pass at sf0.1,
-        // 16-30 s/run): support(a,b) = |N(a) ∩ N(b)| directly. Two
-        // |E|-row equi joins co-locate each edge with both endpoints'
-        // sorted adjacency arrays; the intersection size is computed
-        // MAP-SIDE — nothing wedge-sized ever crosses an exchange, and
-        // the arithmetic (Σ_e deg(a)+deg(b) element steps, the same
-        // total work as the wedge enumeration) runs at memory speed
-        // inside one stage. Skew bound = max adjacency array (max
-        // degree 97 at sf0.1); a 100 TB hub-heavy graph pairs this
-        // with the degree cap `graph_ktruss_capped` registers below. ────
-        graft.functions.SketchFunctions.register(s)
-        def support(ed: DataFrame): DataFrame = {
-          val adj = ed.select($"a".as("n"), $"b".as("m"))
-            .union(ed.select($"b".as("n"), $"a".as("m")))
-            .groupBy($"n").agg(sort_array(collect_list($"m")).as("nbrs"))
-          // shuffle_hash on the adjacency side of BOTH joins: under the
-          // default sort-merge plan the SECOND join sorts its left input
-          // — the |E|-row edge⋈adjacency intermediate already carrying
-          // one endpoint's full array (~Σdeg² elements wide) — and that
-          // sort is the spill that killed the sf10 measurement (~70 GB
-          // scratch, ENOSPC). Hashing the SMALL side (|V| adjacency
-          // rows) instead lets the wide side stream unsorted: scratch
-          // drops to the hash tables (|V|·deg elements per partition).
-          ed.join(adj.select($"n".as("a"), $"nbrs".as("na")).hint("shuffle_hash"), "a")
-            .join(adj.select($"n".as("b"), $"nbrs".as("nb")).hint("shuffle_hash"), "b")
-            .select($"a", $"b",
-              // native two-pointer merge count over the SORTED adjacency
-              // arrays — array_intersect pays a boxed hash set + a
-              // materialized intersection array per edge
-              graft.functions.SketchFunctions
-                .sortedIntersectCount($"na", $"nb").as("sup"))
-        }
-        // ONE support pass per level: its checkpointed result serves
-        // both the round's stats and the next peel (the naive
-        // stats+peel split would run the support pass twice per level)
-        def stats(sup: DataFrame, r: Long): DataFrame =
-          sup.agg(count(lit(1)).as("n_edges"),
-            min($"sup").as("min_support"), max($"sup").as("max_support"))
-            .select(lit(r).as("round"), $"n_edges", $"min_support",
-              $"max_support")
-        val sup0 = support(e0).localCheckpoint()
-        val sup1 = support(sup0.filter($"sup" >= 12L).select($"a", $"b"))
-          .localCheckpoint()
-        val sup2 = support(sup1.filter($"sup" >= 12L).select($"a", $"b"))
-          .localCheckpoint()
-        stats(sup0, 0L).unionByName(stats(sup1, 1L))
-          .unionByName(stats(sup2, 2L))
-          .orderBy($"round")
+        ktrussPeelStats(e0)
       },
       Some("""WITH io AS MATERIALIZED (
           SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
@@ -10722,49 +10737,25 @@ object RelationalQueries extends QueryModule {
         // re-derived for the degree table and again for the hub
         // anti-joins — and released (blocking) as soon as the capped
         // edge set ec materializes, so nothing but ec stays pinned
-        // during the support pass (the sf10 starvation lesson).
-        val pinnedBefore = s.sparkContext.getPersistentRDDs.keySet
-        val e0 = copurchasePairsRaw(s, dir)
-          .distinct()
-          .localCheckpoint()
-        val e0Ids = s.sparkContext.getPersistentRDDs.keySet -- pinnedBefore
-        val deg = e0.select($"a".as("n")).union(e0.select($"b".as("n")))
-          .groupBy($"n").agg(count(lit(1)).as("deg"))
-        val hubs = deg.filter($"deg" > 60L).select($"n")
-        val ec = e0
-          .join(hubs.select($"n".as("a")), Seq("a"), "left_anti")
-          .join(hubs.select($"n".as("b")), Seq("b"), "left_anti")
-          .select($"a", $"b")
-          .localCheckpoint()
-        s.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-          if (e0Ids.contains(id)) rdd.unpersist(blocking = true)
+        // during the support pass (the sf10 starvation lesson). The hub
+        // frame is built inside the same block, so no lazy frame over
+        // e0's released blocks outlives it.
+        val ec = {
+          val e0 = copurchasePairsRaw(s, dir)
+            .distinct()
+            .localCheckpoint()
+          val hubs = e0.select($"a".as("n")).union(e0.select($"b".as("n")))
+            .groupBy($"n").agg(count(lit(1)).as("deg"))
+            .filter($"deg" > 60L).select($"n")
+          val capped = e0
+            .join(hubs.select($"n".as("a")), Seq("a"), "left_anti")
+            .join(hubs.select($"n".as("b")), Seq("b"), "left_anti")
+            .select($"a", $"b")
+            .localCheckpoint()
+          releaseCheckpoint(e0)
+          capped
         }
-        graft.functions.SketchFunctions.register(s)
-        def support(ed: DataFrame): DataFrame = {
-          val adj = ed.select($"a".as("n"), $"b".as("m"))
-            .union(ed.select($"b".as("n"), $"a".as("m")))
-            .groupBy($"n").agg(sort_array(collect_list($"m")).as("nbrs"))
-          // shuffle_hash on the adjacency sides — see graph_ktruss_peel:
-          // sorting the array-wide intermediate is the spill at scale
-          ed.join(adj.select($"n".as("a"), $"nbrs".as("na")).hint("shuffle_hash"), "a")
-            .join(adj.select($"n".as("b"), $"nbrs".as("nb")).hint("shuffle_hash"), "b")
-            .select($"a", $"b",
-              graft.functions.SketchFunctions
-                .sortedIntersectCount($"na", $"nb").as("sup"))
-        }
-        def stats(sup: DataFrame, r: Long): DataFrame =
-          sup.agg(count(lit(1)).as("n_edges"),
-            min($"sup").as("min_support"), max($"sup").as("max_support"))
-            .select(lit(r).as("round"), $"n_edges", $"min_support",
-              $"max_support")
-        val sup0 = support(ec).localCheckpoint()
-        val sup1 = support(sup0.filter($"sup" >= 12L).select($"a", $"b"))
-          .localCheckpoint()
-        val sup2 = support(sup1.filter($"sup" >= 12L).select($"a", $"b"))
-          .localCheckpoint()
-        stats(sup0, 0L).unionByName(stats(sup1, 1L))
-          .unionByName(stats(sup2, 2L))
-          .orderBy($"round")
+        ktrussPeelStats(ec)
       },
       Some("""WITH io AS MATERIALIZED (
           SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
@@ -10846,8 +10837,8 @@ object RelationalQueries extends QueryModule {
     //    dmax ≤ c); per-cap work = one monotone dmax filter + one
     //    sampled support pass. Memory discipline is inherited from the
     //    unsampled form: stats collapse to a collected 1-row verdict
-    //    per cap and every RDD pinned after the shared deg/dm
-    //    snapshots is unpersisted, blocking, before the next cap runs. ──
+    //    per cap and the cap's edge checkpoint is released, blocking,
+    //    before the next cap runs. ──────────────────────────────────────
     QueryDef("graph_ktruss_cap_sweep",
       (s, dir) => {
         import s.implicits._
@@ -10860,26 +10851,12 @@ object RelationalQueries extends QueryModule {
         // (the coin folds into the dm build — no es snapshot at all),
         // release e0 blocking before the sweep so only deg + dm stay
         // pinned while the support passes run.
-        val pinnedBefore = s.sparkContext.getPersistentRDDs.keySet
         val e0 = copurchasePairsRaw(s, dir)
           .distinct()
           .localCheckpoint()
-        val e0Ids = s.sparkContext.getPersistentRDDs.keySet -- pinnedBefore
         val deg = e0.select($"a".as("n")).union(e0.select($"b".as("n")))
           .groupBy($"n").agg(count(lit(1)).as("deg"))
           .localCheckpoint()
-        graft.functions.SketchFunctions.register(s)
-        def support(ed: DataFrame): DataFrame = {
-          val adj = ed.select($"a".as("n"), $"b".as("m"))
-            .union(ed.select($"b".as("n"), $"a".as("m")))
-            .groupBy($"n").agg(sort_array(collect_list($"m")).as("nbrs"))
-          // shuffle_hash on the adjacency sides — see graph_ktruss_peel
-          ed.join(adj.select($"n".as("a"), $"nbrs".as("na")).hint("shuffle_hash"), "a")
-            .join(adj.select($"n".as("b"), $"nbrs".as("nb")).hint("shuffle_hash"), "b")
-            .select($"a", $"b",
-              graft.functions.SketchFunctions
-                .sortedIntersectCount($"na", $"nb").as("sup"))
-        }
         // r15 optimization (guide §2.4, remove shuffles outright): the
         // per-cap hub exclusion was TWO anti joins against the hub set
         // per cap — six sampled-edge join passes across the sweep. An
@@ -10898,21 +10875,16 @@ object RelationalQueries extends QueryModule {
           .join(deg.select($"n".as("b"), $"deg".as("db")), "b")
           .select($"a", $"b", greatest($"da", $"db").as("dmax"))
           .localCheckpoint()
-        s.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-          if (e0Ids.contains(id)) rdd.unpersist(blocking = true)
-        }
-        val keep = s.sparkContext.getPersistentRDDs.keySet
+        releaseCheckpoint(e0)
         val collected = Seq(30L, 60L, 120L).map { cap =>
           val nHubs = deg.filter($"deg" > cap).count()
           val ec = dm.filter($"dmax" <= cap).select($"a", $"b")
             .localCheckpoint()
-          val r = support(ec).agg(count(lit(1)).as("n_edges"),
+          val r = ktrussSupport(ec).agg(count(lit(1)).as("n_edges"),
               sum(when($"sup" >= 1L, 1L).otherwise(0L)).as("n_sup_pos"),
               max($"sup").as("max_support"), sum($"sup").as("sum_support"))
             .head()
-          s.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-            if (!keep.contains(id)) rdd.unpersist(blocking = true)
-          }
+          releaseCheckpoint(ec)
           org.apache.spark.sql.Row(cap, nHubs, r.getLong(0),
             if (r.isNullAt(1)) null else r.getLong(1),
             if (r.isNullAt(2)) null else r.getLong(2),

@@ -149,11 +149,17 @@ class DqEngineSpec extends AnyFunSuite {
       criticalColumns = Seq("rut"))
     def res(cat: String, col: Option[String], rate: Double, status: String) =
       DqResult("d", "t", cat, status, 0, 0, rate, column_name = col)
-    assert(DqEngine.classify(res("format", None, 0.5, "PASS"), th) == "OK")
-    assert(DqEngine.classify(res("format", Some("rut"), 0.001, "FAIL"), th) == "CRITICAL")
-    assert(DqEngine.classify(res("format", Some("x"), 0.01, "FAIL"), th) == "WARNING")
-    assert(DqEngine.classify(res("format", Some("x"), 0.10, "FAIL"), th) == "CRITICAL")
-    assert(DqEngine.classify(res("completeness", Some("x"), 0.10, "FAIL"), th) == "CRITICAL")
+    val rows = Seq(
+      (res("format", None, 0.5, "PASS"), "OK"),
+      (res("format", Some("rut"), 0.001, "FAIL"), "CRITICAL"),
+      (res("format", Some("x"), 0.01, "FAIL"), "WARNING"),
+      (res("format", Some("x"), 0.10, "FAIL"), "CRITICAL"),
+      (res("completeness", Some("x"), 0.10, "FAIL"), "CRITICAL"),
+      // a table-level result has no column: never critical by name
+      (res("custom_sql", None, 0.01, "FAIL"), "WARNING"))
+    val alerts = rows.map(_._1).toDS()
+      .select(DqEngine.classificationColumn(th)).as[String].collect().toSeq
+    assert(alerts == rows.map(_._2))
   }
 
   test("all rule kinds come back in config category order; the run's temp view is dropped") {

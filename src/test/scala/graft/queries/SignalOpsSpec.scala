@@ -1,7 +1,9 @@
 package graft.queries
 
-import graft.{SparkEntry, Tables, TestSpark}
-import org.apache.spark.sql.Row
+import graft.{Concurrently, SparkEntry, Tables, TestSpark}
+import graft.queries.RelationalQueries.releaseCheckpoint
+import org.apache.spark.SparkException
+import org.apache.spark.sql.{DataFrame, Row}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Behavioral invariants for the r11 signal/eval additions (BFS
@@ -514,6 +516,49 @@ class SignalOpsSpec extends AnyFunSuite {
         assert(r.getLong(4) == dcg * 1000000L / idcg, s"q$qid ndcg")
         assert(r.getLong(4) <= 1000000L)
       } else assert(r.isNullAt(4), s"q$qid ndcg should be null at idcg=0")
+    }
+  }
+
+  // Checkpoint release: the graph loops free their own checkpoints, and
+  // queries sharing a session (Verify runs 8 at once) must not free each
+  // other's.
+  private def pinned: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** A fresh checkpoint of `0 until n` and the registry ids it pinned. */
+  private def checkpointed(n: Long): (DataFrame, Set[Int]) = {
+    val before = pinned
+    val df = spark.range(n).toDF("id").localCheckpoint()
+    (df, pinned -- before)
+  }
+
+  test("a checkpoint release frees that checkpoint and leaves an earlier one readable") {
+    val (earlier, earlierIds) = checkpointed(100)
+    val (later, laterIds) = checkpointed(50)
+    assert(earlierIds.size == 1 && laterIds.size == 1)
+    releaseCheckpoint(later)
+    assert(!pinned.contains(laterIds.head))
+    intercept[SparkException](later.collect())
+    assert(pinned.contains(earlierIds.head))
+    assert(earlier.count() == 100)
+    releaseCheckpoint(earlier)
+    assert(!pinned.contains(earlierIds.head))
+  }
+
+  test("a checkpoint release rejects a frame that is not a checkpoint") {
+    val (cp, ids) = checkpointed(10)
+    intercept[IllegalArgumentException](releaseCheckpoint(spark.range(10).toDF("id")))
+    intercept[IllegalArgumentException](releaseCheckpoint(cp.filter("id > 3")))
+    assert(pinned.contains(ids.head))
+    releaseCheckpoint(cp)
+  }
+
+  test("checkpointing graph queries return their serial rows when run concurrently") {
+    val names = Seq("graph_ktruss_capped", "graph_ktruss_cap_sweep", "graph_kcore_peel",
+      "graph_shortest_hops")
+    val serial = names.map(n => run(n).toSeq)
+    assert(serial.forall(_.nonEmpty))
+    (1 to 3).foreach { _ =>
+      assert(Concurrently(spark)((names ++ names).map(n => () => run(n).toSeq)) == serial ++ serial)
     }
   }
 }

@@ -238,8 +238,6 @@ object ModelDag {
   * compiles to a query returning *violating rows*; PASS ⇔ 0 rows.
   */
 object SchemaTests {
-  import org.apache.spark.sql.functions._
-
   /** `unique`: values of `col` that appear more than once. */
   def unique(df: DataFrame, col: String): DataFrame =
     df.groupBy(col).count().filter(org.apache.spark.sql.functions.col("count") > 1)

@@ -1515,7 +1515,6 @@ object Dedup {
       idCol: String,
       vecCol: String,
       threshold: Double,
-      dim: Int,
       bits: Int = 0,
       seed: Long = 42L): DataFrame = {
     graft.functions.VectorFunctions.register(embeddings.sparkSession)
@@ -1532,7 +1531,7 @@ object Dedup {
         val k = if (m <= 1L) 0 else 64 - java.lang.Long.numberOfLeadingZeros(m - 1L)
         math.min(24, math.max(8, k))
       }
-    val sig = Similarity.signature(col("v"), dim, nBits, seed)
+    val sig = Similarity.signature(col("v"), nBits, seed)
     val base = embeddings.select(col(idCol).as("id"), col(vecCol).as("v"))
       .withColumn("bucket", sig)
     // One side expands into hamming-1 probes, the other keeps its single

@@ -140,7 +140,6 @@ object Similarity {
       queries: DataFrame, // (qid, qvec)
       candidates: DataFrame, // (cid, cvec)
       k: Int,
-      dim: Int,
       bits: Int = 8,
       tables: Int = 12,
       seed: Long = 42L,
@@ -158,13 +157,13 @@ object Similarity {
     val q = queries
       .select(col("qid"), col("qvec"),
         posexplode(array((0 until tables).map(t =>
-          probes(signature(qaug, dim + 1, bits, tableSeed(t)), bits, probeHamming)): _*))
+          probes(signature(qaug, bits, tableSeed(t)), bits, probeHamming)): _*))
           .as(Seq("qtable", "ps")))
       .select(col("qid"), col("qvec"), col("qtable"), explode(col("ps")).as("probe"))
     val c = candidates.crossJoin(broadcast(m2))
       .select(col("cid"), col("cvec"),
         posexplode(array((0 until tables).map(t =>
-          signature(caug, dim + 1, bits, tableSeed(t))): _*)).as(Seq("ctable", "bucket")))
+          signature(caug, bits, tableSeed(t))): _*)).as(Seq("ctable", "bucket")))
     val scored = c.join(broadcast(q),
         col("ctable") === col("qtable") && col("bucket") === col("probe") &&
           col("qid") =!= col("cid"))
@@ -210,7 +209,6 @@ object Similarity {
       queries: DataFrame, // (qid, qvec)
       candidates: DataFrame, // (cid, cvec)
       threshold: Double,
-      dim: Int,
       bits: Int = 8,
       tables: Int = 4,
       seed: Long = 42L,
@@ -221,12 +219,12 @@ object Similarity {
     val q = queries
       .select(col("qid"), col("qvec"),
         posexplode(array((0 until tables).map(t =>
-          probes(signature(col("qvec"), dim, bits, tableSeed(t)), bits, probeHamming)): _*))
+          probes(signature(col("qvec"), bits, tableSeed(t)), bits, probeHamming)): _*))
           .as(Seq("qtable", "ps")))
       .select(col("qid"), col("qvec"), col("qtable"), explode(col("ps")).as("probe"))
     val c = candidates.select(col("cid"), col("cvec"),
       posexplode(array((0 until tables).map(t =>
-        signature(col("cvec"), dim, bits, tableSeed(t))): _*)).as(Seq("ctable", "bucket")))
+        signature(col("cvec"), bits, tableSeed(t))): _*)).as(Seq("ctable", "bucket")))
     c.join(broadcast(q),
         col("ctable") === col("qtable") && col("bucket") === col("probe") &&
           col("qid") =!= col("cid"))
@@ -241,9 +239,9 @@ object Similarity {
     * [dot(v, plane_j) >= 0] with ±1 plane components derived in-kernel —
     * a native codegen'd expression ([[graft.functions.RhSignature]]); the
     * earlier `zip_with`/`aggregate` composition paid a boxed lambda call
-    * per (bit × dim) element. `dim` is implied by the vector length.
+    * per (bit × dim) element. The dimension is implied by the vector length.
     */
-  def signature(vec: Column, dim: Int, bits: Int, seed: Long): Column =
+  def signature(vec: Column, bits: Int, seed: Long): Column =
     graft.functions.SketchFunctions.rhSignature(vec, bits, seed)
 
   /** The signature bucket plus every bucket within hamming distance
@@ -296,7 +294,6 @@ object Similarity {
       queries: DataFrame, // (qid, qvec)
       candidates: DataFrame, // (cid, cvec)
       k: Int,
-      dim: Int,
       bits: Int = 8,
       tables: Int = 4,
       seed: Long = 42L,
@@ -307,12 +304,12 @@ object Similarity {
     val q = queries
       .select(col("qid"), col("qvec"),
         posexplode(array((0 until tables).map(t =>
-          probes(signature(col("qvec"), dim, bits, tableSeed(t)), bits, probeHamming)): _*))
+          probes(signature(col("qvec"), bits, tableSeed(t)), bits, probeHamming)): _*))
           .as(Seq("qtable", "ps")))
       .select(col("qid"), col("qvec"), col("qtable"), explode(col("ps")).as("probe"))
     val c = candidates.select(col("cid"), col("cvec"),
       posexplode(array((0 until tables).map(t =>
-        signature(col("cvec"), dim, bits, tableSeed(t))): _*)).as(Seq("ctable", "bucket")))
+        signature(col("cvec"), bits, tableSeed(t))): _*)).as(Seq("ctable", "bucket")))
     val scored = c.join(broadcast(q),
         col("ctable") === col("qtable") && col("bucket") === col("probe") &&
           col("qid") =!= col("cid"))
@@ -1431,17 +1428,20 @@ object Similarity {
     *
     * Per iteration: one corpus scan + a |cells|-row shuffle; driver
     * traffic is the ≤numCentroids×dim integer sum matrix (the broadcast
-    * every distributed k-means round makes). The returned frame is the
-    * final iteration's lazy plan with a `converged` flag — true iff the
-    * fixpoint appeared among the `maxIters - 1` collected states.
+    * every distributed k-means round makes). Every iteration, the last
+    * included, runs the same plan and collects its ≤ numCentroids rows,
+    * so later iterations compile no new class. The returned frame is a
+    * local frame of the final state's rows sorted by (cell, dim), with a
+    * `converged` flag — true iff the fixpoint appeared among the
+    * `maxIters - 1` earlier states.
     *
     * `maxIters >= 3` is required because convergence DETECTION needs two
-    * collected states to compare: with maxIters = 2 the fixpoint loop
-    * body never runs (the only comparison would be against the lazy
-    * final iteration, which is never materialized), so `converged` could
-    * only ever be false — a silently degraded flag rather than a cheaper
-    * run. Callers wanting exactly 2 iterations without the flag should
-    * use [[kmeansTwoStepSeeded]].
+    * earlier states to compare: with maxIters = 2 the fixpoint loop body
+    * never runs (the only comparison would be against the final
+    * iteration, which only feeds the output), so `converged` could only
+    * ever be false — a silently degraded flag rather than a cheaper run.
+    * Callers wanting exactly 2 iterations without the flag should use
+    * [[kmeansTwoStepSeeded]].
     */
   def kmeansConvergedSeeded(
       vectors: DataFrame, // (vid, vec)
@@ -1467,11 +1467,16 @@ object Similarity {
       if (!converged) cur = next
       it += 1
     }
-    // final iteration stays lazy: centroids = last collected state's sums
-    explodeCentroids(
-        lloydAgg(v, cur.map(_._1), cur.map(_._3.map(_.toFloat)), scaleBits),
-        scaleBits)
-      .withColumn("converged", lit(converged))
+    // final iteration: centroids = last collected state's sums; the
+    // explode and division of explodeCentroids, on the driver
+    val scale = 1L << scaleBits
+    val rows = for {
+      (cell, n, sums) <- state(cur.map(_._1), cur.map(_._3.map(_.toFloat)))
+      (sum, pos) <- sums.zipWithIndex
+    } yield (cell, pos + 1, n, sum, sum.toDouble / Math.multiplyExact(n, scale).toDouble,
+      converged)
+    import v.sparkSession.implicits._
+    rows.toDF("cell", "dim", "n_members", "comp_sum", "centroid_fp", "converged")
   }
 
   private def prepKmeans(vectors: DataFrame): DataFrame = {
@@ -1488,16 +1493,15 @@ object Similarity {
 
   /** Assignment (nearest centroid, ties to the lower cell position) +
     * per-cell fixed-point sum aggregate — one Lloyd half-step. The
-    * repartition spreads the nc·dim-flop map stage across cores even
-    * when the scan yields one input split (same rationale as
-    * ivfKnnJoinSeeded).
+    * routing runs in the scan's own stage, so the only shuffle is the
+    * |cells|-row partial aggregate: no job or class per iteration moves
+    * the vectors themselves.
     */
   private def lloydAgg(v: DataFrame, ids: Seq[Long], mat: Seq[Seq[Float]],
       scaleBits: Int): DataFrame = {
     import graft.functions.VectorAggFunctions
     val idsLit = typedlit(ids)
-    v.repartition(col("vid"))
-      .withColumn("cpos", element_at(
+    v.withColumn("cpos", element_at(
         VectorFunctions.ivfRoute(col("vec"), typedlit(mat), 1), 1))
       .select(element_at(idsLit, col("cpos") + 1).as("cell"), col("vec"))
       .groupBy(col("cell"))
@@ -1523,7 +1527,7 @@ object Similarity {
       nProbe: Int = 4,
       seed: Long = 42L): DataFrame = {
     import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
+    import org.apache.spark.ml.functions.array_to_vector
     VectorFunctions.register(candidates.sparkSession)
 
     val trainDf = candidates.select(array_to_vector(col("cvec")).as("features"))

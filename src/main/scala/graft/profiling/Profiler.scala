@@ -40,7 +40,6 @@ object Profiler {
     * (DuckDB recomputes exact distincts).
     */
   def profile(
-      spark: SparkSession,
       df0: DataFrame,
       tableName: String,
       fecha: Option[String] = None,
@@ -338,13 +337,13 @@ object Profiler {
     * tables → one frame, with run metadata appended.
     */
   def profileTables(
-      spark: SparkSession,
+      @annotation.unused spark: SparkSession, // kept: callers pass their session
       tables: Seq[(String, DataFrame)],
       runId: String,
       environment: String,
       fecha: Option[String] = None,
       approxDistinct: Boolean = true): DataFrame =
-    tables.map { case (n, df) => profile(spark, df, n, fecha, approxDistinct = approxDistinct) }
+    tables.map { case (n, df) => profile(df, n, fecha, approxDistinct = approxDistinct) }
       .reduce(_.union(_))
       .withColumn("run_id", lit(runId))
       .withColumn("environment", lit(environment))

@@ -233,8 +233,8 @@ object ModelQueries extends QueryModule {
             col("status"), col("failed_records").as("records"))
         // 3. profiling: today's slice vs full history → row drift
         val driftStep = Profiler.drift(
-            Profiler.profile(s, orders.filter(col("o_orderdate") === cut), "orders"),
-            Profiler.profile(s, orders, "orders"))
+            Profiler.profile(orders.filter(col("o_orderdate") === cut), "orders"),
+            Profiler.profile(orders, "orders"))
           .select(lit("profile_drift").as("step"),
             col("column_name").as("item"), lit("OK").as("status"),
             col("row_delta").as("records"))

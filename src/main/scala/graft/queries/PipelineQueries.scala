@@ -957,7 +957,7 @@ object PipelineQueries extends QueryModule {
     //    probe join), exact cosine ≥ t. ─────────────────────────────────
     QueryDef("dedup_embedding_lsh",
       (s, dir) => Dedup.embeddingNearDupPairsLsh(Tables.load(s, dir, "embeddings"),
-          "vec_id", "embedding", threshold = 0.4, dim = 64) // bits auto-sized to corpus
+          "vec_id", "embedding", threshold = 0.4) // bits auto-sized to corpus
         .orderBy("id_a", "id_b"),
       Some(s"""WITH p AS (SELECT least(24, greatest(8, CAST(
             CASE WHEN ((count(*) + 3) // 4) <= 1 THEN 0
@@ -1291,7 +1291,7 @@ object PipelineQueries extends QueryModule {
           .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
         val candidates = emb
           .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-        Similarity.mipsLshTopK(queries, candidates, k = 5, dim = 64,
+        Similarity.mipsLshTopK(queries, candidates, k = 5,
             bits = 8, tables = 12, probeHamming = 2)
           .withColumn("rank", col("rank").cast(IntegerType))
           .orderBy("query_id", "rank")
@@ -1426,7 +1426,7 @@ object PipelineQueries extends QueryModule {
         // bits=10/L=8/hamming≤2: the ScalingSmokeSpec-validated operating
         // point — holds recall ≥0.9 at 10× corpus even when true top-k
         // are mid-similarity chance neighbors (see Similarity.lshTopK doc)
-        Similarity.lshTopK(queries, candidates, k = 5, dim = 64, bits = 10,
+        Similarity.lshTopK(queries, candidates, k = 5, bits = 10,
             tables = 8, probeHamming = 2)
           .withColumn("rank", col("rank").cast(IntegerType))
           .orderBy("query_id", "rank")
@@ -2153,9 +2153,9 @@ object PipelineQueries extends QueryModule {
       (s, dir) => {
         val emb = Tables.load(s, dir, "embeddings")
           .select(col("vec_id").as("vid"), col("embedding").as("vec"))
+        // rows come sorted by (cell, dim)
         Similarity.kmeansConvergedSeeded(emb, numCentroids = 32,
-            scaleBits = 20, maxIters = 3)
-          .orderBy("cell", "dim")
+          scaleBits = 20, maxIters = 3)
       },
       Some("""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
         cent AS (SELECT vec_id AS cell, e AS ce FROM
@@ -2878,17 +2878,23 @@ object PipelineQueries extends QueryModule {
     //    the list, recounting between merges exactly like the reference
     //    algorithm): each round counts adjacent symbol pairs over the
     //    weighted word-type table, collects the argmax pair (ties to the
-    //    lexicographically smallest — TakeOrdered(1), total order), and
-    //    greedily merges it left-to-right inside every word via an
-    //    array-accumulator fold with the pair as string literals (the
-    //    same engine-parity fold class as window_holt_linear; string
-    //    state, no floats at all). Emits the learned merge per round, as
-    //    literals, plus the corpus token count after it — the
-    //    compression trajectory. A round with no pair left ends the
+    //    lexicographically smallest — a total order), and greedily
+    //    merges it left-to-right inside every word via an
+    //    array-accumulator fold (the same engine-parity fold class as
+    //    window_holt_linear; string state, no floats at all). Emits the
+    //    learned merge per round plus the corpus token count after it —
+    //    the compression trajectory. A round with no pair left ends the
     //    loop. 100 TB: the corpus collapses to the vocabulary in the
     //    FIRST aggregate; the symbol table is checkpointed once and after
-    //    each merge (each is read by the next count, merge and emit), and
-    //    the only driver traffic is one collected row per round. ────────
+    //    each merge, and the only driver traffic is two collected rows
+    //    per round. Every round runs the same two plans over the same
+    //    schema: the seed goes through the merge fold too (with a pair no
+    //    symbol equals), the merge pair reaches the fold only inside its
+    //    lambda (string literals are referenced, not inlined, in
+    //    generated code), and one count per round yields both the best
+    //    pair and the token total of the table it reads — so rounds 2+
+    //    compile no new class. The result is one plan: the last table's
+    //    token total beside the collected rounds. ─────────────────────────
     QueryDef("text_bpe_train3",
       (s, dir) => {
         import s.implicits._
@@ -2896,48 +2902,55 @@ object PipelineQueries extends QueryModule {
           .select(explode(tokens($"text")).as("w"))
           .filter($"w".rlike("^[a-z]+$") && length($"w") >= 2)
           .groupBy($"w").agg(count(lit(1)).as("c_w"))
-        var syms = types.select($"c_w",
+        def merge(syms: org.apache.spark.sql.DataFrame, ma: String, mb: String) =
+          syms.select($"c_w", aggregate(
+              slice($"syms", lit(2), greatest(size($"syms") - 1, lit(0))),
+              array(element_at($"syms", 1)),
+              (acc, x) => when(
+                element_at(acc, -1) === lit(ma) && x === lit(mb),
+                concat(slice(acc, lit(1), size(acc) - 1), array(lit(ma + mb))))
+                .otherwise(concat(acc, array(x)))).as("syms"))
+            .localCheckpoint()
+        // Per word, one row per adjacent pair weighted c_w plus one
+        // (null, null) row weighted c_w·|syms|: grouped, the null group is
+        // the table's token total and sorts first, the best pair second.
+        def pairCounts(syms: org.apache.spark.sql.DataFrame) = {
+          val n = size($"syms")
+          syms.select(explode(transform(sequence(lit(1), n), i =>
+              when(i < n, struct(element_at($"syms", i).as("a"),
+                element_at($"syms", i + 1).as("b"), $"c_w".as("w")))
+                .otherwise(struct(lit(null).cast("string").as("a"),
+                  lit(null).cast("string").as("b"), ($"c_w" * n).as("w"))))).as("p"))
+            .groupBy($"p.a".as("a"), $"p.b".as("b"))
+            .agg(sum($"p.w").as("n"))
+            .orderBy($"a".isNotNull, $"n".desc, $"a", $"b").limit(2)
+            .collect()
+        }
+        var syms = merge(types.select($"c_w",
           transform(sequence(lit(1), length($"w")),
-            i => $"w".substr(i, lit(1))).as("syms"))
-          .localCheckpoint()
-        val rounds = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
+            i => $"w".substr(i, lit(1))).as("syms")), "", "")
+        // (round, merge_a, merge_b, pair_count, tokens after the merge):
+        // the next round's count fills in the token total
+        val rounds = scala.collection.mutable.ArrayBuffer
+          .empty[(Int, String, String, Long, Option[Long])]
         var done = false
         while (rounds.size < 3 && !done) {
-          val best = syms
-            .filter(size($"syms") >= 2)
-            .select($"c_w", explode(transform(
-              sequence(lit(1), size($"syms") - 1),
-              i => struct(element_at($"syms", i).as("a"),
-                element_at($"syms", i + 1).as("b")))).as("p"))
-            .groupBy($"p.a".as("a"), $"p.b".as("b"))
-            .agg(sum($"c_w").as("pair_count"))
-            .orderBy($"pair_count".desc, $"a", $"b").limit(1)
-            .collect().headOption
-          best match {
+          val counted = pairCounts(syms)
+          counted.find(!_.isNullAt(0)) match {
             case None => done = true
             case Some(b) =>
-              val (ma, mb) = (b.getString(0), b.getString(1))
-              syms = syms
-                .select($"c_w", aggregate(
-                  slice($"syms", lit(2), greatest(size($"syms") - 1, lit(0))),
-                  array(element_at($"syms", 1)),
-                  (acc, x) => when(
-                    element_at(acc, -1) === lit(ma) && x === lit(mb),
-                    concat(slice(acc, lit(1), size(acc) - 1), array(lit(ma + mb))))
-                    .otherwise(concat(acc, array(x)))).as("syms"))
-                .localCheckpoint()
-              rounds += syms
-                .agg(sum($"c_w" * size($"syms")).as("corpus_tokens_after"))
-                .select(lit(rounds.size + 1).as("round"), lit(ma).as("merge_a"),
-                  lit(mb).as("merge_b"), lit(b.getLong(2)).as("pair_count"),
-                  $"corpus_tokens_after")
+              if (rounds.nonEmpty)
+                rounds(rounds.size - 1) = rounds.last.copy(_5 = Some(counted.head.getLong(2)))
+              rounds += ((rounds.size + 1, b.getString(0), b.getString(1), b.getLong(2), None))
+              syms = merge(syms, b.getString(0), b.getString(1))
           }
         }
-        rounds.reduceOption(_ unionByName _)
-          .getOrElse(syms.limit(0).select(lit(0).as("round"), lit("").as("merge_a"),
-            lit("").as("merge_b"), lit(0L).as("pair_count"),
-            lit(0L).as("corpus_tokens_after")))
-          .orderBy($"round")
+        // one frame: the collected rounds (an array literal, referenced
+        // by the generated code) beside the last table's token total
+        syms.agg(sum($"c_w" * size($"syms")).as("last"))
+          .select(inline(typedlit(rounds.toSeq)), $"last")
+          .select($"_1".as("round"), $"_2".as("merge_a"), $"_3".as("merge_b"),
+            $"_4".as("pair_count"), coalesce($"_5", $"last").as("corpus_tokens_after"))
       },
       Some("""WITH toks AS (SELECT unnest(string_split_regex(lower(trim(text)), '\s+')) AS w
           FROM documents),
@@ -3044,7 +3057,6 @@ object PipelineQueries extends QueryModule {
     //    string replaces — the plan a 100 TB encode pass wants. ─────────
     QueryDef("text_bpe_apply",
       (s, dir) => {
-        import s.implicits._
         val docs = Tables.load(s, dir, "documents")
         val types = docs.select(explode(tokens(col("text"))).as("w"))
           .filter(col("w").rlike("^[a-z]+$") && length(col("w")) >= 2)

@@ -70,8 +70,8 @@ object ProfileQueries extends QueryModule {
     QueryDef("agg_profile_drift",
       (s, dir) => {
         val orders = Tables.load(s, dir, "orders")
-        val prev = Profiler.profile(s, orders, "orders")
-        val cur = Profiler.profile(s,
+        val prev = Profiler.profile(orders, "orders")
+        val cur = Profiler.profile(
           orders.filter(col("o_orderdate") >= lit("2000-01-01").cast("timestamp")),
           "orders")
         Profiler.drift(cur, prev)

@@ -2823,7 +2823,7 @@ object RelationalQueries extends QueryModule {
     // NULL-semantics family: coalesce, nullif, null-safe equality, and
     // explicit null ordering — the three-valued-logic corners.
     QueryDef("func_null_semantics",
-      (s, dir) => {
+      (s, _) => {
         import s.implicits._
         Seq((1L, Option(10L)), (2L, None), (3L, Option(30L)), (4L, None))
           .toDF("id", "v")
@@ -7534,11 +7534,15 @@ object RelationalQueries extends QueryModule {
     //    feature): 3 synchronous min-propagation rounds (the
     //    graph_pagerank_fixed bounded-iteration contract — a fixed round
     //    count is what keeps a data-dependent frontier oracle-checkable),
-    //    each round one |edges| ⋈ |reached| hash join + a min hash
-    //    aggregate; localCheckpoint per round (kcore pattern) so round
-    //    3's plan doesn't re-evaluate the fact join 3³ times. Distances
-    //    are pure integers; unreached nodes are absent by construction
-    //    in both engines. ──────────────────────────────────────────────
+    //    each round one |edges| ⋈ |reached| broadcast hash join + a min
+    //    hash aggregate over the distinct edge set, checkpointed once.
+    //    The reached set is keyed by nation, so it holds at most one row
+    //    per nation by construction: each round collects the relaxed
+    //    hops, folds them into that set on the driver, and feeds it back
+    //    as a broadcast local frame of the same schema, so every round
+    //    runs the same plan and compiles no new class. Distances are
+    //    pure integers; unreached nodes are absent by construction in
+    //    both engines. ──────────────────────────────────────────────────
     QueryDef("graph_shortest_hops",
       (s, dir) => {
         import s.implicits._
@@ -7553,16 +7557,16 @@ object RelationalQueries extends QueryModule {
             $"s_nationkey".cast("long").as("dst"))
           .distinct()
           .localCheckpoint()
-        var dist = Seq((0L, 0L)).toDF("node", "hops")
+        var dist = Map(0L -> 0L)
         for (_ <- 1 to 3) {
-          val relaxed = edges
-            .join(dist.select($"node".as("src"), $"hops"), "src")
-            .select($"dst".as("node"), ($"hops" + 1L).as("hops"))
-          dist = dist.unionAll(relaxed)
-            .groupBy($"node").agg(min($"hops").as("hops"))
-            .localCheckpoint()
+          edges.join(broadcast(dist.toSeq.toDF("src", "hops")), "src")
+            .groupBy($"dst").agg(min($"hops").as("hops"))
+            .as[(Long, Long)].collect()
+            .foreach { case (node, hops) =>
+              if (dist.get(node).forall(_ > hops + 1)) dist += node -> (hops + 1)
+            }
         }
-        dist.orderBy($"node")
+        dist.toSeq.sorted.toDF("node", "hops")
       },
       Some("""WITH e AS (SELECT DISTINCT CAST(c.c_nationkey AS BIGINT) AS src,
             CAST(s.s_nationkey AS BIGINT) AS dst
@@ -7696,7 +7700,6 @@ object RelationalQueries extends QueryModule {
         val ties = daily.groupBy($"c").agg(count(lit(1)).as("t"))
           .agg(sum($"t").as("n"),
             sum($"t" * ($"t" - 1L) * (lit(2L) * $"t" + 5L)).as("tie_term"))
-        val nd = $"n".cast("double")
         val var18 = $"n" * ($"n" - 1L) * (lit(2L) * $"n" + 5L) - $"tie_term"
         sStat.crossJoin(broadcast(ties))
           .select($"n", $"s_stat", var18.as("var18_num"),

@@ -175,7 +175,7 @@ class ScalingSmokeSpec extends AnyFunSuite {
     val corpus = base.unionByName(pert)
     val pairs = graft.operators.Dedup
       .embeddingNearDupPairsLsh(corpus, "vec_id", "embedding",
-        threshold = 0.9, dim = 64, bits = 15) // sf1's auto-sized width
+        threshold = 0.9, bits = 15) // sf1's auto-sized width
       .select("id_a", "id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val planted = base.select("vec_id").collect().map(_.getLong(0))
@@ -236,7 +236,7 @@ class ScalingSmokeSpec extends AnyFunSuite {
       df.select(col("query_id"), col("neighbor_id")).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     val truth = pairs(Similarity.bruteForceTopK(queries, cands, k))
-    val lsh = pairs(Similarity.lshTopK(queries, cands, k, dim = 64, bits = 10,
+    val lsh = pairs(Similarity.lshTopK(queries, cands, k, bits = 10,
       tables = 8, probeHamming = 2))
     val ivf = pairs(Similarity.ivfTopKSeeded(queries, cands, k,
       numCentroids = 64, nProbe = 24))

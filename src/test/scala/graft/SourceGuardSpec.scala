@@ -7,9 +7,10 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source guards: the local session is configured in one function
-  * (`SparkEntry.localSession`), and only Bench's between-pass sweep
+  * (`SparkEntry.localSession`), only Bench's between-pass sweep
   * releases RDDs through the global registry — a registry sweep inside a
-  * query can free a concurrently running query's checkpoint.
+  * query can free a concurrently running query's checkpoint — and no
+  * code tunes Spark's code generation.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -40,5 +41,15 @@ class SourceGuardSpec extends AnyFunSuite {
   test("getPersistentRDDs appears only in Bench's between-pass sweep") {
     assert(codeLines("getPersistentRDDs", "src/main", "tools").map(_._1) ==
       Seq("src/main/scala/graft/Bench.scala"))
+  }
+
+  test("no engine or tool code sets a spark.sql.codegen conf") {
+    // The codegen working set is fitted by the plans the queries build; a
+    // larger codegen cache (spark.sql.codegen.cache.maxEntries, a static
+    // conf) or any other codegen setting would hide a regression in them.
+    assert(codeLines("spark.sql.codegen.", "src/main", "tools").isEmpty)
+    // the same settings through SQLConf's entries (CODEGEN_CACHE_MAX_ENTRIES,
+    // WHOLESTAGE_CODEGEN_ENABLED, ...)
+    assert(codeLines("CODEGEN", "src/main", "tools").isEmpty)
   }
 }

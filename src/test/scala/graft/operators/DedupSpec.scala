@@ -550,7 +550,7 @@ class DedupSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(exact == Set((1L, 2L), (3L, 4L)))
     val lsh = Dedup.embeddingNearDupPairsLsh(vecs, "vec_id", "embedding", 0.9,
-      dim = 4, bits = 4)
+      bits = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(lsh.subsetOf(exact))
     assert(lsh == exact) // hamming-1 probing recovers both planted pairs

@@ -153,7 +153,7 @@ class SimilaritySpec extends AnyFunSuite {
     assert(exact != cosine, "fixture too easy: MIPS and cosine top-k agree")
     // defaults (bits=8/L=12/h≤2) — the sweep that picked them measured
     // 10/8 ⇒ 0.71, 8/8 ⇒ 0.905, 8/12 ⇒ 0.94 on this fixture
-    val alsh = Similarity.mipsLshTopK(q, c, k, dim = dim)
+    val alsh = Similarity.mipsLshTopK(q, c, k)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = (exact & alsh).size.toDouble / exact.size
     assert(recall >= 0.9,
@@ -195,7 +195,7 @@ class SimilaritySpec extends AnyFunSuite {
     val c = asC(df)
     val brute = Similarity.bruteForceTopK(q, c, k)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val lsh = Similarity.lshTopK(q, c, k, dim = dim, bits = 8, tables = 4)
+    val lsh = Similarity.lshTopK(q, c, k, bits = 8, tables = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = (brute & lsh).size.toDouble / brute.size
     assert(recall >= 0.9, s"LSH recall $recall below 0.9 (|brute|=${brute.size}, |lsh|=${lsh.size})")
@@ -298,7 +298,7 @@ class SimilaritySpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val exact = pairs(Similarity.rangeSearch(q, c, threshold = 0.9))
     val lsh = pairs(Similarity.rangeSearchLsh(q, c, threshold = 0.9,
-      dim = dim, bits = 8, tables = 4))
+      bits = 8, tables = 4))
     assert(exact.nonEmpty, "threshold yielded an empty truth set")
     assert((lsh -- exact).isEmpty, "LSH range search produced false positives")
     val recall = (exact & lsh).size.toDouble / exact.size
@@ -747,7 +747,7 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("lshTopK explain has no cartesian/broadcast-nested-loop join") {
     val q = asQ(emb.filter($"vec_id" < 5))
-    val plan = Similarity.lshTopK(q, asC(emb), 5, dim = 64, bits = 8)
+    val plan = Similarity.lshTopK(q, asC(emb), 5, bits = 8)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct"), plan)
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan)

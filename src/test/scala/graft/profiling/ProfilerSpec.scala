@@ -14,7 +14,7 @@ class ProfilerSpec extends AnyFunSuite {
       (3L, Some(7.5), null),
       (3L, Some(2.5), "c"))
       .toDF("id", "x", "s")
-    val p = Profiler.profile(spark, df, "t", approxDistinct = false)
+    val p = Profiler.profile(df, "t", approxDistinct = false)
       .collect().map(r => r.getString(1) -> r).toMap
     assert(p("id").getLong(3) == 4) // total_records
     assert(p("id").getLong(4) == 0) // null_count
@@ -28,15 +28,15 @@ class ProfilerSpec extends AnyFunSuite {
 
   test("approx distinct (the scale-safe default) stays close to exact") {
     val df = (1 to 1000).map(i => i % 97).toDF("k")
-    val exact = Profiler.profile(spark, df, "t", approxDistinct = false).collect()(0).getLong(6)
-    val approx = Profiler.profile(spark, df, "t").collect()(0).getLong(6)
+    val exact = Profiler.profile(df, "t", approxDistinct = false).collect()(0).getLong(6)
+    val approx = Profiler.profile(df, "t").collect()(0).getLong(6)
     assert(exact == 97)
     assert(math.abs(approx - 97) <= 10)
   }
 
   test("complex-typed columns get schema info without bounds") {
     val df = Seq((1, Seq(1.0f, 2.0f))).toDF("id", "emb")
-    val p = Profiler.profile(spark, df, "t")
+    val p = Profiler.profile(df, "t")
       .collect().map(r => r.getString(1) -> r).toMap
     assert(p("emb").getString(2) == "array")
     assert(p("emb").isNullAt(6) && p("emb").isNullAt(7) && p("emb").isNullAt(9))
@@ -51,8 +51,8 @@ class ProfilerSpec extends AnyFunSuite {
   }
 
   test("drift reports integer row/null deltas between two runs") {
-    val prev = Profiler.profile(spark, Seq((1, Option(2)), (3, None)).toDF("a", "b"), "t")
-    val cur = Profiler.profile(spark, Seq((1, Option(2))).toDF("a", "b"), "t")
+    val prev = Profiler.profile(Seq((1, Option(2)), (3, None)).toDF("a", "b"), "t")
+    val cur = Profiler.profile(Seq((1, Option(2))).toDF("a", "b"), "t")
     val d = Profiler.drift(cur, prev).collect()
       .map(r => r.getString(1) -> (r.getLong(6), r.getLong(7))).toMap // (row_delta, null_delta)
     assert(d("a") == (-1L, 0L))
@@ -73,7 +73,7 @@ class ProfilerSpec extends AnyFunSuite {
 
   test("sampled profiling bounds rows without a single-partition collapse") {
     val df = (1L to 10000L).toDF("id").repartition(8)
-    val sampled = Profiler.profile(spark, df, "t", sampleRows = Some(800L))
+    val sampled = Profiler.profile(df, "t", sampleRows = Some(800L))
     val total = sampled.collect()(0).getLong(3) // total_records
     // each of 8 partitions contributes ≤ 100 rows
     assert(total <= 800L, s"sample over-delivered: $total")

@@ -759,6 +759,71 @@ case class CharStats(child: Expression) extends UnaryExpression {
   override def prettyName: String = "char_stats"
 }
 
+/** One BPE training round's view of a word type: its characters with the
+  * learned merges applied in order, each merge one greedy left-to-right
+  * pass (a symbol pair equal to the merge becomes one symbol, and the
+  * merged symbol can take part in the next pair), then one (a, b, w) row
+  * per adjacent pair weighted by the word's count, plus one
+  * (null, null, count·|symbols|) row carrying the word's token total.
+  */
+object BpeKernel {
+  import org.apache.spark.sql.catalyst.InternalRow
+  import org.apache.spark.sql.catalyst.util.GenericArrayData
+
+  def pairs(word: UTF8String, weight: Long, merges: ArrayData): ArrayData = {
+    var syms = Array.tabulate(word.numChars())(i => word.substring(i, i + 1))
+    var m = 0
+    while (m < merges.numElements()) {
+      val pair = merges.getStruct(m, 2)
+      val (ma, mb) = (pair.getUTF8String(0), pair.getUTF8String(1))
+      val acc = new scala.collection.mutable.ArrayBuffer[UTF8String](syms.length)
+      syms.foreach { x =>
+        if (acc.nonEmpty && acc.last == ma && x == mb) acc(acc.length - 1) = UTF8String.concat(ma, mb)
+        else acc += x
+      }
+      syms = acc.toArray
+      m += 1
+    }
+    val n = syms.length
+    val out = new Array[Any](n)
+    var i = 0
+    while (i < n - 1) { out(i) = InternalRow(syms(i), syms(i + 1), weight); i += 1 }
+    if (n > 0) out(n - 1) = InternalRow(null, null, Math.multiplyExact(weight, n.toLong))
+    new GenericArrayData(out)
+  }
+}
+
+/** bpe_pairs(word, weight, merges) → array<struct<a, b, w>>; see
+  * [[BpeKernel]]. `merges` (array<struct<string, string>>) is a literal
+  * that the generated code references, so every round compiles to the
+  * same class.
+  */
+case class BpePairs(word: Expression, weight: Expression, merges: Expression)
+    extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
+  override def first: Expression = word
+  override def second: Expression = weight
+  override def third: Expression = merges
+  override def dataType: DataType = ArrayType(StructType(Seq(
+    StructField("a", StringType), StructField("b", StringType),
+    StructField("w", LongType, nullable = false))), containsNull = false)
+  override def checkInputDataTypes(): TypeCheckResult = (word.dataType, weight.dataType,
+      merges.dataType) match {
+    case (StringType, LongType, ArrayType(StructType(Array(
+        StructField(_, StringType, _, _), StructField(_, StringType, _, _))), _)) =>
+      TypeCheckResult.TypeCheckSuccess
+    case (w, c, m) => TypeCheckResult.TypeCheckFailure(
+      "bpe_pairs expects (string, bigint, array<struct<string, string>>), got " +
+        s"(${w.simpleString}, ${c.simpleString}, ${m.simpleString})")
+  }
+  override protected def nullSafeEval(w: Any, c: Any, m: Any): Any =
+    BpeKernel.pairs(w.asInstanceOf[UTF8String], c.asInstanceOf[Long], m.asInstanceOf[ArrayData])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (w, c, m) => s"graft.functions.BpeKernel.pairs($w, $c, $m)")
+  override protected def withNewChildrenInternal(
+      w: Expression, c: Expression, m: Expression): BpePairs = copy(word = w, weight = c, merges = m)
+  override def prettyName: String = "bpe_pairs"
+}
+
 object TextHashFunctions {
   def register(spark: SparkSession): Unit = {
     Registration.ifAbsent(spark, "char_stats")(es => CharStats(es.head))
@@ -770,6 +835,7 @@ object TextHashFunctions {
     Registration.ifAbsent(spark, "text_lang_id")(es => TextLangId(es.head))
     Registration.ifAbsent(spark, "gopher_stats")(es => GopherStats(es.head))
     Registration.ifAbsent(spark, "repetition_stats")(es => RepetitionStats(es.head))
+    Registration.ifAbsent(spark, "bpe_pairs")(es => BpePairs(es(0), es(1), es(2)))
     Registration.ifAbsent(spark, "shingle_hashes") { es =>
       val n = es(1).eval(null) match {
         case i: Int => i
@@ -812,6 +878,8 @@ object TextHashFunctions {
   def textLangId(c: Column): Column = call_function("text_lang_id", c)
   def gopherStats(c: Column): Column = call_function("gopher_stats", c)
   def repetitionStats(c: Column): Column = call_function("repetition_stats", c)
+  def bpePairs(word: Column, weight: Column, merges: Column): Column =
+    call_function("bpe_pairs", word, weight, merges)
   def shingleHashes(c: Column, n: Int): Column =
     call_function("shingle_hashes", c, org.apache.spark.sql.functions.lit(n))
   def spanMd5s(c: Column, spanWords: Int): Column =

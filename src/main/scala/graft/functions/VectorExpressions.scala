@@ -479,32 +479,25 @@ case class Sq8Encode(child: Expression)
 
 /** Greedy Maximal Marginal Relevance over one query's candidate pool
   * (the kernel behind [[graft.operators.Similarity.mmrRerank]]). `pool`
-  * holds (cid, rel, cvec) structs in any order; the result is at most
-  * `selectK` (rank, cid, rel) picks in selection order. Step 1 takes the
-  * highest `rel`; every later step the highest
+  * holds (cid, rel, cvec) in any order; the result is at most `selectK`
+  * (rank, cid, rel) picks in selection order. Step 1 takes the highest
+  * `rel`; every later step the highest
   * `λ·rel − (1−λ)·max cosine(candidate, selected)`, the max kept
   * incrementally per candidate. Doubles compare under
   * `SQLOrderingUtil.compareDoubles` (NaN largest, 0.0 = −0.0) and ties go
   * to the lower cid: the order of Spark's `max(struct(score, −cid))`.
   */
 object MmrKernel {
-  import org.apache.spark.sql.catalyst.InternalRow
-  import org.apache.spark.sql.catalyst.util.{GenericArrayData, SQLOrderingUtil}
+  import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 
-  def select(pool: ArrayData, selectK: Int, lambda: Double): ArrayData = {
-    val n = pool.numElements()
+  def select(pool: Seq[(Long, Double, ArrayData)], selectK: Int,
+      lambda: Double): Seq[(Int, Long, Double)] = {
     // cid order: a strict-greater scan then keeps the lower cid on ties
-    val rows = Array.tabulate(n) { i =>
-      val r = pool.getStruct(i, 3)
-      if (r.isNullAt(1) || r.isNullAt(2))
-        throw new IllegalArgumentException(s"mmr_select: null rel or vector for cid ${r.getLong(0)}")
-      r
-    }.sortBy(_.getLong(0))
-    val rel = rows.map(_.getDouble(1))
-    val vecs = rows.map(_.getArray(2))
+    val rows = pool.sortBy(_._1).toArray
+    val n = rows.length
     val maxSim = new Array[Double](n)
     val picked = new Array[Boolean](n)
-    val out = new Array[Any](math.min(selectK, n))
+    val out = new Array[(Int, Long, Double)](math.min(selectK, n))
     var last = -1
     var step = 0
     while (step < out.length) {
@@ -513,10 +506,10 @@ object MmrKernel {
       var i = 0
       while (i < n) {
         if (!picked(i)) {
-          val score = if (last < 0) rel(i) else {
-            val s = VectorKernels.cosine(vecs(i), vecs(last))
+          val score = if (last < 0) rows(i)._2 else {
+            val s = VectorKernels.cosine(rows(i)._3, rows(last)._3)
             if (step == 1 || SQLOrderingUtil.compareDoubles(s, maxSim(i)) > 0) maxSim(i) = s
-            lambda * rel(i) - (1.0 - lambda) * maxSim(i)
+            lambda * rows(i)._2 - (1.0 - lambda) * maxSim(i)
           }
           if (best < 0 || SQLOrderingUtil.compareDoubles(score, bestScore) > 0) {
             best = i; bestScore = score
@@ -526,38 +519,11 @@ object MmrKernel {
       }
       picked(best) = true
       last = best
-      out(step) = InternalRow(step + 1, rows(best).getLong(0), rel(best))
+      out(step) = (step + 1, rows(best)._1, rows(best)._2)
       step += 1
     }
-    new GenericArrayData(out)
+    out.toSeq
   }
-}
-
-/** `mmr_select(pool, selectK, lambda)` — see [[MmrKernel]]. Evaluated
-  * once per query row (|Q| rows), so it stays interpreted.
-  */
-case class MmrSelect(pool: Expression, selectK: Int, lambda: Double)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
-    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-  override def child: Expression = pool
-
-  override def checkInputDataTypes(): TypeCheckResult = pool.dataType match {
-    case ArrayType(StructType(Array(StructField(_, LongType, _, _),
-        StructField(_, DoubleType, _, _), StructField(_, ArrayType(FloatType, _), _, _))), _) =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"mmr_select expects array<struct<bigint, double, array<float>>>, got ${other.simpleString}")
-  }
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("rank", IntegerType, nullable = false),
-    StructField("cid", LongType, nullable = false),
-    StructField("rel", DoubleType, nullable = false))), containsNull = false)
-
-  override protected def nullSafeEval(p: Any): Any =
-    MmrKernel.select(p.asInstanceOf[ArrayData], selectK, lambda)
-
-  override protected def withNewChildInternal(c: Expression) = copy(pool = c)
-  override def prettyName: String = "mmr_select"
 }
 
 /** Session registration + typed Column API. */
@@ -566,10 +532,6 @@ object VectorFunctions {
     case i: Int => i
     case l: Long => l.toInt
     case other => throw new IllegalArgumentException(s"expected literal int, got $other")
-  }
-  private def litDouble(e: Expression): Double = e.eval(null) match {
-    case d: Double => d
-    case other => throw new IllegalArgumentException(s"expected literal double, got $other")
   }
 
   def register(spark: SparkSession): Unit = {
@@ -581,8 +543,6 @@ object VectorFunctions {
     Registration.ifAbsent(spark, "pq_adc")(es => PqAdc(es(0), es(1)))
     Registration.ifAbsent(spark, "l2_sq")(es => L2Squared(es(0), es(1)))
     Registration.ifAbsent(spark, "sq8_encode")(es => Sq8Encode(es(0)))
-    Registration.ifAbsent(spark, "mmr_select")(es =>
-      MmrSelect(es(0), litInt(es(1)), litDouble(es(2))))
   }
 
   def cosineSim(a: Column, b: Column): Column = call_function("cosine_sim", a, b)
@@ -596,7 +556,4 @@ object VectorFunctions {
     call_function("pq_dtable", vec, seeds, org.apache.spark.sql.functions.lit(m))
   def pqAdc(codes: Column, dtable: Column): Column = call_function("pq_adc", codes, dtable)
   def sq8Encode(vec: Column): Column = call_function("sq8_encode", vec)
-  def mmrSelect(pool: Column, selectK: Int, lambda: Double): Column =
-    call_function("mmr_select", pool, org.apache.spark.sql.functions.lit(selectK),
-      org.apache.spark.sql.functions.lit(lambda))
 }

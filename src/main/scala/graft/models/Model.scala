@@ -1,6 +1,9 @@
 package graft.models
 
+import java.nio.file.Paths
+
 import graft.Concurrently
+import graft.sources.Maintenance
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** A transformation model: the engine's equivalent of a dbt model
@@ -36,9 +39,11 @@ object Materialization {
     * slice (the reference's universal date-partition filter,
     * dq_sql_notes.md:75), so each run shuffles only the increment, never
     * the accumulated table; the untouched remainder is carried by an
-    * anti join keyed on `uniqueKey` (at warehouse scale the same contract
-    * maps onto MERGE / dynamic-partition-overwrite of a real table
-    * format, so the remainder is not even rewritten).
+    * anti join keyed on `uniqueKey`. Each merge still rewrites the whole
+    * accumulated table once, into a stage directory that replaces the
+    * table by rename, so a failed merge leaves the previous version in
+    * place. Rewriting only the files that hold a replaced key is not done
+    * yet.
     */
   final case class Incremental(uniqueKey: Seq[String]) extends Materialization
   /** dbt `materialized='ephemeral'`: never materialized, never
@@ -127,13 +132,14 @@ object ModelDag {
           val p = s"$dir/${m.name}"
           val target = new java.io.File(p)
           if (target.exists()) {
-            // merge: new rows win on uniqueKey; stage first because the
-            // merged plan reads the same parquet it will overwrite
+            // merge: new rows win on uniqueKey; the merged plan reads the
+            // parquet it replaces, so it is written to a stage directory
+            // and swapped in by rename
             val existing = spark.read.parquet(p)
             val merged = existing.join(df, keys, "left_anti").unionByName(df)
             val stage = s"$dir/${m.name}__stage"
             merged.write.mode("overwrite").parquet(stage)
-            spark.read.parquet(stage).write.mode("overwrite").parquet(p)
+            Maintenance.swapIn(Paths.get(stage), Paths.get(p))
           } else {
             df.write.mode("overwrite").parquet(p)
           }

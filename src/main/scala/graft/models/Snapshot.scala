@@ -86,26 +86,25 @@ object Snapshot {
       .withColumnRenamed(valueCol, "__new_value")
       .withColumn("__in_batch", lit(true))
 
+    // one full outer join; each joined row emits its history row (kept
+    // open, or closed at asOf when the value changed) and, for a new or
+    // changed key, its opened row
     val j = current.join(incoming, keyCols, "full_outer")
-    val unchanged = j
-      .filter(col("__in_batch").isNull || col(valueCol) <=> col("__new_value"))
-      .filter(col("is_current").isNotNull) // key present in history
-      .select(current.columns.toIndexedSeq.map(col): _*)
-    val closedNow = j
-      .filter(col("is_current").isNotNull && col("__in_batch").isNotNull &&
-        !(col(valueCol) <=> col("__new_value")))
-      .select((keyCols :+ valueCol).map(col) :+ col("valid_from"): _*)
-      .withColumn("valid_to", asOf)
-      .withColumn("is_current", lit(false))
-    val opened = j
-      .filter(col("__in_batch").isNotNull &&
-        (col("is_current").isNull || !(col(valueCol) <=> col("__new_value"))))
-      .select(keyCols.map(col) :+ col("__new_value").as(valueCol): _*)
-      .withColumn("valid_from", asOf)
-      .withColumn("valid_to", lit(null).cast(validType))
-      .withColumn("is_current", lit(true))
+    val inHistory = col("is_current").isNotNull
+    val changed = col("__in_batch").isNotNull && !(col(valueCol) <=> col("__new_value"))
+    def row(value: Column, from: Column, to: Column, isCurrent: Column): Column = {
+      val byName = Map(valueCol -> value, "valid_from" -> from, "valid_to" -> to,
+        "is_current" -> isCurrent)
+      struct(history.columns.toIndexedSeq.map(c => byName.getOrElse(c, col(c)).as(c)): _*)
+    }
+    val kept = when(inHistory, row(col(valueCol), col("valid_from"),
+      when(changed, asOf).otherwise(col("valid_to")), !changed))
+    val opened = when(col("__in_batch").isNotNull && (!inHistory || changed),
+      row(col("__new_value"), asOf, lit(null).cast(validType), lit(true)))
+    val merged = j.select(explode(array(kept, opened)).as("r"))
+      .filter(col("r").isNotNull).select(col("r.*"))
 
-    closedHistory.unionByName(unchanged).unionByName(closedNow).unionByName(opened)
+    closedHistory.unionByName(merged)
   }
 
   /** Latest value per key as of a cutoff — the point-in-time source state

@@ -1,7 +1,11 @@
 package graft.operators
 
-import graft.functions.{TopKFunctions, VectorFunctions}
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import graft.functions.{MmrKernel, TopKFunctions, VectorFunctions}
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.functions._
 
 /** Approximate-nearest-neighbor search over an embedding column
@@ -83,12 +87,13 @@ object Similarity {
     * pure relevance; ties break to the lower candidate id at every
     * step, so the selection is a pure function of the data.
     *
-    * Plan shape: one lazy plan, no barrier and no build-time job. The
-    * pool is the bounded-heap top-k (|Q|·poolK rows), joined to the
-    * candidate vectors and collected per query; the greedy loop is one
-    * [[graft.functions.MmrKernel]] call per query row (poolK·selectK
-    * cosines in doubles), exploded back to rows. poolK is a constant, so
-    * nothing after the pool scales with the corpus.
+    * Plan shape: one job. The pool is the bounded-heap top-k (|Q|·poolK
+    * rows), joined to the candidate vectors and collected: the query set
+    * is broadcast by contract, and poolK is a constant, so nothing
+    * collected scales with the corpus. The greedy loop is one
+    * [[graft.functions.MmrKernel]] call per query on the driver
+    * (poolK·selectK cosines in doubles), and the result is a local frame
+    * sorted by (query_id, rank).
     */
   def mmrRerank(
       queries: DataFrame, // (qid, qvec)
@@ -97,17 +102,24 @@ object Similarity {
       selectK: Int,
       lambda: Double): DataFrame = {
     require(selectK >= 1 && selectK <= poolK, s"selectK $selectK vs poolK $poolK")
-    VectorFunctions.register(candidates.sparkSession)
-    bruteForceTopK(queries, candidates, poolK)
+    val spark = candidates.sparkSession
+    val pool = bruteForceTopK(queries, candidates, poolK)
       .select(col("query_id").as("qid"), col("neighbor_id").as("cid"),
         col("sim").as("rel"))
       .join(candidates.select(col("cid"), col("cvec")), "cid")
-      .groupBy(col("qid"))
-      .agg(collect_list(struct(col("cid"), col("rel"), col("cvec"))).as("pool"))
-      .select(col("qid"), inline(VectorFunctions.mmrSelect(col("pool"), selectK, lambda)))
-      .select(col("qid").as("query_id"), col("rank"),
-        col("cid").as("neighbor_id"), col("rel"))
-      .orderBy(col("query_id"), col("rank"))
+      .select(col("qid"), col("cid"), col("rel"), col("cvec"))
+      .collect()
+    val picks = pool.groupBy(_.getLong(0)).toSeq.sortBy(_._1).flatMap { case (qid, rows) =>
+      val entries = rows.toSeq.map { r =>
+        require(!r.isNullAt(3), s"mmrRerank: null vector for cid ${r.getLong(1)}")
+        (r.getLong(1), r.getDouble(2), ArrayData.toArrayData(r.getSeq[Float](3).toArray))
+      }
+      MmrKernel.select(entries, selectK, lambda).map { case (rank, cid, rel) =>
+        Row(qid, rank, cid, rel)
+      }
+    }
+    spark.createDataFrame(picks.asJava, StructType.fromDDL(
+      "query_id BIGINT NOT NULL, rank INT NOT NULL, neighbor_id BIGINT NOT NULL, rel DOUBLE NOT NULL"))
   }
 
   /** MIPS at scale: the norm-augmentation reduction to angular LSH
@@ -1405,13 +1417,9 @@ object Similarity {
       scaleBits: Int = 20): DataFrame = {
     val v = prepKmeans(vectors)
     val (ids, mat) = seedCentroids(v, numCentroids)
-    // ≤ numCentroids rows: sorted on the driver, not by a range shuffle
-    val it1 = lloydAgg(v, ids, mat, scaleBits)
-      .select(col("cell"), col("sums")).collect().sortBy(_.getLong(0))
-    val ids2: Seq[Long] = it1.map(_.getLong(0)).toSeq
-    val mat2: Seq[Seq[Float]] =
-      it1.map(_.getSeq[Long](1).map(_.toFloat).toSeq).toSeq
-    explodeCentroids(lloydAgg(v, ids2, mat2, scaleBits), scaleBits)
+    val it1 = lloydState(v, ids, mat, scaleBits)
+    explodeCentroids(lloydAgg(v, it1.map(_._1), it1.map(_._3.map(_.toFloat)), scaleBits),
+      scaleBits)
   }
 
   /** Lloyd to CONVERGENCE (bounded): run up to `maxIters` exact
@@ -1454,10 +1462,7 @@ object Similarity {
         s"without the flag), got $maxIters")
     val v = prepKmeans(vectors)
     val (ids0, mat0) = seedCentroids(v, numCentroids)
-    // ≤ numCentroids rows: sorted on the driver, not by a range shuffle
-    def state(ids: Seq[Long], mat: Seq[Seq[Float]]): Seq[(Long, Long, Seq[Long])] =
-      lloydAgg(v, ids, mat, scaleBits).collect().sortBy(_.getLong(0))
-        .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2).toSeq)).toSeq
+    def state(ids: Seq[Long], mat: Seq[Seq[Float]]) = lloydState(v, ids, mat, scaleBits)
     var cur = state(ids0, mat0)
     var converged = false
     var it = 1
@@ -1473,10 +1478,11 @@ object Similarity {
     val rows = for {
       (cell, n, sums) <- state(cur.map(_._1), cur.map(_._3.map(_.toFloat)))
       (sum, pos) <- sums.zipWithIndex
-    } yield (cell, pos + 1, n, sum, sum.toDouble / Math.multiplyExact(n, scale).toDouble,
+    } yield Row(cell, pos + 1, n, sum, sum.toDouble / Math.multiplyExact(n, scale).toDouble,
       converged)
-    import v.sparkSession.implicits._
-    rows.toDF("cell", "dim", "n_members", "comp_sum", "centroid_fp", "converged")
+    v.sparkSession.createDataFrame(rows.asJava, StructType.fromDDL(
+      "cell BIGINT NOT NULL, dim INT NOT NULL, n_members BIGINT NOT NULL, " +
+        "comp_sum BIGINT NOT NULL, centroid_fp DOUBLE NOT NULL, converged BOOLEAN NOT NULL"))
   }
 
   private def prepKmeans(vectors: DataFrame): DataFrame = {
@@ -1495,7 +1501,12 @@ object Similarity {
     * per-cell fixed-point sum aggregate — one Lloyd half-step. The
     * routing runs in the scan's own stage, so the only shuffle is the
     * |cells|-row partial aggregate: no job or class per iteration moves
-    * the vectors themselves.
+    * the vectors themselves. Every vector gets a constant 1 appended, so
+    * the last component of a cell's `sums` is its member count times
+    * 2^scaleBits (exactly: floor(1·2^scaleBits) is 2^scaleBits). The
+    * aggregate is then `vec_fixedpoint_sum` alone, with no `count` beside
+    * it: the buffer projections of an aggregate of imperative functions
+    * only are one generated class that every such aggregate shares.
     */
   private def lloydAgg(v: DataFrame, ids: Seq[Long], mat: Seq[Seq[Float]],
       scaleBits: Int): DataFrame = {
@@ -1503,15 +1514,28 @@ object Similarity {
     val idsLit = typedlit(ids)
     v.withColumn("cpos", element_at(
         VectorFunctions.ivfRoute(col("vec"), typedlit(mat), 1), 1))
-      .select(element_at(idsLit, col("cpos") + 1).as("cell"), col("vec"))
+      .select(element_at(idsLit, col("cpos") + 1).as("cell"),
+        concat(col("vec"), array(lit(1.0f))).as("vec"))
       .groupBy(col("cell"))
-      .agg(count(lit(1)).as("n_members"),
-        VectorAggFunctions.vecFixedPointSum(col("vec"), scaleBits).as("sums"))
+      .agg(VectorAggFunctions.vecFixedPointSum(col("vec"), scaleBits).as("sums"))
   }
 
+  /** [[lloydAgg]] collected: (cell, member count, component sums) per
+    * cell, at most numCentroids rows, sorted on the driver rather than by
+    * a range shuffle.
+    */
+  private def lloydState(v: DataFrame, ids: Seq[Long], mat: Seq[Seq[Float]],
+      scaleBits: Int): Seq[(Long, Long, Seq[Long])] =
+    lloydAgg(v, ids, mat, scaleBits).collect().sortBy(_.getLong(0)).map { r =>
+      val sums = r.getSeq[Long](1)
+      (r.getLong(0), sums.last >> scaleBits, sums.init.toSeq)
+    }.toSeq
+
   private def explodeCentroids(agg: DataFrame, scaleBits: Int): DataFrame =
-    agg.select(col("cell"), col("n_members"),
-        posexplode(col("sums")).as(Seq("pos", "comp_sum")))
+    agg.select(col("cell"),
+        shiftright(element_at(col("sums"), -1), scaleBits).as("n_members"),
+        posexplode(slice(col("sums"), lit(1), size(col("sums")) - 1))
+          .as(Seq("pos", "comp_sum")))
       .select(col("cell"),
         (col("pos") + 1).cast("int").as("dim"),
         col("n_members"), col("comp_sum"),

@@ -1,10 +1,13 @@
 package graft.queries
 
+import scala.jdk.CollectionConverters._
+
 import graft.Tables
 import graft.functions.TextFunctions._
 import graft.operators.{Dedup, Similarity}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType}
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
 
 /** LLM-training-data pipeline operators (north-star) as oracle-checked
   * queries over the driver's `documents` / `embeddings` tables:
@@ -2879,78 +2882,56 @@ object PipelineQueries extends QueryModule {
     //    algorithm): each round counts adjacent symbol pairs over the
     //    weighted word-type table, collects the argmax pair (ties to the
     //    lexicographically smallest — a total order), and greedily
-    //    merges it left-to-right inside every word via an
-    //    array-accumulator fold (the same engine-parity fold class as
-    //    window_holt_linear; string state, no floats at all). Emits the
+    //    merges it left-to-right inside every word (the oracle's
+    //    list_reduce fold; string state, no floats at all). Emits the
     //    learned merge per round plus the corpus token count after it —
     //    the compression trajectory. A round with no pair left ends the
     //    loop. 100 TB: the corpus collapses to the vocabulary in the
-    //    FIRST aggregate; the symbol table is checkpointed once and after
-    //    each merge, and the only driver traffic is two collected rows
-    //    per round. Every round runs the same two plans over the same
-    //    schema: the seed goes through the merge fold too (with a pair no
-    //    symbol equals), the merge pair reaches the fold only inside its
-    //    lambda (string literals are referenced, not inlined, in
-    //    generated code), and one count per round yields both the best
-    //    pair and the token total of the table it reads — so rounds 2+
-    //    compile no new class. The result is one plan: the last table's
-    //    token total beside the collected rounds. ─────────────────────────
+    //    FIRST aggregate, which is checkpointed once; the only driver
+    //    traffic is one collected row per round. Every round runs the
+    //    same plan: the `bpe_pairs` kernel splits each word type, applies
+    //    the merges learned so far (an array literal, referenced by the
+    //    generated code) and emits its adjacent pairs weighted c_w plus
+    //    one (null, null) row weighted c_w·|syms|. Grouped, the null
+    //    group is the table's token total and sorts first, the best pair
+    //    second, so one count per round yields both the best pair and the
+    //    token total after the previous merge; one more count after the
+    //    last merge yields its total. Rounds 2+ and the result compile no
+    //    new class: the result is a local frame of the collected rounds.
     QueryDef("text_bpe_train3",
       (s, dir) => {
         import s.implicits._
+        graft.functions.TextHashFunctions.register(s)
         val types = Tables.load(s, dir, "documents")
           .select(explode(tokens($"text")).as("w"))
           .filter($"w".rlike("^[a-z]+$") && length($"w") >= 2)
           .groupBy($"w").agg(count(lit(1)).as("c_w"))
-        def merge(syms: org.apache.spark.sql.DataFrame, ma: String, mb: String) =
-          syms.select($"c_w", aggregate(
-              slice($"syms", lit(2), greatest(size($"syms") - 1, lit(0))),
-              array(element_at($"syms", 1)),
-              (acc, x) => when(
-                element_at(acc, -1) === lit(ma) && x === lit(mb),
-                concat(slice(acc, lit(1), size(acc) - 1), array(lit(ma + mb))))
-                .otherwise(concat(acc, array(x)))).as("syms"))
-            .localCheckpoint()
-        // Per word, one row per adjacent pair weighted c_w plus one
-        // (null, null) row weighted c_w·|syms|: grouped, the null group is
-        // the table's token total and sorts first, the best pair second.
-        def pairCounts(syms: org.apache.spark.sql.DataFrame) = {
-          val n = size($"syms")
-          syms.select(explode(transform(sequence(lit(1), n), i =>
-              when(i < n, struct(element_at($"syms", i).as("a"),
-                element_at($"syms", i + 1).as("b"), $"c_w".as("w")))
-                .otherwise(struct(lit(null).cast("string").as("a"),
-                  lit(null).cast("string").as("b"), ($"c_w" * n).as("w"))))).as("p"))
+          .localCheckpoint()
+        def pairCounts(merges: Seq[(String, String)]) =
+          types.select(explode(graft.functions.TextHashFunctions.bpePairs(
+              $"w", $"c_w", typedlit(merges))).as("p"))
             .groupBy($"p.a".as("a"), $"p.b".as("b"))
             .agg(sum($"p.w").as("n"))
             .orderBy($"a".isNotNull, $"n".desc, $"a", $"b").limit(2)
             .collect()
-        }
-        var syms = merge(types.select($"c_w",
-          transform(sequence(lit(1), length($"w")),
-            i => $"w".substr(i, lit(1))).as("syms")), "", "")
         // (round, merge_a, merge_b, pair_count, tokens after the merge):
         // the next round's count fills in the token total
         val rounds = scala.collection.mutable.ArrayBuffer
-          .empty[(Int, String, String, Long, Option[Long])]
+          .empty[(Int, String, String, Long, Long)]
         var done = false
-        while (rounds.size < 3 && !done) {
-          val counted = pairCounts(syms)
+        while (!done) {
+          val counted = pairCounts(rounds.map(r => (r._2, r._3)).toSeq)
+          if (rounds.nonEmpty)
+            rounds(rounds.size - 1) = rounds.last.copy(_5 = counted.head.getLong(2))
           counted.find(!_.isNullAt(0)) match {
-            case None => done = true
-            case Some(b) =>
-              if (rounds.nonEmpty)
-                rounds(rounds.size - 1) = rounds.last.copy(_5 = Some(counted.head.getLong(2)))
-              rounds += ((rounds.size + 1, b.getString(0), b.getString(1), b.getLong(2), None))
-              syms = merge(syms, b.getString(0), b.getString(1))
+            case Some(b) if rounds.size < 3 =>
+              rounds += ((rounds.size + 1, b.getString(0), b.getString(1), b.getLong(2), 0L))
+            case _ => done = true
           }
         }
-        // one frame: the collected rounds (an array literal, referenced
-        // by the generated code) beside the last table's token total
-        syms.agg(sum($"c_w" * size($"syms")).as("last"))
-          .select(inline(typedlit(rounds.toSeq)), $"last")
-          .select($"_1".as("round"), $"_2".as("merge_a"), $"_3".as("merge_b"),
-            $"_4".as("pair_count"), coalesce($"_5", $"last").as("corpus_tokens_after"))
+        s.createDataFrame(rounds.map(Row.fromTuple).asJava, StructType.fromDDL(
+          "round INT NOT NULL, merge_a STRING, merge_b STRING, pair_count BIGINT NOT NULL, " +
+            "corpus_tokens_after BIGINT NOT NULL"))
       },
       Some("""WITH toks AS (SELECT unnest(string_split_regex(lower(trim(text)), '\s+')) AS w
           FROM documents),

@@ -1,7 +1,9 @@
 package graft.queries
 
+import scala.jdk.CollectionConverters._
+
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import java.sql.Timestamp
@@ -7534,15 +7536,12 @@ object RelationalQueries extends QueryModule {
     //    feature): 3 synchronous min-propagation rounds (the
     //    graph_pagerank_fixed bounded-iteration contract — a fixed round
     //    count is what keeps a data-dependent frontier oracle-checkable),
-    //    each round one |edges| ⋈ |reached| broadcast hash join + a min
-    //    hash aggregate over the distinct edge set, checkpointed once.
-    //    The reached set is keyed by nation, so it holds at most one row
-    //    per nation by construction: each round collects the relaxed
-    //    hops, folds them into that set on the driver, and feeds it back
-    //    as a broadcast local frame of the same schema, so every round
-    //    runs the same plan and compiles no new class. Distances are
-    //    pure integers; unreached nodes are absent by construction in
-    //    both engines. ──────────────────────────────────────────────────
+    //    over the distinct edge set. `src` and `dst` are nation keys, so
+    //    that set holds at most nations² rows by construction: it is
+    //    collected once and the rounds relax it on the driver, so the
+    //    query runs one job and its rounds add no plan or class.
+    //    Distances are pure integers; unreached nodes are absent by
+    //    construction in both engines. ──────────────────────────────────
     QueryDef("graph_shortest_hops",
       (s, dir) => {
         import s.implicits._
@@ -7556,17 +7555,17 @@ object RelationalQueries extends QueryModule {
           .select($"c_nationkey".cast("long").as("src"),
             $"s_nationkey".cast("long").as("dst"))
           .distinct()
-          .localCheckpoint()
+          .as[(Long, Long)].collect()
         var dist = Map(0L -> 0L)
         for (_ <- 1 to 3) {
-          edges.join(broadcast(dist.toSeq.toDF("src", "hops")), "src")
-            .groupBy($"dst").agg(min($"hops").as("hops"))
-            .as[(Long, Long)].collect()
-            .foreach { case (node, hops) =>
-              if (dist.get(node).forall(_ > hops + 1)) dist += node -> (hops + 1)
-            }
+          // synchronous: every relaxation reads the previous round's set
+          val relaxed = edges.flatMap { case (src, dst) => dist.get(src).map(h => dst -> (h + 1)) }
+          dist = relaxed.foldLeft(dist) { case (d, (node, hops)) =>
+            if (d.get(node).forall(_ > hops)) d + (node -> hops) else d
+          }
         }
-        dist.toSeq.sorted.toDF("node", "hops")
+        s.createDataFrame(dist.toSeq.sorted.map { case (n, h) => Row(n, h) }.asJava,
+          StructType.fromDDL("node BIGINT NOT NULL, hops BIGINT NOT NULL"))
       },
       Some("""WITH e AS (SELECT DISTINCT CAST(c.c_nationkey AS BIGINT) AS src,
             CAST(s.s_nationkey AS BIGINT) AS dst

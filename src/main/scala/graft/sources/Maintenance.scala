@@ -58,17 +58,22 @@ object Maintenance {
           .write.partitionBy(partCols: _*)
       else src.repartition(nFiles).write
     writer.mode("overwrite").parquet(stage.toString)
+    swapIn(stage, dir)
+    CompactStats(before.size, parquetFiles(dir).size, totalBytes)
+  }
 
-    // Swap via two atomic renames so a crash never strands the table with
-    // no live copy: move the old dir aside, move the staged dir into
-    // place, then drop the old copy. A reader can race only into the
-    // instant between the two renames — never into a half-deleted tree.
-    val old = Paths.get(path + "__old")
+  /** Replaces the table directory `dir` with the fully written `stage`
+    * directory by two atomic renames, so a crash never strands the table
+    * with no live copy: move the old dir aside, move the staged dir into
+    * place, then drop the old copy. A reader can race only into the
+    * instant between the two renames — never into a half-deleted tree.
+    */
+  def swapIn(stage: Path, dir: Path): Unit = {
+    val old = Paths.get(dir.toString + "__old")
     if (Files.exists(old)) deleteTree(old)
     Files.move(dir, old)
     Files.move(stage, dir)
     deleteTree(old)
-    CompactStats(before.size, parquetFiles(dir).size, totalBytes)
   }
 
   final case class VacuumStats(

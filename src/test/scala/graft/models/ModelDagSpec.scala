@@ -32,6 +32,23 @@ class ModelDagSpec extends AnyFunSuite with TempDirs {
     assertThrows[IllegalArgumentException](ModelDag.topoSort(Seq(c)))
   }
 
+  test("an incremental merge whose build fails leaves the previous version readable") {
+    import org.apache.spark.sql.functions._
+    val wh = tempDir("inc_fail").toString
+    def model(build: org.apache.spark.sql.SparkSession => org.apache.spark.sql.DataFrame) =
+      Model("inc_t", Nil, Materialization.Incremental(Seq("k")), build)
+    ModelDag.run(spark, Seq(model(s => s.range(1, 4).toDF("k"))), Some(wh))
+    // the new slice fails while the merged table is being written
+    val failing = model(s => s.range(3, 6).toDF("k")
+      .withColumn("k", when(col("k") === 5, raise_error(lit("boom"))).otherwise(col("k"))))
+    intercept[Exception](ModelDag.run(spark, Seq(failing), Some(wh)))
+    val kept = spark.read.parquet(s"$wh/inc_t").collect().map(_.getLong(0)).sorted.toSeq
+    assert(kept == Seq(1L, 2L, 3L))
+    // and the next good run merges onto that version
+    val out = ModelDag.run(spark, Seq(model(s => s.range(3, 6).toDF("k"))), Some(wh))
+    assert(out("inc_t").collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L, 3L, 4L, 5L))
+  }
+
   test("table materialization persists to the warehouse dir") {
     val dir = tempDir("wh").toString
     val out = ModelDag.run(spark, ExampleModels.all, warehouseDir = Some(dir))

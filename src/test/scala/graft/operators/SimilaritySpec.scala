@@ -801,7 +801,7 @@ class SimilaritySpec extends AnyFunSuite {
       lambda: Double): Map[Long, Seq[(Long, Double)]] = {
     val rows = Similarity.mmrRerank(asQ(df.filter($"vec_id".isin(qids: _*))), asC(df),
       poolK, selectK, lambda).collect()
-    // the plan orders by (query_id, rank) and ranks are 1..n per query
+    // rows come sorted by (query_id, rank) and ranks are 1..n per query
     assert(rows.map(r => (r.getLong(0), r.getInt(1))).toSeq ==
       rows.groupBy(_.getLong(0)).toSeq.sortBy(_._1)
         .flatMap { case (q, rs) => rs.indices.map(i => (q, i + 1)) })

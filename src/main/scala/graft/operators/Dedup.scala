@@ -40,28 +40,6 @@ object Dedup {
       .groupBy(col("fp"))
       .agg(count(lit(1)).as("n_copies"), min(col(idCol)).as("canonical_id"))
 
-  /** Exact-dup groups with QUALITY-aware canonical selection: per
-    * fingerprint group keep the doc maximizing `qualityCol` (ties →
-    * min id) instead of blindly the min id — real curation keeps the
-    * best copy (e.g. the highest Gopher pass count), not the first
-    * crawled. Same single hash aggregate as [[exactGroups]]: the argmax
-    * is `max(struct(quality, −id))`, a partial-mergeable aggregate, so
-    * no window and no second shuffle.
-    */
-  def exactGroupsBestQuality(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      qualityCol: String): DataFrame =
-    docs.select(col(idCol), fingerprint(col(textCol)).as("fp"), col(qualityCol))
-      .groupBy(col("fp"))
-      .agg(count(lit(1)).as("n_copies"),
-        max(struct(col(qualityCol).as("q"), (-col(idCol)).as("negid")))
-          .as("best"))
-      .select(col("fp"), col("n_copies"),
-        col("best.q").as("canonical_quality"),
-        (-col("best.negid")).as("canonical_id"))
-
   /** The apply step: corpus minus exact duplicates, keeping the
     * minimum-id (canonical) doc of each fingerprint group — a
     * deterministic `dropDuplicates`. One aggregate + one semi join.

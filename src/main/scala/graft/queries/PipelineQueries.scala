@@ -6,7 +6,7 @@ import graft.Tables
 import graft.functions.TextFunctions._
 import graft.operators.{Dedup, Similarity}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
 
 /** LLM-training-data pipeline operators (north-star) as oracle-checked
@@ -44,6 +44,13 @@ object PipelineQueries extends QueryModule {
   private def scratchDir(tag: String, dataDir: String): String =
     QueryScratch.dir(
       tag + "_" + Integer.toHexString(dataDir.hashCode)).toString
+
+  /** The embeddings search split: the first 10 vectors are the queries
+    * (qid, qvec), every vector is a candidate (cid, cvec).
+    */
+  private def querySplit(emb: DataFrame): (DataFrame, DataFrame) =
+    (emb.filter(col("vec_id") < 10).select(col("vec_id").as("qid"), col("embedding").as("qvec")),
+      emb.select(col("vec_id").as("cid"), col("embedding").as("cvec")))
 
   /** Oracle for the seeded-IVF top-k search: replays centroid pick
     * (lowest-64 ids), cosine-argmax assignment (ties → lower cell),
@@ -1135,11 +1142,7 @@ object PipelineQueries extends QueryModule {
     // ── similarity search: exact top-k per query (bounded-heap agg) ─────
     QueryDef("sim_topk_brute",
       (s, dir) => {
-        val emb = Tables.load(s, dir, "embeddings")
-        val queries = emb.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-        val candidates = emb
-          .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+        val (queries, candidates) = querySplit(Tables.load(s, dir, "embeddings"))
         Similarity.bruteForceTopK(queries, candidates, k = 5)
           .withColumn("rank", col("rank").cast(IntegerType))
           .orderBy("query_id", "rank")
@@ -1160,8 +1163,7 @@ object PipelineQueries extends QueryModule {
     QueryDef("sim_topk_filtered",
       (s, dir) => {
         val emb = Tables.load(s, dir, "embeddings")
-        val queries = emb.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
+        val queries = querySplit(emb)._1
         val candidates = emb.filter(col("label") === 1)
           .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
         Similarity.bruteForceTopK(queries, candidates, k = 5)
@@ -1189,11 +1191,7 @@ object PipelineQueries extends QueryModule {
     //    rows ≤ constant after the top-k heap). ────────────────────────
     QueryDef("sim_rerank_mmr",
       (s, dir) => {
-        val emb = Tables.load(s, dir, "embeddings")
-        val queries = emb.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-        val candidates = emb
-          .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+        val (queries, candidates) = querySplit(Tables.load(s, dir, "embeddings"))
         Similarity.mmrRerank(queries, candidates,
           poolK = 8, selectK = 4, lambda = 0.75)
       },
@@ -1260,11 +1258,7 @@ object PipelineQueries extends QueryModule {
     //    scores are bit-identical (verified like the cosine identity). ──
     QueryDef("sim_topk_mips",
       (s, dir) => {
-        val emb = Tables.load(s, dir, "embeddings")
-        val queries = emb.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-        val candidates = emb
-          .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+        val (queries, candidates) = querySplit(Tables.load(s, dir, "embeddings"))
         Similarity.mipsTopK(queries, candidates, k = 5)
           .withColumn("rank", col("rank").cast(IntegerType))
           .orderBy("query_id", "rank")
@@ -1289,11 +1283,7 @@ object PipelineQueries extends QueryModule {
     //    multi-probe hamming ≤2 over 8 tables, dot-product ranking. ────
     QueryDef("sim_topk_mips_norm",
       (s, dir) => {
-        val emb = Tables.load(s, dir, "embeddings")
-        val queries = emb.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-        val candidates = emb
-          .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+        val (queries, candidates) = querySplit(Tables.load(s, dir, "embeddings"))
         Similarity.mipsLshTopK(queries, candidates, k = 5,
             bits = 8, tables = 12, probeHamming = 2)
           .withColumn("rank", col("rank").cast(IntegerType))
@@ -1376,12 +1366,8 @@ object PipelineQueries extends QueryModule {
     //    kernels, ties break to the lower id in both engines. ───────────
     QueryDef("sim_topk_sq8",
       (s, dir) => {
-        val emb = Tables.load(s, dir, "embeddings")
-        Similarity.sq8TopKRerank(
-            emb.filter(col("vec_id") < 10)
-              .select(col("vec_id").as("qid"), col("embedding").as("qvec")),
-            emb.select(col("vec_id").as("cid"), col("embedding").as("cvec")),
-            k = 5, rerank = 50)
+        val (queries, candidates) = querySplit(Tables.load(s, dir, "embeddings"))
+        Similarity.sq8TopKRerank(queries, candidates, k = 5, rerank = 50)
           .withColumn("rank", col("rank").cast(IntegerType))
           .orderBy("query_id", "rank")
       },
@@ -1398,11 +1384,7 @@ object PipelineQueries extends QueryModule {
     //    SQ8 twin of sim_index_probe / dedup_signature_index). ──────────
     QueryDef("sim_index_sq8",
       (s, dir) => {
-        val emb = Tables.load(s, dir, "embeddings")
-        val queries = emb.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-        val candidates = emb
-          .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+        val (queries, candidates) = querySplit(Tables.load(s, dir, "embeddings"))
         val root = scratchDir("sq8", dir)
         Similarity.sq8Index(candidates)
           .write.mode("overwrite").parquet(root + "/codes")
@@ -1421,11 +1403,7 @@ object PipelineQueries extends QueryModule {
     //    duplicate matches across tables collapse (heap ↔ one SQL row). ─
     QueryDef("sim_topk_lsh",
       (s, dir) => {
-        val emb = Tables.load(s, dir, "embeddings")
-        val queries = emb.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-        val candidates = emb
-          .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+        val (queries, candidates) = querySplit(Tables.load(s, dir, "embeddings"))
         // bits=10/L=8/hamming≤2: the ScalingSmokeSpec-validated operating
         // point — holds recall ≥0.9 at 10× corpus even when true top-k
         // are mid-similarity chance neighbors (see Similarity.lshTopK doc)
@@ -1466,11 +1444,7 @@ object PipelineQueries extends QueryModule {
     //    (SimilaritySpec bounds its recall). ─────────────────────────────
     QueryDef("sim_topk_ivf",
       (s, dir) => {
-        val emb = Tables.load(s, dir, "embeddings")
-        val queries = emb.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-        val candidates = emb
-          .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+        val (queries, candidates) = querySplit(Tables.load(s, dir, "embeddings"))
         // nc=64/nProbe=24: ScalingSmokeSpec's sf1 sweep point — on an
         // unclustered corpus IVF recall tracks the scanned fraction
         // (nProbe/nc), and 24/64 holds ≥0.9 at 10×; fewer, coarser cells
@@ -1491,11 +1465,7 @@ object PipelineQueries extends QueryModule {
     //    the ANN twin of dedup_signature_index. ─────────────────────────
     QueryDef("sim_index_probe",
       (s, dir) => {
-        val emb = Tables.load(s, dir, "embeddings")
-        val queries = emb.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-        val candidates = emb
-          .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+        val (queries, candidates) = querySplit(Tables.load(s, dir, "embeddings"))
         val root = scratchDir("ivf", dir)
         val (centroids, assignments) = Similarity.ivfIndex(candidates, numCentroids = 64)
         centroids.write.mode("overwrite").parquet(root + "/centroids")
@@ -1611,11 +1581,7 @@ object PipelineQueries extends QueryModule {
     //    ranking bit-for-bit. ──────────────────────────────────────────
     QueryDef("sim_topk_pq",
       (s, dir) => {
-        val emb = Tables.load(s, dir, "embeddings")
-        val queries = emb.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-        val candidates = emb
-          .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+        val (queries, candidates) = querySplit(Tables.load(s, dir, "embeddings"))
         Similarity.pqTopKSeeded(queries, candidates, k = 5, m = 4, ksub = 16)
           .withColumn("rank", col("rank").cast(IntegerType))
           .orderBy("query_id", "rank")
@@ -1631,11 +1597,7 @@ object PipelineQueries extends QueryModule {
     //    (the PQ twin of sim_index_probe). ─────────────────────────────
     QueryDef("sim_index_pq",
       (s, dir) => {
-        val emb = Tables.load(s, dir, "embeddings")
-        val queries = emb.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-        val candidates = emb
-          .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+        val (queries, candidates) = querySplit(Tables.load(s, dir, "embeddings"))
         val root = scratchDir("pq", dir)
         val (seeds, codes) = Similarity.pqIndex(candidates, m = 4, ksub = 16)
         seeds.write.mode("overwrite").parquet(root + "/seeds")
@@ -1657,11 +1619,7 @@ object PipelineQueries extends QueryModule {
     //    bucket-pruned scale path (recall pinned in SimilaritySpec). ───
     QueryDef("sim_range_search",
       (s, dir) => {
-        val emb = Tables.load(s, dir, "embeddings")
-        val queries = emb.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-        val candidates = emb
-          .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+        val (queries, candidates) = querySplit(Tables.load(s, dir, "embeddings"))
         Similarity.rangeSearch(queries, candidates, threshold = 0.3)
           .orderBy("query_id", "neighbor_id")
       },
@@ -1682,11 +1640,7 @@ object PipelineQueries extends QueryModule {
     //    oracle replays both stages. ───────────────────────────────────
     QueryDef("sim_topk_pq_rerank",
       (s, dir) => {
-        val emb = Tables.load(s, dir, "embeddings")
-        val queries = emb.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-        val candidates = emb
-          .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+        val (queries, candidates) = querySplit(Tables.load(s, dir, "embeddings"))
         Similarity.pqTopKRerank(queries, candidates, k = 5, rerank = 50,
             m = 4, ksub = 16)
           .withColumn("rank", col("rank").cast(IntegerType))
@@ -1852,11 +1806,7 @@ object PipelineQueries extends QueryModule {
     //    oracle replays both and the fused scoring. ────────────────────
     QueryDef("sim_topk_ivfpq",
       (s, dir) => {
-        val emb = Tables.load(s, dir, "embeddings")
-        val queries = emb.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-        val candidates = emb
-          .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+        val (queries, candidates) = querySplit(Tables.load(s, dir, "embeddings"))
         Similarity.ivfPqTopKSeeded(queries, candidates, k = 5,
             numCentroids = 64, nProbe = 24, m = 4, ksub = 16)
           .withColumn("rank", col("rank").cast(IntegerType))
@@ -1914,11 +1864,7 @@ object PipelineQueries extends QueryModule {
     //    the fused two-stage. ───────────────────────────────────────────
     QueryDef("sim_topk_ivfsq8",
       (s, dir) => {
-        val emb = Tables.load(s, dir, "embeddings")
-        val queries = emb.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-        val candidates = emb
-          .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+        val (queries, candidates) = querySplit(Tables.load(s, dir, "embeddings"))
         Similarity.ivfSq8TopKSeeded(queries, candidates, k = 5,
             numCentroids = 64, nProbe = 24, rerank = 50)
           .withColumn("rank", col("rank").cast(IntegerType))
@@ -1941,11 +1887,7 @@ object PipelineQueries extends QueryModule {
     //    the driver proves index-probe ≡ recompute every round. ─────────
     QueryDef("sim_index_ivfsq8",
       (s, dir) => {
-        val emb = Tables.load(s, dir, "embeddings")
-        val queries = emb.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-        val candidates = emb
-          .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+        val (queries, candidates) = querySplit(Tables.load(s, dir, "embeddings"))
         val root = scratchDir("ivfsq8", dir)
         val (centroids, fused) = Similarity.ivfSq8Index(candidates, numCentroids = 64)
         centroids.write.mode("overwrite").parquet(root + "/centroids")
@@ -6794,11 +6736,7 @@ object PipelineQueries extends QueryModule {
         import s.implicits._
         graft.functions.VectorFunctions.register(s)
         import org.apache.spark.sql.expressions.Window
-        val emb = Tables.load(s, dir, "embeddings")
-        val queries = emb.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-        val candidates = emb
-          .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+        val (queries, candidates) = querySplit(Tables.load(s, dir, "embeddings"))
         val (centroids, assign) = Similarity.ivfIndex(candidates, 64)
         val wProbe = Window.partitionBy($"qid")
           .orderBy($"psim".desc, $"cell_id")
@@ -7998,10 +7936,7 @@ object PipelineQueries extends QueryModule {
     QueryDef("sim_recall_eval",
       (s, dir) => {
         import s.implicits._
-        val emb = Tables.load(s, dir, "embeddings")
-        val queries = emb.filter($"vec_id" < 10)
-          .select($"vec_id".as("qid"), $"embedding".as("qvec"))
-        val candidates = emb.select($"vec_id".as("cid"), $"embedding".as("cvec"))
+        val (queries, candidates) = querySplit(Tables.load(s, dir, "embeddings"))
         val ivf = Similarity.ivfTopKSeeded(queries, candidates, k = 5,
             numCentroids = 64, nProbe = 8)
           .select($"query_id", $"neighbor_id", lit(1L).as("hit"))
@@ -8351,10 +8286,7 @@ object PipelineQueries extends QueryModule {
     QueryDef("sim_index_shadow_ab",
       (s, dir) => {
         import s.implicits._
-        val emb = Tables.load(s, dir, "embeddings")
-        val queries = emb.filter($"vec_id" < 10)
-          .select($"vec_id".as("qid"), $"embedding".as("qvec"))
-        val candidates = emb.select($"vec_id".as("cid"), $"embedding".as("cvec"))
+        val (queries, candidates) = querySplit(Tables.load(s, dir, "embeddings"))
         val a = Similarity.ivfTopKSeeded(queries, candidates, k = 5,
             numCentroids = 64, nProbe = 8)
           .select($"query_id", $"neighbor_id", $"rank".as("ra"))

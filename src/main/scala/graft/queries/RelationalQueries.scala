@@ -1,9 +1,8 @@
 package graft.queries
 
-import scala.jdk.CollectionConverters._
-
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import graft.operators.Graph
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import java.sql.Timestamp
@@ -36,76 +35,59 @@ object RelationalQueries extends QueryModule {
   // Returned PRE-distinct so callers that sparsify (doulion's md5 coin)
   // can filter before paying the dedup shuffle.
   private def copurchasePairsRaw(s: SparkSession, dir: String): DataFrame =
-    Tables.load(s, dir, "lineitem")
+    Graph.sortedPairs(Tables.load(s, dir, "lineitem")
       .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-      .groupBy(col("o")).agg(sort_array(collect_set(col("p"))).as("ps"))
-      .select(posexplode(col("ps")).as(Seq("i", "a")), col("ps"))
-      .select(col("a"), explode(slice(col("ps"), col("i") + lit(2),
-        size(col("ps")) - col("i") - lit(1))).as("b"))
+      .groupBy(col("o")).agg(sort_array(collect_set(col("p"))).as("ps")), "ps", "a", "b")
 
-  // EDGE-ITERATOR k-truss support of an (a, b) edge set (r11 verdict
-  // item 2 — the wedge-join formulation shuffled ~41 M wedge rows per
-  // pass at sf0.1, 16-30 s/run): support(a,b) = |N(a) ∩ N(b)| directly.
-  // Two |E|-row equi joins co-locate each edge with both endpoints'
-  // sorted adjacency arrays; the intersection size is computed MAP-SIDE
-  // — nothing wedge-sized ever crosses an exchange, and the arithmetic
-  // (Σ_e deg(a)+deg(b) element steps, the same total work as the wedge
-  // enumeration) runs at memory speed inside one stage. Skew bound = max
-  // adjacency array (max degree 97 at sf0.1); a 100 TB hub-heavy graph
-  // pairs this with the degree cap of `graph_ktruss_capped`.
-  private def ktrussSupport(ed: DataFrame): DataFrame = {
-    graft.functions.SketchFunctions.register(ed.sparkSession)
-    val adj = ed.select(col("a").as("n"), col("b").as("m"))
-      .union(ed.select(col("b").as("n"), col("a").as("m")))
-      .groupBy(col("n")).agg(sort_array(collect_list(col("m"))).as("nbrs"))
-    // shuffle_hash on the adjacency side of BOTH joins: under the
-    // default sort-merge plan the SECOND join sorts its left input — the
-    // |E|-row edge⋈adjacency intermediate already carrying one endpoint's
-    // full array (~Σdeg² elements wide) — and that sort is the spill that
-    // killed the sf10 measurement (~70 GB scratch, ENOSPC). Hashing the
-    // SMALL side (|V| adjacency rows) instead lets the wide side stream
-    // unsorted: scratch drops to the hash tables (|V|·deg elements per
-    // partition).
-    ed.join(adj.select(col("n").as("a"), col("nbrs").as("na")).hint("shuffle_hash"), "a")
-      .join(adj.select(col("n").as("b"), col("nbrs").as("nb")).hint("shuffle_hash"), "b")
-      .select(col("a"), col("b"),
-        // native two-pointer merge count over the SORTED adjacency arrays
-        // — array_intersect pays a boxed hash set + a materialized
-        // intersection array per edge
-        graft.functions.SketchFunctions
-          .sortedIntersectCount(col("na"), col("nb")).as("sup"))
+  // The distinct co-purchase edge set of the k-truss family, checkpointed
+  // once: every k-truss pass reads it, and the capped forms release it.
+  private def copurchaseEdges(s: SparkSession, dir: String): DataFrame =
+    copurchasePairsRaw(s, dir).distinct().localCheckpoint()
+
+  // The nation-trade graph's fact join, written once for the graph family
+  // and agg_gravity_model: every lineitem with its buyer's nation
+  // (c_nationkey) and its supplier's nation (s_nationkey). One
+  // lineitem⋈orders shuffle join, both nation dimensions broadcast.
+  private def nationTradePairs(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    val li = Tables.load(s, dir, "lineitem").select($"l_orderkey", $"l_suppkey")
+    val o = Tables.load(s, dir, "orders").select($"o_orderkey", $"o_custkey")
+    val c = Tables.load(s, dir, "customer").select($"c_custkey", $"c_nationkey")
+    val sup = Tables.load(s, dir, "supplier").select($"s_suppkey", $"s_nationkey")
+    li.join(o, $"l_orderkey" === $"o_orderkey")
+      .join(broadcast(c), $"o_custkey" === $"c_custkey")
+      .join(broadcast(sup), $"l_suppkey" === $"s_suppkey")
   }
 
-  // Two-round k-truss peel at k−2 = 12 with per-round stats (round,
-  // n_edges, min_support, max_support). ONE support pass per level: its
-  // checkpointed result serves both the round's stats and the next peel
-  // (a stats+peel split would run the support pass twice per level).
-  private def ktrussPeelStats(edges: DataFrame): DataFrame = {
-    def stats(sup: DataFrame, round: Long): DataFrame =
-      sup.agg(count(lit(1)).as("n_edges"),
-        min(col("sup")).as("min_support"), max(col("sup")).as("max_support"))
-        .select(lit(round).as("round"), col("n_edges"), col("min_support"),
-          col("max_support"))
-    val sup0 = ktrussSupport(edges).localCheckpoint()
-    val sup1 = ktrussSupport(sup0.filter(col("sup") >= 12L).select(col("a"), col("b")))
-      .localCheckpoint()
-    val sup2 = ktrussSupport(sup1.filter(col("sup") >= 12L).select(col("a"), col("b")))
-      .localCheckpoint()
-    stats(sup0, 0L).unionByName(stats(sup1, 1L))
-      .unionByName(stats(sup2, 2L))
-      .orderBy(col("round"))
-  }
+  // Directed weighted nation-trade edges: (buyer nation, supplier nation,
+  // lineitem count) as (src, dst, w).
+  private def nationTradeFlows(s: SparkSession, dir: String): DataFrame =
+    nationTradePairs(s, dir)
+      .groupBy(col("c_nationkey").as("src"), col("s_nationkey").as("dst"))
+      .agg(count(lit(1)).as("w"))
 
-  // Frees exactly the blocks a `localCheckpoint()` pinned: the checkpointed
-  // frame's plan root is the LogicalRDD over the checkpointed RDD. Other
-  // frames' checkpoints, including those of queries running concurrently
-  // on the same session, stay untouched.
-  private[queries] def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.logical match {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = true)
-      case p => throw new IllegalArgumentException(
-        s"not a checkpointed frame (plan root ${p.nodeName})")
-    }
+  // Undirected unweighted nation-trade edges without self-loops, each
+  // once as (a < b): the triangle queries' oriented edge set.
+  private def nationTradeEdges(s: SparkSession, dir: String): DataFrame =
+    nationTradePairs(s, dir)
+      .filter(col("c_nationkey") =!= col("s_nationkey"))
+      .select(least(col("c_nationkey"), col("s_nationkey")).as("a"),
+        greatest(col("c_nationkey"), col("s_nationkey")).as("b"))
+      .distinct()
+
+  private def nations(s: SparkSession, dir: String): DataFrame =
+    Tables.load(s, dir, "nation").select(col("n_nationkey").as("node"))
+
+  private def orderLines(s: SparkSession, dir: String): DataFrame =
+    Tables.load(s, dir, "orders")
+      .join(Tables.load(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"))
+
+  // The customer–supplier trade graph with parity-disjoint node ids
+  // (cust·2, supp·2 + 1), each edge once as (a, b).
+  private def custSuppEdges(s: SparkSession, dir: String): DataFrame =
+    orderLines(s, dir)
+      .select((col("o_custkey") * 2).as("a"), (col("l_suppkey") * 2 + 1).as("b"))
+      .distinct()
 
   // One tuned clone per parent session for join_bloom_pruned, not one
   // per build: a fresh SessionState each call re-registers functions and
@@ -348,19 +330,11 @@ object RelationalQueries extends QueryModule {
     * (the `graph_label_propagation` construction, factored so
     * `graph_community_modularity` scores the SAME partition it
     * registers): returns (undirected weighted edge list with both
-    * directions stored, final (node, lbl) frame). Synchronous rounds,
-    * ties to the smallest label via `max(struct(wsum, −lbl))` — the
-    * fixpoint trajectory is a pure function of the graph.
+    * directions stored, final (node, lbl) frame).
     */
   private def nationTradeCommunities(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     import s.implicits._
-    val li = Tables.load(s, dir, "lineitem").select($"l_orderkey", $"l_suppkey")
-    val o = Tables.load(s, dir, "orders").select($"o_orderkey", $"o_custkey")
-    val c = Tables.load(s, dir, "customer").select($"c_custkey", $"c_nationkey")
-    val sup = Tables.load(s, dir, "supplier").select($"s_suppkey", $"s_nationkey")
-    val dir0 = li.join(o, $"l_orderkey" === $"o_orderkey")
-      .join(broadcast(c), $"o_custkey" === $"c_custkey")
-      .join(broadcast(sup), $"l_suppkey" === $"s_suppkey")
+    val dir0 = nationTradePairs(s, dir)
       .filter($"c_nationkey" =!= $"s_nationkey")
       .groupBy($"c_nationkey".as("a"), $"s_nationkey".as("b"))
       .agg(count(lit(1)).as("w"))
@@ -371,26 +345,10 @@ object RelationalQueries extends QueryModule {
     // re-ran the lineitem⋈orders⋈customer⋈supplier rollup 162 scans deep
     // (3,315 plan lines). One localCheckpoint makes the 4-table join run
     // once per query; everything downstream is nation-grid-sized.
-    val edges = dir0.select($"a".as("src"), $"b".as("dst"), $"w")
-      .unionByName(dir0.select($"b".as("src"), $"a".as("dst"), $"w"))
+    val edges = Graph.bothWays(dir0, "src", "dst")
       .groupBy($"src", $"dst").agg(sum($"w").as("w"))
       .localCheckpoint()
-    val nodes = Tables.load(s, dir, "nation").select($"n_nationkey".as("node"))
-    def round(lbl: DataFrame): DataFrame = {
-      val adopted = edges
-        .join(broadcast(lbl.withColumnRenamed("node", "dst")), "dst")
-        .groupBy($"src", $"lbl").agg(sum($"w").as("wsum"))
-        .groupBy($"src")
-        .agg(max(struct($"wsum", (-$"lbl").as("nl"))).as("m"))
-        .select($"src".as("node"), (-$"m.nl").as("lbl"))
-      // isolated nodes keep their label
-      nodes.join(broadcast(adopted), Seq("node"), "left")
-        .select($"node", coalesce($"lbl", $"node".cast("long")).as("lbl"))
-    }
-    val l0 = nodes.select($"node", $"node".cast("long").as("lbl"))
-    // labels are |nations| rows and modularity's internal-weight join
-    // references them twice — checkpoint so the two label rounds run once
-    (edges, round(round(l0)).localCheckpoint())
+    (edges, Graph.labelPropagation(edges, nations(s, dir)))
   }
 
   val defs: Seq[QueryDef] = Seq(
@@ -646,41 +604,7 @@ object RelationalQueries extends QueryModule {
     //    nodes (no out-edges) contribute nothing; their mass evaporates
     //    (the standard simplified variant — documented, deterministic).
     QueryDef("graph_pagerank_fixed",
-      (s, dir) => {
-        import s.implicits._
-        val li = Tables.load(s, dir, "lineitem").select($"l_orderkey", $"l_suppkey")
-        val o = Tables.load(s, dir, "orders").select($"o_orderkey", $"o_custkey")
-        val c = Tables.load(s, dir, "customer").select($"c_custkey", $"c_nationkey")
-        val sup = Tables.load(s, dir, "supplier").select($"s_suppkey", $"s_nationkey")
-        val edges = li.join(o, $"l_orderkey" === $"o_orderkey")
-          .join(broadcast(c), $"o_custkey" === $"c_custkey")
-          .join(broadcast(sup), $"l_suppkey" === $"s_suppkey")
-          .groupBy($"c_nationkey".as("src"), $"s_nationkey".as("dst"))
-          .agg(count(lit(1)).as("w"))
-        val nodes = Tables.load(s, dir, "nation").select($"n_nationkey".as("node"))
-        val nn = nodes.agg(count(lit(1)).as("nn")) // 1-row broadcast scalar
-        val outw = edges.groupBy($"src").agg(sum($"w").as("ow"))
-        val r0 = nodes.crossJoin(broadcast(nn))
-          .selectExpr("node", "1000000000 DIV nn AS r")
-        // one damped iteration: in(dst) = Σ_src (r(src)·w) DIV ow(src);
-        // r'(node) = teleport 15e9 DIV (100·nn) + (85·in) DIV 100
-        def iterate(r: DataFrame): DataFrame = {
-          val incoming = edges
-            .join(broadcast(outw), "src")
-            .join(broadcast(r.withColumnRenamed("node", "src")), "src")
-            .selectExpr("dst", "(r * w) DIV ow AS c")
-            .groupBy($"dst").agg(sum($"c").as("inr"))
-          nodes.crossJoin(broadcast(nn))
-            .join(broadcast(incoming), $"node" === $"dst", "left")
-            .selectExpr("node",
-              "15000000000 DIV (100 * nn) + (85 * coalesce(inr, 0)) DIV 100 AS r")
-        }
-        val r1 = iterate(r0)
-        val r2 = iterate(r1)
-        r1.withColumnRenamed("r", "rank_i1")
-          .join(r2.withColumnRenamed("r", "rank_i2"), "node")
-          .orderBy($"node")
-      },
+      (s, dir) => Graph.pageRank(nationTradeFlows(s, dir), nations(s, dir)),
       Some("""WITH e AS (
           SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
             CAST(count(*) AS BIGINT) AS w
@@ -717,56 +641,7 @@ object RelationalQueries extends QueryModule {
     //    order-independent, partitioning-proof). Iteration cost is
     //    |edges|-sized; the fact table is touched once. ─────────────────
     QueryDef("graph_hits_power",
-      (s, dir) => {
-        import s.implicits._
-        val li = Tables.load(s, dir, "lineitem").select($"l_orderkey", $"l_suppkey")
-        val o = Tables.load(s, dir, "orders").select($"o_orderkey", $"o_custkey")
-        val c = Tables.load(s, dir, "customer").select($"c_custkey", $"c_nationkey")
-        val sup = Tables.load(s, dir, "supplier").select($"s_suppkey", $"s_nationkey")
-        val edges = li.join(o, $"l_orderkey" === $"o_orderkey")
-          .join(broadcast(c), $"o_custkey" === $"c_custkey")
-          .join(broadcast(sup), $"l_suppkey" === $"s_suppkey")
-          .groupBy($"c_nationkey".as("src"), $"s_nationkey".as("dst"))
-          .agg(count(lit(1)).as("w"))
-          // localCheckpoint (the kcore iteration pattern): all 4
-          // mutual-reinforcement steps reference `edges`, each rescale
-          // references its input twice, and the output joins a2 twice —
-          // without a barrier the final plan re-evaluates the
-          // lineitem⋈orders edge build ~44× (measured 5.7 s at sf0.1 vs
-          // ~1 s checkpointed); the barrier makes "the fact table is
-          // touched once" literal. Each |nodes|-row step checkpoints too
-          // so the tiny-join fan-out doesn't compound either.
-          .localCheckpoint()
-        val nodes = Tables.load(s, dir, "nation").select($"n_nationkey".as("node"))
-        // the ×1e9 product passes 2^63 at sf10 — DECIMAL(38,0) DIV is
-        // exact integral division in Spark (bigint result), HUGEINT //
-        // its DuckDB twin
-        def rescale(x: DataFrame, col0: String): DataFrame = {
-          val mx = x.agg(max(col(col0)).as("mx"))
-          x.crossJoin(broadcast(mx))
-            .selectExpr("node",
-              s"(CAST($col0 AS DECIMAL(38,0)) * 1000000000) DIV mx AS $col0")
-            .localCheckpoint()
-        }
-        val h0 = nodes.selectExpr("node", "CAST(1000000000 AS BIGINT) AS h")
-        def authStep(h: DataFrame): DataFrame = rescale(
-          nodes.join(broadcast(edges
-              .join(broadcast(h.withColumnRenamed("node", "src")), "src")
-              .groupBy($"dst").agg(sum($"h" * $"w").as("a"))),
-            $"node" === $"dst", "left")
-            .selectExpr("node", "coalesce(a, 0) AS a"), "a")
-        def hubStep(a: DataFrame): DataFrame = rescale(
-          nodes.join(broadcast(edges
-              .join(broadcast(a.withColumnRenamed("node", "dst")), "dst")
-              .groupBy($"src").agg(sum($"a" * $"w").as("h"))),
-            $"node" === $"src", "left")
-            .selectExpr("node", "coalesce(h, 0) AS h"), "h")
-        val a1 = authStep(h0); val h1 = hubStep(a1)
-        val a2 = authStep(h1); val h2 = hubStep(a2)
-        a2.withColumnRenamed("a", "authority")
-          .join(h2.withColumnRenamed("h", "hub"), "node")
-          .orderBy($"node")
-      },
+      (s, dir) => Graph.hits(nationTradeFlows(s, dir), nations(s, dir)),
       Some("""WITH e AS (
           SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
             CAST(count(*) AS BIGINT) AS w
@@ -816,28 +691,8 @@ object RelationalQueries extends QueryModule {
     //    count is an integer; the corner-role union + groupBy is exact
     //    in any engine. ──────────────────────────────────────────────────
     QueryDef("graph_triangle_count",
-      (s, dir) => {
-        import s.implicits._
-        val li = Tables.load(s, dir, "lineitem").select($"l_orderkey", $"l_suppkey")
-        val o = Tables.load(s, dir, "orders").select($"o_orderkey", $"o_custkey")
-        val c = Tables.load(s, dir, "customer").select($"c_custkey", $"c_nationkey")
-        val sup = Tables.load(s, dir, "supplier").select($"s_suppkey", $"s_nationkey")
-        val edges = li.join(o, $"l_orderkey" === $"o_orderkey")
-          .join(broadcast(c), $"o_custkey" === $"c_custkey")
-          .join(broadcast(sup), $"l_suppkey" === $"s_suppkey")
-          .filter($"c_nationkey" =!= $"s_nationkey")
-          .select(least($"c_nationkey", $"s_nationkey").as("a"),
-            greatest($"c_nationkey", $"s_nationkey").as("b"))
-          .distinct()
-        val tri = edges.alias("e1")
-          .join(edges.alias("e2"), col("e1.b") === col("e2.a"))
-          .join(edges.alias("e3"),
-            col("e1.a") === col("e3.a") && col("e2.b") === col("e3.b"))
-          .select(col("e1.a").as("x"), col("e1.b").as("y"), col("e2.b").as("z"))
-        val perNode = tri.select(explode(array($"x", $"y", $"z")).as("node"))
-          .groupBy($"node").agg(count(lit(1)).as("n_triangles"))
-        perNode.orderBy($"node")
-      },
+      (s, dir) =>
+        Graph.trianglesPerNode(nationTradeEdges(s, dir)).orderBy(col("node")),
       Some("""WITH e AS (
           SELECT DISTINCT least(c.c_nationkey, s.s_nationkey) AS a,
             greatest(c.c_nationkey, s.s_nationkey) AS b
@@ -876,27 +731,7 @@ object RelationalQueries extends QueryModule {
     //    this operator exists to avoid; `graph_triangle_count` stays
     //    the exact anchor. ──────────────────────────────────────────────
     QueryDef("graph_triangle_doulion",
-      (s, dir) => {
-        import s.implicits._
-        // r16: map-side pair generation (copurchasePairsRaw) — the coin
-        // still lands BEFORE the distinct, so the sparsifier keeps its
-        // "full edge relation never shuffles" property.
-        val kept = copurchasePairsRaw(s, dir)
-          .filter(
-            substring(md5(concat($"a".cast("string"), lit(":"),
-              $"b".cast("string"))), 1, 1) < "4")
-          .distinct()
-          .localCheckpoint() // 3-way self-join: plan the sample ONCE
-        val tri = kept.alias("e1")
-          .join(kept.alias("e2"), col("e1.b") === col("e2.a"))
-          .join(kept.alias("e3"),
-            col("e1.a") === col("e3.a") && col("e2.b") === col("e3.b"))
-        kept.agg(count(lit(1)).as("n_kept"))
-          .crossJoin(broadcast(tri.agg(count(lit(1)).as("n_tri_sampled"))))
-          .select($"n_kept", ($"n_kept" * 4L).as("est_edges"),
-            $"n_tri_sampled",
-            ($"n_tri_sampled" * 64L).as("est_triangles"))
-      },
+      (s, dir) => Graph.triangleDoulion(copurchasePairsRaw(s, dir)),
       Some("""WITH io AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
           FROM lineitem),
         k AS (SELECT DISTINCT x.p AS a, y.p AS b
@@ -3012,33 +2847,11 @@ object RelationalQueries extends QueryModule {
     QueryDef("graph_harmonic_centrality",
       (s, dir) => {
         import s.implicits._
-        val li = Tables.load(s, dir, "lineitem").select($"l_orderkey", $"l_suppkey")
-        val o = Tables.load(s, dir, "orders").select($"o_orderkey", $"o_custkey")
-        val c = Tables.load(s, dir, "customer").select($"c_custkey", $"c_nationkey")
-        val sup = Tables.load(s, dir, "supplier").select($"s_suppkey", $"s_nationkey")
-        val e0 = li.join(o, $"l_orderkey" === $"o_orderkey")
-          .join(broadcast(c), $"o_custkey" === $"c_custkey")
-          .join(broadcast(sup), $"l_suppkey" === $"s_suppkey")
+        Graph.harmonicCentrality(nationTradePairs(s, dir)
           .filter($"c_nationkey" =!= $"s_nationkey")
           .select(least($"c_nationkey", $"s_nationkey").cast("long").as("a"),
             greatest($"c_nationkey", $"s_nationkey").cast("long").as("b"))
-          .distinct()
-        val edges = e0.union(e0.select($"b".as("a"), $"a".as("b")))
-          .localCheckpoint()
-        val nodes = edges.select($"a".as("node")).distinct()
-        val d0 = nodes.select($"node".as("src"), $"node".as("v"), lit(0L).as("d"))
-        val dist = (1 to 3).foldLeft(d0.localCheckpoint()) { (dst, _) =>
-          dst.union(
-            dst.join(edges, dst("v") === edges("a"))
-              .select(dst("src"), edges("b").as("v"), (dst("d") + 1L).as("d")))
-            .groupBy($"src", $"v").agg(min($"d").as("d"))
-            .localCheckpoint()
-        }
-        dist.filter($"d" > 0L)
-          .groupBy($"src")
-          .agg(count(lit(1)).as("n_reached"),
-            sum(expr("6 DIV d")).as("harmonic_x6"))
-          .orderBy($"src")
+          .distinct())
       },
       Some("""WITH e0 AS MATERIALIZED (
           SELECT DISTINCT CAST(least(c.c_nationkey, s.s_nationkey) AS BIGINT)
@@ -3081,13 +2894,7 @@ object RelationalQueries extends QueryModule {
     QueryDef("agg_gravity_model",
       (s, dir) => {
         import s.implicits._
-        val li = Tables.load(s, dir, "lineitem").select($"l_orderkey", $"l_suppkey")
-        val o = Tables.load(s, dir, "orders").select($"o_orderkey", $"o_custkey")
-        val c = Tables.load(s, dir, "customer").select($"c_custkey", $"c_nationkey")
-        val sup = Tables.load(s, dir, "supplier").select($"s_suppkey", $"s_nationkey")
-        val flows = li.join(o, $"l_orderkey" === $"o_orderkey")
-          .join(broadcast(c), $"o_custkey" === $"c_custkey")
-          .join(broadcast(sup), $"l_suppkey" === $"s_suppkey")
+        val flows = nationTradePairs(s, dir)
           .groupBy($"c_nationkey".as("i"), $"s_nationkey".as("j"))
           .agg(count(lit(1)).as("w"))
         val outM = flows.groupBy($"i").agg(sum($"w").as("oi"))
@@ -5416,29 +5223,7 @@ object RelationalQueries extends QueryModule {
     QueryDef("graph_kcore_peel",
       (s, dir) => {
         import s.implicits._
-        val e0 = Tables.load(s, dir, "orders")
-          .join(Tables.load(s, dir, "lineitem"),
-            $"o_orderkey" === $"l_orderkey")
-          .select(($"o_custkey" * 2).as("a"), ($"l_suppkey" * 2 + 1).as("b"))
-          .distinct()
-        // localCheckpoint per round (the dedup_clusters iteration
-        // pattern): each round references `edges` three times (degree
-        // count + two semi-join branches), so without a materialization
-        // barrier round 3's plan re-evaluates the base orders⋈lineitem
-        // join 3³ times — measured 6.7 s at sf0.1 vs ~1 s checkpointed.
-        var edges = e0.select($"a".as("src"), $"b".as("dst"))
-          .union(e0.select($"b".as("src"), $"a".as("dst")))
-          .localCheckpoint()
-        for (_ <- 1 to 3) {
-          val alive = edges.groupBy($"src").agg(count(lit(1)).as("deg"))
-            .filter($"deg" >= 3).select($"src".as("node"))
-          edges = edges
-            .join(alive.select($"node".as("src")), Seq("src"), "left_semi")
-            .join(alive.select($"node".as("dst")), Seq("dst"), "left_semi")
-            .select($"src", $"dst")
-            .localCheckpoint()
-        }
-        edges.groupBy($"src").agg(count(lit(1)).as("degree"))
+        Graph.kcorePeel(custSuppEdges(s, dir))
           .select(
             when($"src" % 2 === 0, lit("cust")).otherwise(lit("supp"))
               .as("kind"),
@@ -5698,44 +5483,8 @@ object RelationalQueries extends QueryModule {
     QueryDef("graph_neighbor_jaccard",
       (s, dir) => {
         import s.implicits._
-        // r16 (guide §2.4): the old form materialized the distinct
-        // (cust, supp) edge list, counted degrees per cust, semi-joined
-        // the ≤64-degree keep set back, checkpointed the edge list, and
-        // SELF-JOINED it on cust for shared-neighbor pairs — four
-        // shuffles plus a join before the pair aggregate. One
-        // collect_set aggregate replaces all of it: the set dedups the
-        // raw orders⋈lineitem rows (the old distinct), its size IS the
-        // cust degree (the old keep count), and the sorted supplier
-        // array emits its C(k,2) ordered pairs map-side (the old
-        // self-join) — pairs enter the (s1, s2) aggregate through
-        // map-side partial aggregation instead of a 2-sided exchange.
-        // The checkpoint pins ≤|cust| array rows (≤64 elems each), not
-        // the |E|-row edge list. Same relation: pair (s1, s2) counted
-        // once per qualifying cust, degree = per-supp count over kept
-        // custs' distinct edges.
-        val grp = Tables.load(s, dir, "orders")
-          .join(Tables.load(s, dir, "lineitem"),
-            $"o_orderkey" === $"l_orderkey")
-          .select($"o_custkey".as("cust"), $"l_suppkey".as("supp"))
-          .groupBy($"cust").agg(sort_array(collect_set($"supp")).as("ss"))
-          .filter(size($"ss") <= 64)
-          .localCheckpoint()
-        val deg = grp.select(explode($"ss").as("supp"))
-          .groupBy($"supp").agg(count(lit(1)).as("d"))
-        val shared = grp
-          .select(posexplode($"ss").as(Seq("i", "s1")), $"ss")
-          .select($"s1", explode(slice($"ss", $"i" + lit(2),
-            size($"ss") - $"i" - lit(1))).as("s2"))
-          .groupBy($"s1", $"s2")
-          .agg(count(lit(1)).as("shared"))
-        shared
-          .join(deg.select($"supp".as("s1"), $"d".as("d1")), Seq("s1"))
-          .join(deg.select($"supp".as("s2"), $"d".as("d2")), Seq("s2"))
-          .withColumn("jaccard", $"shared".cast("double")
-            / ($"d1" + $"d2" - $"shared").cast("double"))
-          .filter($"jaccard" >= 0.25)
-          .select($"s1", $"s2", $"shared", $"d1", $"d2", $"jaccard")
-          .orderBy($"s1", $"s2")
+        Graph.neighborJaccard(
+          orderLines(s, dir).select($"o_custkey".as("cust"), $"l_suppkey".as("supp")))
       },
       Some("""WITH e0 AS (SELECT DISTINCT o_custkey AS cust,
             l_suppkey AS supp
@@ -6852,28 +6601,8 @@ object RelationalQueries extends QueryModule {
     //    shape. ──────────────────────────────────────────────────────────
     QueryDef("graph_community_modularity",
       (s, dir) => {
-        import s.implicits._
         val (edges, labels) = nationTradeCommunities(s, dir)
-        val wTotal = edges.agg(sum($"w").as("w_total"))
-        val deg = edges.groupBy($"src".as("node")).agg(sum($"w").as("deg"))
-        val internal = edges
-          .join(broadcast(labels.select($"node".as("src"), $"lbl".as("la"))), "src")
-          .join(broadcast(labels.select($"node".as("dst"), $"lbl".as("lb"))), "dst")
-          .filter($"la" === $"lb")
-          .groupBy($"la".as("community")).agg(sum($"w").as("internal_w"))
-        labels
-          .join(broadcast(deg), Seq("node"), "left")
-          .select($"lbl".as("community"), $"node",
-            coalesce($"deg", lit(0L)).as("deg"))
-          .groupBy($"community")
-          .agg(count(lit(1)).as("n_nodes"), sum($"deg").as("deg_sum"))
-          .join(broadcast(internal), Seq("community"), "left")
-          .crossJoin(broadcast(wTotal))
-          .select($"community", $"n_nodes", $"deg_sum",
-            coalesce($"internal_w", lit(0L)).as("internal_w"), $"w_total",
-            ($"w_total" * coalesce($"internal_w", lit(0L)) -
-              $"deg_sum" * $"deg_sum").as("contrib_num"))
-          .orderBy($"community")
+        Graph.modularity(edges, labels)
       },
       Some("""WITH d0 AS (
           SELECT c.c_nationkey AS a, s.s_nationkey AS b, CAST(count(*) AS BIGINT) AS w
@@ -6933,35 +6662,7 @@ object RelationalQueries extends QueryModule {
     //    digits at sf10, the split pair never does. One broadcast deg
     //    join + ONE aggregate over the |nations|²-bounded edge list. ────
     QueryDef("graph_assortativity",
-      (s, dir) => {
-        import s.implicits._
-        val (edges, _) = nationTradeCommunities(s, dir)
-        val deg = edges.groupBy($"src".as("node")).agg(sum($"w").as("deg"))
-        val dec = "decimal(38,0)"
-        edges
-          .join(broadcast(deg.select($"node".as("src"), $"deg".as("dx"))), "src")
-          .join(broadcast(deg.select($"node".as("dst"), $"deg".as("dy"))), "dst")
-          .agg(sum($"w").as("s_w"),
-            sum(($"w".cast(dec) * $"dx".cast(dec)).cast(dec)).cast(dec).as("sx"),
-            sum(($"w".cast(dec) * $"dy".cast(dec)).cast(dec)).cast(dec).as("sy"),
-            sum(($"w".cast(dec) * $"dx".cast(dec) * $"dx".cast(dec)).cast(dec))
-              .cast(dec).as("sxx"),
-            sum(($"w".cast(dec) * $"dy".cast(dec) * $"dy".cast(dec)).cast(dec))
-              .cast(dec).as("syy"),
-            sum(($"w".cast(dec) * $"dx".cast(dec) * $"dy".cast(dec)).cast(dec))
-              .cast(dec).as("sxy"))
-          .select($"s_w",
-            // exact DECIMAL internally, string emission (see
-            // agg_autocorr_lag1 — driver hashes the parquet encoding)
-            ($"s_w".cast(dec) * $"sxy" - $"sx" * $"sy").cast(dec)
-              .cast("string").as("num"),
-            ($"s_w".cast(dec) * $"sxx" - $"sx" * $"sx").cast(dec)
-              .cast("string").as("den1"),
-            ($"s_w".cast(dec) * $"syy" - $"sy" * $"sy").cast(dec)
-              .cast("string").as("den2"),
-            signum(($"s_w".cast(dec) * $"sxy" - $"sx" * $"sy")
-              .cast("double")).cast("long").as("sign"))
-      },
+      (s, dir) => Graph.assortativity(nationTradeCommunities(s, dir)._1),
       Some("""WITH d0 AS (
           SELECT c.c_nationkey AS a, s.s_nationkey AS b, CAST(count(*) AS BIGINT) AS w
           FROM lineitem l
@@ -7545,27 +7246,10 @@ object RelationalQueries extends QueryModule {
     QueryDef("graph_shortest_hops",
       (s, dir) => {
         import s.implicits._
-        val li = Tables.load(s, dir, "lineitem").select($"l_orderkey", $"l_suppkey")
-        val o = Tables.load(s, dir, "orders").select($"o_orderkey", $"o_custkey")
-        val c = Tables.load(s, dir, "customer").select($"c_custkey", $"c_nationkey")
-        val sup = Tables.load(s, dir, "supplier").select($"s_suppkey", $"s_nationkey")
-        val edges = li.join(o, $"l_orderkey" === $"o_orderkey")
-          .join(broadcast(c), $"o_custkey" === $"c_custkey")
-          .join(broadcast(sup), $"l_suppkey" === $"s_suppkey")
+        Graph.shortestHops(nationTradePairs(s, dir)
           .select($"c_nationkey".cast("long").as("src"),
             $"s_nationkey".cast("long").as("dst"))
-          .distinct()
-          .as[(Long, Long)].collect()
-        var dist = Map(0L -> 0L)
-        for (_ <- 1 to 3) {
-          // synchronous: every relaxation reads the previous round's set
-          val relaxed = edges.flatMap { case (src, dst) => dist.get(src).map(h => dst -> (h + 1)) }
-          dist = relaxed.foldLeft(dist) { case (d, (node, hops)) =>
-            if (d.get(node).forall(_ > hops)) d + (node -> hops) else d
-          }
-        }
-        s.createDataFrame(dist.toSeq.sorted.map { case (n, h) => Row(n, h) }.asJava,
-          StructType.fromDDL("node BIGINT NOT NULL, hops BIGINT NOT NULL"))
+          .distinct())
       },
       Some("""WITH e AS (SELECT DISTINCT CAST(c.c_nationkey AS BIGINT) AS src,
             CAST(s.s_nationkey AS BIGINT) AS dst
@@ -7740,40 +7424,7 @@ object RelationalQueries extends QueryModule {
     //    triangle enumeration is the same a<b<c oriented 3-join; every
     //    frame is |nations|-bounded. ────────────────────────────────────
     QueryDef("graph_clustering_coeff",
-      (s, dir) => {
-        import s.implicits._
-        val li = Tables.load(s, dir, "lineitem").select($"l_orderkey", $"l_suppkey")
-        val o = Tables.load(s, dir, "orders").select($"o_orderkey", $"o_custkey")
-        val c = Tables.load(s, dir, "customer").select($"c_custkey", $"c_nationkey")
-        val sup = Tables.load(s, dir, "supplier").select($"s_suppkey", $"s_nationkey")
-        val edges = li.join(o, $"l_orderkey" === $"o_orderkey")
-          .join(broadcast(c), $"o_custkey" === $"c_custkey")
-          .join(broadcast(sup), $"l_suppkey" === $"s_suppkey")
-          .filter($"c_nationkey" =!= $"s_nationkey")
-          .select(least($"c_nationkey", $"s_nationkey").as("a"),
-            greatest($"c_nationkey", $"s_nationkey").as("b"))
-          .distinct()
-        val tri = edges.alias("e1")
-          .join(edges.alias("e2"), col("e1.b") === col("e2.a"))
-          .join(edges.alias("e3"),
-            col("e1.a") === col("e3.a") && col("e2.b") === col("e3.b"))
-          .select(col("e1.a").as("x"), col("e1.b").as("y"), col("e2.b").as("z"))
-        val perNode = tri.select(explode(array($"x", $"y", $"z")).as("node"))
-          .groupBy($"node").agg(count(lit(1)).as("n_triangles"))
-        val deg = edges.select($"a".as("node"))
-          .unionByName(edges.select($"b".as("node")))
-          .groupBy($"node").agg(count(lit(1)).as("deg"))
-        deg.join(perNode, Seq("node"), "left")
-          .select($"node", $"deg",
-            coalesce($"n_triangles", lit(0L)).as("n_triangles"),
-            (lit(2L) * coalesce($"n_triangles", lit(0L))).as("coeff_num"),
-            ($"deg" * ($"deg" - 1L)).as("coeff_den"))
-          .withColumn("coeff",
-            when($"coeff_den" > 0L,
-              $"coeff_num".cast("double") / $"coeff_den".cast("double"))
-              .otherwise(lit(0.0d)))
-          .orderBy($"node")
-      },
+      (s, dir) => Graph.clusteringCoeff(nationTradeEdges(s, dir)),
       Some("""WITH e AS (
           SELECT DISTINCT least(c.c_nationkey, s.s_nationkey) AS a,
             greatest(c.c_nationkey, s.s_nationkey) AS b
@@ -8498,23 +8149,8 @@ object RelationalQueries extends QueryModule {
     QueryDef("graph_copurchase_projection",
       (s, dir) => {
         import s.implicits._
-        // r16 (guide §2.4): the distinct + self-join on the part key is
-        // one collect_set aggregate instead — the set dedups (p, sk)
-        // rows, and the per-part supplier pairs (≤C(4,2) at any SF: a
-        // part's supplier list is catalog-bounded) are generated
-        // map-side from the sorted array, entering the (s1, s2) count
-        // through its partial phase. Two exchanges total (group by p,
-        // pair aggregate) instead of distinct + join + aggregate.
-        Tables.load(s, dir, "lineitem")
-          .select($"l_partkey".as("p"), $"l_suppkey".as("sk"))
-          .groupBy($"p").agg(sort_array(collect_set($"sk")).as("ss"))
-          .select(posexplode($"ss").as(Seq("i", "s1")), $"ss")
-          .select($"s1", explode(slice($"ss", $"i" + lit(2),
-            size($"ss") - $"i" - lit(1))).as("s2"))
-          .groupBy($"s1", $"s2")
-          .agg(count(lit(1)).as("shared_parts"))
-          .orderBy($"shared_parts".desc, $"s1", $"s2")
-          .limit(20)
+        Graph.projectionTop20(
+          Tables.load(s, dir, "lineitem").select($"l_partkey".as("p"), $"l_suppkey".as("sk")))
       },
       Some("""WITH ps AS (SELECT DISTINCT l_partkey AS p, l_suppkey AS sk
           FROM lineitem)
@@ -9832,43 +9468,10 @@ object RelationalQueries extends QueryModule {
     QueryDef("graph_bfs_distance",
       (s, dir) => {
         import s.implicits._
-        val e0 = Tables.load(s, dir, "orders")
-          .join(Tables.load(s, dir, "lineitem"),
-            $"o_orderkey" === $"l_orderkey")
-          .select(($"o_custkey" * 2).cast("long").as("a"),
-            ($"l_suppkey" * 2 + 1).cast("long").as("b"))
-          .distinct()
-        val edges = e0
-          .union(e0.select($"b".as("a"), $"a".as("b")))
-          .localCheckpoint()
-        val seeds = Tables.load(s, dir, "customer")
-          .filter($"c_custkey" <= 10)
-          .select(($"c_custkey" * 2).cast("long").as("node"),
-            lit(0L).as("d"))
-        // frontier loop: `fresh` is the set of nodes FIRST reached this
-        // round (d = round index); settled = union of all frontiers so
-        // far, one-row-per-node by construction, so no min-agg is needed
-        val seeds0 = seeds.localCheckpoint()
-        var settled = Seq(seeds0)
-        var frontier = seeds0
-        for (_ <- 1 to 4) {
-          val fresh = frontier.join(edges, frontier("node") === edges("a"))
-            .select(edges("b").as("node"), (frontier("d") + 1L).as("d"))
-            .distinct()
-            .join(settled.reduce(_ unionByName _), Seq("node"), "left_anti")
-            .localCheckpoint()
-          settled = settled :+ fresh
-          frontier = fresh
-        }
-        val dist = settled.reduce(_ unionByName _)
-        val nodes = edges.select($"a".as("node"))
-          .union(seeds.select($"node")).distinct()
-        nodes.join(dist, Seq("node"), "left")
-          .select($"node", coalesce($"d", lit(-1L)).as("d"))
-          .groupBy($"d")
-          .agg(count(lit(1)).as("n_nodes"),
-            min($"node").as("min_node"), max($"node").as("max_node"))
-          .orderBy($"d")
+        Graph.bfsDistance(custSuppEdges(s, dir),
+          Tables.load(s, dir, "customer")
+            .filter($"c_custkey" <= 10)
+            .select(($"c_custkey" * 2).cast("long").as("node"), lit(0L).as("d")))
       },
       Some("""WITH e0 AS (SELECT DISTINCT
             CAST(o_custkey * 2 AS BIGINT) AS a,
@@ -10656,14 +10259,7 @@ object RelationalQueries extends QueryModule {
     //    measures what each cap costs in retained edges so the choice
     //    is data-driven, not a guess. ──────────────────────────────────
     QueryDef("graph_ktruss_peel",
-      (s, dir) => {
-        // r16: map-side pair generation (copurchasePairsRaw) replaces
-        // the io self-join — one less shuffle feeding the same distinct.
-        val e0 = copurchasePairsRaw(s, dir)
-          .distinct()
-          .localCheckpoint()
-        ktrussPeelStats(e0)
-      },
+      (s, dir) => Graph.ktrussPeel(copurchaseEdges(s, dir)),
       Some("""WITH io AS MATERIALIZED (
           SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
         e0 AS MATERIALIZED (
@@ -10732,33 +10328,7 @@ object RelationalQueries extends QueryModule {
     //    construction on the capped subgraph; the cap (60 < sf0.1's max
     //    degree 97) genuinely bites on the fixture. ────────────────────
     QueryDef("graph_ktruss_capped",
-      (s, dir) => {
-        import s.implicits._
-        // r16: map-side pair generation (copurchasePairsRaw) replaces
-        // the io self-join; e0 is also checkpointed ONCE — it used to be
-        // re-derived for the degree table and again for the hub
-        // anti-joins — and released (blocking) as soon as the capped
-        // edge set ec materializes, so nothing but ec stays pinned
-        // during the support pass (the sf10 starvation lesson). The hub
-        // frame is built inside the same block, so no lazy frame over
-        // e0's released blocks outlives it.
-        val ec = {
-          val e0 = copurchasePairsRaw(s, dir)
-            .distinct()
-            .localCheckpoint()
-          val hubs = e0.select($"a".as("n")).union(e0.select($"b".as("n")))
-            .groupBy($"n").agg(count(lit(1)).as("deg"))
-            .filter($"deg" > 60L).select($"n")
-          val capped = e0
-            .join(hubs.select($"n".as("a")), Seq("a"), "left_anti")
-            .join(hubs.select($"n".as("b")), Seq("b"), "left_anti")
-            .select($"a", $"b")
-            .localCheckpoint()
-          releaseCheckpoint(e0)
-          capped
-        }
-        ktrussPeelStats(ec)
-      },
+      (s, dir) => Graph.ktrussCapped(copurchaseEdges(s, dir)),
       Some("""WITH io AS MATERIALIZED (
           SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
         e0 AS MATERIALIZED (
@@ -10842,73 +10412,7 @@ object RelationalQueries extends QueryModule {
     //    per cap and the cap's edge checkpoint is released, blocking,
     //    before the next cap runs. ──────────────────────────────────────
     QueryDef("graph_ktruss_cap_sweep",
-      (s, dir) => {
-        import s.implicits._
-        // r16: map-side pair generation (copurchasePairsRaw) + ONE e0
-        // materialization. Previously e0 was re-derived from scratch for
-        // the deg snapshot AND again for the coin-filtered es snapshot
-        // (two full edge builds), and es stayed pinned for the whole
-        // sweep although its only consumer was the dm build (r15
-        // ADVICE). Now: checkpoint e0 once, derive deg and dm from it
-        // (the coin folds into the dm build — no es snapshot at all),
-        // release e0 blocking before the sweep so only deg + dm stay
-        // pinned while the support passes run.
-        val e0 = copurchasePairsRaw(s, dir)
-          .distinct()
-          .localCheckpoint()
-        val deg = e0.select($"a".as("n")).union(e0.select($"b".as("n")))
-          .groupBy($"n").agg(count(lit(1)).as("deg"))
-          .localCheckpoint()
-        // r15 optimization (guide §2.4, remove shuffles outright): the
-        // per-cap hub exclusion was TWO anti joins against the hub set
-        // per cap — six sampled-edge join passes across the sweep. An
-        // edge survives cap c iff max(deg(a), deg(b)) ≤ c, so join the
-        // degree table onto the sampled edges ONCE, checkpoint
-        // (a, b, dmax), and each cap's subgraph is a plain filter over
-        // that snapshot (caps nest, the filter is monotone). Identical
-        // edge sets. The deterministic md5 coin (rate 4/16, replayable —
-        // the dedup_lsh_eval bounded-harness device) lands here, in the
-        // same pass that attaches the degrees (r16: was a separate
-        // pinned es snapshot).
-        val dm = e0.filter(
-            substring(md5(concat(lit("ks:"), $"a".cast("string"),
-              lit(":"), $"b".cast("string"))), 1, 1) < "4")
-          .join(deg.select($"n".as("a"), $"deg".as("da")), "a")
-          .join(deg.select($"n".as("b"), $"deg".as("db")), "b")
-          .select($"a", $"b", greatest($"da", $"db").as("dmax"))
-          .localCheckpoint()
-        releaseCheckpoint(e0)
-        val collected = Seq(30L, 60L, 120L).map { cap =>
-          val nHubs = deg.filter($"deg" > cap).count()
-          val ec = dm.filter($"dmax" <= cap).select($"a", $"b")
-            .localCheckpoint()
-          val r = ktrussSupport(ec).agg(count(lit(1)).as("n_edges"),
-              sum(when($"sup" >= 1L, 1L).otherwise(0L)).as("n_sup_pos"),
-              max($"sup").as("max_support"), sum($"sup").as("sum_support"))
-            .head()
-          releaseCheckpoint(ec)
-          org.apache.spark.sql.Row(cap, nHubs, r.getLong(0),
-            if (r.isNullAt(1)) null else r.getLong(1),
-            if (r.isNullAt(2)) null else r.getLong(2),
-            if (r.isNullAt(3)) null else r.getLong(3))
-        }
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("cap",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("n_hubs",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("n_edges",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("n_sup_pos",
-            org.apache.spark.sql.types.LongType, nullable = true),
-          org.apache.spark.sql.types.StructField("max_support",
-            org.apache.spark.sql.types.LongType, nullable = true),
-          org.apache.spark.sql.types.StructField("sum_support",
-            org.apache.spark.sql.types.LongType, nullable = true)))
-        s.createDataFrame(
-            s.sparkContext.parallelize(collected, 1), schema)
-          .orderBy($"cap")
-      },
+      (s, dir) => Graph.ktrussCapSweep(copurchaseEdges(s, dir)),
       Some {
         def capBlock(cap: Int) =
           s"""hubs$cap AS (SELECT n FROM deg WHERE deg > $cap),
@@ -12055,43 +11559,10 @@ object RelationalQueries extends QueryModule {
     QueryDef("graph_personalized_pagerank",
       (s, dir) => {
         import s.implicits._
-        val li = Tables.load(s, dir, "lineitem").select($"l_orderkey", $"l_suppkey")
-        val o = Tables.load(s, dir, "orders").select($"o_orderkey", $"o_custkey")
-        val c = Tables.load(s, dir, "customer").select($"c_custkey", $"c_nationkey")
-        val sup = Tables.load(s, dir, "supplier").select($"s_suppkey", $"s_nationkey")
-        val edges = li.join(o, $"l_orderkey" === $"o_orderkey")
-          .join(broadcast(c), $"o_custkey" === $"c_custkey")
-          .join(broadcast(sup), $"l_suppkey" === $"s_suppkey")
-          .groupBy($"c_nationkey".as("src"), $"s_nationkey".as("dst"))
-          .agg(count(lit(1)).as("w"))
-        val nodes = Tables.load(s, dir, "nation")
-          .select($"n_nationkey".as("node"),
-            when($"n_nationkey".isin(0, 1, 2), 1L).otherwise(0L).as("seed"))
-        val sc = nodes.agg(sum($"seed").as("ns"))
-        val outw = edges.groupBy($"src").agg(sum($"w").as("ow"))
-        val r0 = nodes.crossJoin(broadcast(sc))
-          .selectExpr("node", "seed",
-            "CASE WHEN seed = 1 THEN 1000000000 DIV ns ELSE 0L END AS r")
-        def iterate(r: DataFrame): DataFrame = {
-          val incoming = edges
-            .join(broadcast(outw), "src")
-            .join(broadcast(r.withColumnRenamed("node", "src")
-              .select($"src", $"r")), "src")
-            .selectExpr("dst", "(r * w) DIV ow AS c")
-            .groupBy($"dst").agg(sum($"c").as("inr"))
-          nodes.crossJoin(broadcast(sc))
-            .join(broadcast(incoming), $"node" === $"dst", "left")
-            .selectExpr("node", "seed",
-              """CASE WHEN seed = 1 THEN 15000000000 DIV (100 * ns)
-                ELSE 0L END + (85 * coalesce(inr, 0L)) DIV 100 AS r""")
-        }
-        val r1 = iterate(r0)
-        val r2 = iterate(r1)
-        r1.withColumnRenamed("r", "ppr_i1")
-          .join(r2.select($"node".as("node2"), $"r".as("ppr_i2")),
-            $"node" === $"node2")
-          .select($"node", $"seed", $"ppr_i1", $"ppr_i2")
-          .orderBy($"node")
+        Graph.personalizedPageRank(nationTradeFlows(s, dir),
+          Tables.load(s, dir, "nation")
+            .select($"n_nationkey".as("node"),
+              when($"n_nationkey".isin(0, 1, 2), 1L).otherwise(0L).as("seed")))
       },
       Some("""WITH e AS (
     SELECT c.c_nationkey AS src, s.s_nationkey AS dst,

@@ -258,6 +258,33 @@ object Streaming {
       user_id: Long, session_start: Timestamp, session_end: Timestamp,
       n_events: Long)
 
+  private def closeSession(uid: Long, s: OpenSession): SessionOut =
+    SessionOut(uid, new Timestamp(s.startMs), new Timestamp(s.endMs), s.n)
+
+  /** The extend-or-close fold both streaming sessionizers run per key and
+    * micro-batch: an event within `gapMs` of the open session's end
+    * extends it, a later one closes it and opens the next. Returns the
+    * closed sessions in time order and the session left open.
+    */
+  private def extendOrClose(uid: Long, open: Option[OpenSession],
+      events: Iterator[SessionEvent], gapMs: Long): (List[SessionOut], Option[OpenSession]) = {
+    // a micro-batch's group iterator is unordered — sort in memory
+    // (bounded by per-user-per-batch volume, not stream history)
+    val times = events.map(_.ts.getTime).toArray.sorted
+    var closed = List.empty[SessionOut]
+    var cur = open
+    times.foreach { t =>
+      cur = cur match {
+        case Some(s) if t - s.endMs <= gapMs =>
+          Some(s.copy(endMs = math.max(s.endMs, t), n = s.n + 1))
+        case Some(s) =>
+          closed ::= closeSession(uid, s); Some(OpenSession(t, t, 1))
+        case None => Some(OpenSession(t, t, 1))
+      }
+    }
+    (closed.reverse, cur)
+  }
+
   /** Batch sessionization twin: a session is a maximal run of a user's
     * events with consecutive gaps <= `gapMinutes`. Two windows over one
     * shuffle partitioning on user_id (gap flag, then running session
@@ -294,10 +321,6 @@ object Streaming {
     val sp = events.sparkSession
     import sp.implicits._
     val gapMs = gapMinutes * 60000L
-
-    def close(uid: Long, s: OpenSession) =
-      SessionOut(uid, new Timestamp(s.startMs), new Timestamp(s.endMs), s.n)
-
     events.select(col("user_id"), col("ts")).withWatermark("ts", watermarkDur)
       .as[SessionEvent]
       .groupByKey(_.user_id)
@@ -305,29 +328,16 @@ object Streaming {
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
         (uid: Long, it: Iterator[SessionEvent], state: GroupState[OpenSession]) =>
           if (state.hasTimedOut) {
-            val out = state.getOption.map(close(uid, _)).iterator
+            val out = state.getOption.map(closeSession(uid, _)).iterator
             state.remove()
             out
           } else {
-            // a micro-batch's group iterator is unordered — sort in memory
-            // (bounded by per-user-per-batch volume, not stream history)
-            val times = it.map(_.ts.getTime).toArray.sorted
-            var closed = List.empty[SessionOut]
-            var cur = state.getOption
-            times.foreach { t =>
-              cur = cur match {
-                case Some(s) if t - s.endMs <= gapMs =>
-                  Some(s.copy(endMs = math.max(s.endMs, t), n = s.n + 1))
-                case Some(s) =>
-                  closed ::= close(uid, s); Some(OpenSession(t, t, 1))
-                case None => Some(OpenSession(t, t, 1))
-              }
-            }
-            cur.foreach { s =>
+            val (closed, open) = extendOrClose(uid, state.getOption, it, gapMs)
+            open.foreach { s =>
               state.update(s)
               state.setTimeoutTimestamp(s.endMs + gapMs)
             }
-            closed.reverse.iterator
+            closed.iterator
           }
       }
   }
@@ -354,36 +364,23 @@ object Streaming {
         org.apache.spark.sql.Encoders.product[OpenSession],
         org.apache.spark.sql.streaming.TTLConfig.NONE)
 
-    private def close(uid: Long, s: OpenSession) =
-      SessionOut(uid, new Timestamp(s.startMs), new Timestamp(s.endMs), s.n)
-
     override def handleInputRows(uid: Long, rows: Iterator[SessionEvent],
         timers: org.apache.spark.sql.streaming.TimerValues): Iterator[SessionOut] = {
-      val times = rows.map(_.ts.getTime).toArray.sorted
-      var closed = List.empty[SessionOut]
-      var cur = if (session.exists()) Some(session.get()) else None
-      times.foreach { t =>
-        cur = cur match {
-          case Some(s) if t - s.endMs <= gapMs =>
-            Some(s.copy(endMs = math.max(s.endMs, t), n = s.n + 1))
-          case Some(s) =>
-            closed ::= close(uid, s); Some(OpenSession(t, t, 1))
-          case None => Some(OpenSession(t, t, 1))
-        }
-      }
-      cur.foreach { s =>
+      val (closed, open) = extendOrClose(uid,
+        if (session.exists()) Some(session.get()) else None, rows, gapMs)
+      open.foreach { s =>
         session.update(s)
         // one live timer per key: re-arm at the new idle deadline
         getHandle.listTimers().foreach(t => getHandle.deleteTimer(t.asInstanceOf[Long]))
         getHandle.registerTimer(s.endMs + gapMs)
       }
-      closed.reverse.iterator
+      closed.iterator
     }
 
     override def handleExpiredTimer(uid: Long,
         timers: org.apache.spark.sql.streaming.TimerValues,
         info: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[SessionOut] = {
-      val out = if (session.exists()) Iterator(close(uid, session.get())) else Iterator.empty
+      val out = if (session.exists()) Iterator(closeSession(uid, session.get())) else Iterator.empty
       session.clear()
       out
     }

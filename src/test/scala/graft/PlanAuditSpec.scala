@@ -704,6 +704,37 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(pinned.forall { case (n, max) => got(n) <= max }, s"jobs per op: $got vs pins $pinned")
   }
 
+  test("graph family's total Spark jobs, build + execution, are pinned") {
+    // The graph queries are built from shared operators over edge lists
+    // (graft.operators.Graph); sharing must add no barrier, collect or
+    // stage to any of them. Pinned at the counts measured at sf0.001 with
+    // one noop write before the operators were shared.
+    val pinned = Map(
+      "agg_gravity_model" -> 14,
+      "graph_assortativity" -> 20,
+      "graph_bfs_distance" -> 32,
+      "graph_clustering_coeff" -> 13,
+      "graph_community_modularity" -> 25,
+      "graph_copurchase_projection" -> 3,
+      "graph_harmonic_centrality" -> 26,
+      "graph_hits_power" -> 35,
+      "graph_kcore_peel" -> 22,
+      "graph_ktruss_cap_sweep" -> 31,
+      "graph_ktruss_capped" -> 14,
+      "graph_ktruss_peel" -> 19,
+      "graph_label_propagation" -> 18,
+      "graph_neighbor_jaccard" -> 10,
+      "graph_pagerank_fixed" -> 20,
+      "graph_personalized_pagerank" -> 20,
+      "graph_shortest_hops" -> 6,
+      "graph_triangle_count" -> 10,
+      "graph_triangle_doulion" -> 9)
+    val got = pinned.keys.toSeq.sorted.map { name =>
+      name -> buildJobs(name)(_.write.format("noop").mode("overwrite").save())
+    }.toMap
+    assert(pinned.forall { case (n, max) => got(n) <= max }, s"jobs per op: $got vs pins $pinned")
+  }
+
   test("no registered query plans an unpartitioned window over unreduced input") {
     // An unpartitioned Window moves ALL its input through one task — the
     // classic single-task scale killer (WindowExec warns exactly this).

@@ -43,6 +43,14 @@ class SourceGuardSpec extends AnyFunSuite {
       Seq("src/main/scala/graft/Bench.scala"))
   }
 
+  test("the nation-trade join is written once in src/main") {
+    // The graph family and agg_gravity_model share one
+    // lineitem⋈orders⋈customer⋈supplier build; its customer leg names it.
+    assert(codeLines("""broadcast(c), $"o_custkey" === $"c_custkey"""", "src/main") ==
+      Seq("src/main/scala/graft/queries/RelationalQueries.scala" ->
+        """.join(broadcast(c), $"o_custkey" === $"c_custkey")"""))
+  }
+
   test("no engine or tool code sets a spark.sql.codegen conf") {
     // The codegen working set is fitted by the plans the queries build; a
     // larger codegen cache (spark.sql.codegen.cache.maxEntries, a static

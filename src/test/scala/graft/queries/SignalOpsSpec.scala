@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{Concurrently, SparkEntry, Tables, TestSpark}
-import graft.queries.RelationalQueries.releaseCheckpoint
+import graft.operators.Graph.releaseCheckpoint
 import org.apache.spark.SparkException
 import org.apache.spark.sql.{DataFrame, Row}
 import org.scalatest.funsuite.AnyFunSuite
@@ -554,7 +554,9 @@ class SignalOpsSpec extends AnyFunSuite {
 
   test("checkpointing graph queries return their serial rows when run concurrently") {
     val names = Seq("graph_ktruss_capped", "graph_ktruss_cap_sweep", "graph_kcore_peel",
-      "graph_shortest_hops")
+      "graph_shortest_hops", "graph_hits_power", "graph_harmonic_centrality",
+      "graph_bfs_distance", "graph_label_propagation", "graph_community_modularity",
+      "graph_triangle_doulion", "graph_ktruss_peel")
     val serial = names.map(n => run(n).toSeq)
     assert(serial.forall(_.nonEmpty))
     (1 to 3).foreach { _ =>

@@ -18,7 +18,8 @@ import graft.sources.Sinks
   *   dq <configYaml> <sfDir> [fecha] run a YAML-configured DQ job
   *   profile <sfDir> <outDir> t1,t2  profile tables, APPEND to outDir
   *   snapshot <sfDir> <outDir> [asOf] capture/merge the SCD-2 snapshot
-  *   explain <sfDir> <q1,q2,…>       print formatted physical plans
+  *   explain <sfDir> [q1,q2,…]       print formatted physical plans and
+  *                                   output schemas (all queries if none named)
   *   clean <warehouseDir>            delete build artifacts
   */
 object EngineCli {
@@ -103,13 +104,15 @@ object EngineCli {
     // a real pipeline loads from disk), so explaining those executes small
     // Spark jobs; the main query plan itself is still not run.
     case "explain" =>
-      val Seq(sfDir, nameCsv) = args: @unchecked
-      nameCsv.split(",").foreach { name =>
+      val Seq(sfDir, rest @ _*) = args: @unchecked
+      val names = rest.headOption.fold(SparkEntry.queries.keys.toSeq.sorted)(_.split(",").toSeq)
+      names.foreach { name =>
         val q = SparkEntry.queries.getOrElse(name,
           throw new IllegalArgumentException(s"unknown query: $name"))
         println(s"== $name ==")
-        println(q(spark, sfDir).queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode))
+        val df = q(spark, sfDir)
+        println(df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode))
+        println(df.schema.json)
       }
 
     case "clean" =>

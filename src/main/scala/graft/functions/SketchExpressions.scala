@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.columnshim.ExpressionColumns.{column, expression}
 import org.apache.spark.sql.types._
 
 /** Native sketch kernels for the dedup/similarity operators.
@@ -167,34 +167,14 @@ case class CountMinEstimate(sketch: Expression, item: Expression)
 }
 
 object SketchFunctions {
-  private def litInt(e: Expression): Int = e.eval(null) match {
-    case i: Int => i
-    case l: Long => l.toInt
-    case other => throw new IllegalArgumentException(s"expected literal int, got $other")
-  }
-  private def litLong(e: Expression): Long = e.eval(null) match {
-    case i: Int => i.toLong
-    case l: Long => l
-    case other => throw new IllegalArgumentException(s"expected literal long, got $other")
-  }
-
-  def register(spark: SparkSession): Unit = {
-    Registration.ifAbsent(spark, "minhash64")(es => MinHashSignature(es.head, litInt(es(1))))
-    Registration.ifAbsent(spark, "rh_signature")(
-      es => RhSignature(es.head, litInt(es(1)), litLong(es(2))))
-    Registration.ifAbsent(spark, "cms_estimate")(es => CountMinEstimate(es(0), es(1)))
-    Registration.ifAbsent(spark, "sorted_intersect_count")(
-      es => SortedIntersectCount(es(0), es(1)))
-  }
-
   def minhash64(baseHashes: Column, numHashes: Int): Column =
-    call_function("minhash64", baseHashes, lit(numHashes))
+    column(MinHashSignature(expression(baseHashes), numHashes))
   def cmsEstimate(sketch: Column, item: Column): Column =
-    call_function("cms_estimate", sketch, item)
+    column(CountMinEstimate(expression(sketch), expression(item)))
   def rhSignature(vec: Column, bits: Int, seed: Long): Column =
-    call_function("rh_signature", vec, lit(bits), lit(seed))
+    column(RhSignature(expression(vec), bits, seed))
   def sortedIntersectCount(a: Column, b: Column): Column =
-    call_function("sorted_intersect_count", a, b)
+    column(SortedIntersectCount(expression(a), expression(b)))
 }
 
 /** sorted_intersect_count(a, b) → bigint: intersection size of two

@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.columnshim.ExpressionColumns.{column, expression}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -825,67 +825,20 @@ case class BpePairs(word: Expression, weight: Expression, merges: Expression)
 }
 
 object TextHashFunctions {
-  def register(spark: SparkSession): Unit = {
-    Registration.ifAbsent(spark, "char_stats")(es => CharStats(es.head))
-    Registration.ifAbsent(spark, "rolling_hash64")(es => RollingHash64(es.head))
-    Registration.ifAbsent(spark, "simhash64")(es => SimHash64(es.head))
-    Registration.ifAbsent(spark, "simhash64_md5")(es => SimHash64(es.head, md5Based = true))
-    Registration.ifAbsent(spark, "token_rolling_hash64")(es => TokenRollingHash64(es.head))
-    Registration.ifAbsent(spark, "text_quality")(es => TextQuality(es.head))
-    Registration.ifAbsent(spark, "text_lang_id")(es => TextLangId(es.head))
-    Registration.ifAbsent(spark, "gopher_stats")(es => GopherStats(es.head))
-    Registration.ifAbsent(spark, "repetition_stats")(es => RepetitionStats(es.head))
-    Registration.ifAbsent(spark, "bpe_pairs")(es => BpePairs(es(0), es(1), es(2)))
-    Registration.ifAbsent(spark, "shingle_hashes") { es =>
-      val n = es(1).eval(null) match {
-        case i: Int => i
-        case l: Long => l.toInt
-        case other => throw new IllegalArgumentException(s"shingle_hashes n must be a literal int, got $other")
-      }
-      ShingleHashes(es.head, n)
-    }
-    Registration.ifAbsent(spark, "span_md5s") { es =>
-      val n = es(1).eval(null) match {
-        case i: Int => i
-        case l: Long => l.toInt
-        case other => throw new IllegalArgumentException(s"span_md5s spanWords must be a literal int, got $other")
-      }
-      SpanMd5s(es.head, n)
-    }
-    Registration.ifAbsent(spark, "token_window_hash64") { es =>
-      val n = es(1).eval(null) match {
-        case i: Int => i
-        case l: Long => l.toInt
-        case other => throw new IllegalArgumentException(s"token_window_hash64 k must be a literal int, got $other")
-      }
-      TokenWindowHashes(es.head, n)
-    }
-    Registration.ifAbsent(spark, "span_texts") { es =>
-      val n = es(1).eval(null) match {
-        case i: Int => i
-        case l: Long => l.toInt
-        case other => throw new IllegalArgumentException(s"span_texts spanWords must be a literal int, got $other")
-      }
-      SpanTexts(es.head, n)
-    }
-  }
-  def charStats(c: Column): Column = call_function("char_stats", c)
-  def rollingHash64(c: Column): Column = call_function("rolling_hash64", c)
-  def simhash64(c: Column): Column = call_function("simhash64", c)
-  def simhash64Md5(c: Column): Column = call_function("simhash64_md5", c)
-  def tokenRollingHash64(c: Column): Column = call_function("token_rolling_hash64", c)
-  def textQuality(c: Column): Column = call_function("text_quality", c)
-  def textLangId(c: Column): Column = call_function("text_lang_id", c)
-  def gopherStats(c: Column): Column = call_function("gopher_stats", c)
-  def repetitionStats(c: Column): Column = call_function("repetition_stats", c)
+  def charStats(c: Column): Column = column(CharStats(expression(c)))
+  def rollingHash64(c: Column): Column = column(RollingHash64(expression(c)))
+  def simhash64(c: Column): Column = column(SimHash64(expression(c)))
+  def simhash64Md5(c: Column): Column = column(SimHash64(expression(c), md5Based = true))
+  def tokenRollingHash64(c: Column): Column = column(TokenRollingHash64(expression(c)))
+  def textQuality(c: Column): Column = column(TextQuality(expression(c)))
+  def textLangId(c: Column): Column = column(TextLangId(expression(c)))
+  def gopherStats(c: Column): Column = column(GopherStats(expression(c)))
+  def repetitionStats(c: Column): Column = column(RepetitionStats(expression(c)))
   def bpePairs(word: Column, weight: Column, merges: Column): Column =
-    call_function("bpe_pairs", word, weight, merges)
-  def shingleHashes(c: Column, n: Int): Column =
-    call_function("shingle_hashes", c, org.apache.spark.sql.functions.lit(n))
-  def spanMd5s(c: Column, spanWords: Int): Column =
-    call_function("span_md5s", c, org.apache.spark.sql.functions.lit(spanWords))
-  def spanTexts(c: Column, spanWords: Int): Column =
-    call_function("span_texts", c, org.apache.spark.sql.functions.lit(spanWords))
+    column(BpePairs(expression(word), expression(weight), expression(merges)))
+  def shingleHashes(c: Column, n: Int): Column = column(ShingleHashes(expression(c), n))
+  def spanMd5s(c: Column, spanWords: Int): Column = column(SpanMd5s(expression(c), spanWords))
+  def spanTexts(c: Column, spanWords: Int): Column = column(SpanTexts(expression(c), spanWords))
   def tokenWindowHash64(c: Column, k: Int): Column =
-    call_function("token_window_hash64", c, org.apache.spark.sql.functions.lit(k))
+    column(TokenWindowHashes(expression(c), k))
 }

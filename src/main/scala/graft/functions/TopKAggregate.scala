@@ -3,14 +3,14 @@ package graft.functions
 import java.nio.ByteBuffer
 import java.util.{PriorityQueue => JPriorityQueue}
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.columnshim.ExpressionColumns.{column, expression}
 import org.apache.spark.sql.types._
 
 /** Bounded-state top-k aggregation (north-star similarity search).
@@ -153,22 +153,11 @@ object TopKBuffer {
 }
 
 object TopKFunctions {
-  def register(spark: SparkSession): Unit = {
-    Registration.ifAbsent(spark, "topk_pairs") { es =>
-      val k = es(1).eval(null) match {
-        case i: Int => i
-        case l: Long => l.toInt
-        case other => throw new IllegalArgumentException(s"topk_pairs k must be a literal int, got $other")
-      }
-      TopKPairs(es.head, k)
-    }
-  }
-
   /** agg column: array<struct<score,id>> of the k best pairs, best first.
     * NOTE: exact (score, id) duplicate input rows are counted once (set
     * semantics, not bag) — see [[TopKPairs]]; use `ORDER BY ... LIMIT k`
     * if duplicate pairs must be preserved.
     */
   def topKPairs(pair: Column, k: Int): Column =
-    call_function("topk_pairs", pair, org.apache.spark.sql.functions.lit(k))
+    column(TopKPairs(expression(pair), k))
 }

@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.columnshim.ExpressionColumns.{column, expression}
 import org.apache.spark.sql.types._
 
 /** Native Catalyst expressions for embedding math over
@@ -526,34 +526,20 @@ object MmrKernel {
   }
 }
 
-/** Session registration + typed Column API. */
+/** Typed Column API. */
 object VectorFunctions {
-  private def litInt(e: Expression): Int = e.eval(null) match {
-    case i: Int => i
-    case l: Long => l.toInt
-    case other => throw new IllegalArgumentException(s"expected literal int, got $other")
-  }
-
-  def register(spark: SparkSession): Unit = {
-    Registration.ifAbsent(spark, "cosine_sim")(es => CosineSimilarity(es(0), es(1)))
-    Registration.ifAbsent(spark, "inner_product")(es => InnerProduct(es(0), es(1)))
-    Registration.ifAbsent(spark, "ivf_route")(es => IvfRoute(es(0), es(1), litInt(es(2))))
-    Registration.ifAbsent(spark, "pq_encode")(es => PqEncode(es(0), es(1), litInt(es(2))))
-    Registration.ifAbsent(spark, "pq_dtable")(es => PqDtable(es(0), es(1), litInt(es(2))))
-    Registration.ifAbsent(spark, "pq_adc")(es => PqAdc(es(0), es(1)))
-    Registration.ifAbsent(spark, "l2_sq")(es => L2Squared(es(0), es(1)))
-    Registration.ifAbsent(spark, "sq8_encode")(es => Sq8Encode(es(0)))
-  }
-
-  def cosineSim(a: Column, b: Column): Column = call_function("cosine_sim", a, b)
-  def innerProduct(a: Column, b: Column): Column = call_function("inner_product", a, b)
-  def l2Sq(a: Column, b: Column): Column = call_function("l2_sq", a, b)
+  def cosineSim(a: Column, b: Column): Column =
+    column(CosineSimilarity(expression(a), expression(b)))
+  def innerProduct(a: Column, b: Column): Column =
+    column(InnerProduct(expression(a), expression(b)))
+  def l2Sq(a: Column, b: Column): Column = column(L2Squared(expression(a), expression(b)))
   def ivfRoute(vec: Column, cents: Column, nProbe: Int): Column =
-    call_function("ivf_route", vec, cents, org.apache.spark.sql.functions.lit(nProbe))
+    column(IvfRoute(expression(vec), expression(cents), nProbe))
   def pqEncode(vec: Column, seeds: Column, m: Int): Column =
-    call_function("pq_encode", vec, seeds, org.apache.spark.sql.functions.lit(m))
+    column(PqEncode(expression(vec), expression(seeds), m))
   def pqDtable(vec: Column, seeds: Column, m: Int): Column =
-    call_function("pq_dtable", vec, seeds, org.apache.spark.sql.functions.lit(m))
-  def pqAdc(codes: Column, dtable: Column): Column = call_function("pq_adc", codes, dtable)
-  def sq8Encode(vec: Column): Column = call_function("sq8_encode", vec)
+    column(PqDtable(expression(vec), expression(seeds), m))
+  def pqAdc(codes: Column, dtable: Column): Column =
+    column(PqAdc(expression(codes), expression(dtable)))
+  def sq8Encode(vec: Column): Column = column(Sq8Encode(expression(vec)))
 }

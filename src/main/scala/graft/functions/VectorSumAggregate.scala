@@ -2,13 +2,13 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.columnshim.ExpressionColumns.{column, expression}
 import org.apache.spark.sql.types._
 
 /** Exact element-wise vector sum in fixed point — the Lloyd update step
@@ -106,22 +106,9 @@ case class FixedPointVecSum(
 }
 
 object VectorAggFunctions {
-  private def litInt(e: Expression): Int = e.eval(null) match {
-    case i: Int => i
-    case l: Long => l.toInt
-    case other => throw new IllegalArgumentException(
-      s"vec_fixedpoint_sum scaleBits must be a literal int, got $other")
-  }
-
-  def register(spark: SparkSession): Unit =
-    Registration.ifAbsent(spark, "vec_fixedpoint_sum") { es =>
-      FixedPointVecSum(es.head, litInt(es(1)))
-    }
-
   /** agg column: array<bigint> of per-component sums of
     * floor(x · 2^scaleBits).
     */
   def vecFixedPointSum(vec: Column, scaleBits: Int): Column =
-    call_function("vec_fixedpoint_sum", vec,
-      org.apache.spark.sql.functions.lit(scaleBits))
+    column(FixedPointVecSum(expression(vec), scaleBits))
 }

@@ -24,10 +24,6 @@ object Dedup {
     */
   private def shingleHashed(docs: DataFrame, idCol: String, textCol: String,
       shingleSize: Int): DataFrame = {
-    graft.functions.TextHashFunctions.register(docs.sparkSession)
-    // every shingle-set consumer may verify via the sorted-merge
-    // intersection kernel (jaccard/containment below)
-    graft.functions.SketchFunctions.register(docs.sparkSession)
     docs.select(col(idCol).as("id"),
       graft.functions.TextHashFunctions.shingleHashes(col(textCol), shingleSize).as("sh"))
   }
@@ -95,7 +91,6 @@ object Dedup {
       spanWords: Int = 4): DataFrame = {
     require(spanWords >= 1, "spanWords >= 1")
     import org.apache.spark.sql.expressions.Window
-    graft.functions.TextHashFunctions.register(docs.sparkSession)
     val sp = docs.select(col(idCol).as("id"),
         posexplode(graft.functions.TextHashFunctions.spanTexts(col(textCol), spanWords))
           .as(Seq("span_idx", "span")))
@@ -149,7 +144,6 @@ object Dedup {
       windowTokens: Int = 8): DataFrame = {
     require(windowTokens >= 2, "windowTokens >= 2")
     import org.apache.spark.sql.expressions.Window
-    graft.functions.TextHashFunctions.register(docs.sparkSession)
     val d = docs.select(col(idCol).as("id"), col(textCol).as("text"))
     val wh = d.select(col("id"),
       posexplode(graft.functions.TextHashFunctions
@@ -211,7 +205,6 @@ object Dedup {
     require(windowTokens >= 2, "windowTokens >= 2")
     require(dropPermille >= 0 && dropPermille <= 1000,
       "dropPermille in [0, 1000]")
-    graft.functions.TextHashFunctions.register(docs.sparkSession)
     val d = docs.select(col(idCol).as("id"), col(sourceCol).as("source"),
       col(textCol).as("text"))
     val wh = d.select(col("id"),
@@ -252,7 +245,6 @@ object Dedup {
   private def spanFingerprints(docs: DataFrame, idCol: String, textCol: String,
       spanWords: Int): DataFrame = {
     require(spanWords >= 1, "spanWords >= 1")
-    graft.functions.TextHashFunctions.register(docs.sparkSession)
     docs.select(col(idCol).as("id"),
       posexplode(graft.functions.TextHashFunctions.spanMd5s(col(textCol), spanWords))
         .as(Seq("span_idx", "h")))
@@ -327,7 +319,6 @@ object Dedup {
     require(spanWords >= 1, "spanWords >= 1")
     require(minDocs >= 2, "minDocs >= 2")
     import org.apache.spark.sql.expressions.Window
-    graft.functions.TextHashFunctions.register(docs.sparkSession)
     val sp = docs.select(col(idCol).as("id"), col(sourceCol).as("source"),
         posexplode(graft.functions.TextHashFunctions.spanTexts(col(textCol), spanWords))
           .as(Seq("span_idx", "span")))
@@ -525,7 +516,6 @@ object Dedup {
       shingleSize: Int = 3,
       bands: Int = 16,
       rowsPerBand: Int = 4): DataFrame = {
-    graft.functions.SketchFunctions.register(docs.sparkSession)
     val shingled = shingleHashed(docs, idCol, textCol, shingleSize)
     val withSig = shingled
       .withColumn("sig", minhashSignature(col("sh"), bands * rowsPerBand))
@@ -605,7 +595,6 @@ object Dedup {
         val k = 64 - java.lang.Long.numberOfLeadingZeros(m - 1L)
         math.min(16, math.max(4, (k + rowsPerBand - 1) / rowsPerBand))
       }
-    graft.functions.SketchFunctions.register(docs.sparkSession)
     val mask = (1L << b) - 1
     val shingled = shingleHashed(docs, idCol, textCol, shingleSize)
     val withSig = shingled
@@ -652,7 +641,6 @@ object Dedup {
       shingleSize: Int = 3,
       bands: Int = 16,
       rowsPerBand: Int = 4): DataFrame = {
-    graft.functions.SketchFunctions.register(existing.sparkSession)
     def banded(docs: DataFrame): (DataFrame, DataFrame) = {
       val shingled = shingleHashed(docs, idCol, textCol, shingleSize)
       val withSig = shingled
@@ -786,7 +774,6 @@ object Dedup {
       textCol: String,
       shingleSize: Int = 3,
       numHashes: Int = 64): DataFrame = {
-    graft.functions.SketchFunctions.register(docs.sparkSession)
     shingleHashed(docs, idCol, textCol, shingleSize)
       .select(col("id"), minhashSignature(col("sh"), numHashes).as("sig"))
   }
@@ -1010,7 +997,6 @@ object Dedup {
       threshold: Double,
       shingleSize: Int,
       selfJoin: Boolean): DataFrame = {
-    graft.functions.SketchFunctions.register(docsA.sparkSession)
     val candidates = bandA.alias("l").join(bandB.alias("r"),
         col("l.band") === col("r.band") && col("l.bkey") === col("r.bkey"))
       .select(col("l.id").as("doc_a"), col("r.id").as("doc_b"))
@@ -1225,7 +1211,6 @@ object Dedup {
       maxDistance: Int = 3,
       md5TokenHash: Boolean = false): DataFrame = {
     require(maxDistance <= 3, "the 4-band scheme only guarantees recall for distance <= 3")
-    graft.functions.TextHashFunctions.register(docs.sparkSession)
     // md5TokenHash swaps the FNV-1a token hash for md5-low-64: slower,
     // but recomputable by any ANSI engine — with the pigeonhole recall
     // guarantee this makes the whole operator exactly oracle-checkable
@@ -1271,7 +1256,6 @@ object Dedup {
       idCol: String,
       vecCol: String,
       threshold: Double): DataFrame = {
-    graft.functions.VectorFunctions.register(embeddings.sparkSession)
     val l = embeddings.select(col(idCol).as("id_a"), col(vecCol).as("v_a"))
     val r = embeddings.select(col(idCol).as("id_b"), col(vecCol).as("v_b"))
     l.join(r, col("id_a") < col("id_b"))
@@ -1321,7 +1305,6 @@ object Dedup {
       vecCol: String,
       threshold: Double,
       numCells: Int = 0): DataFrame = {
-    graft.functions.VectorFunctions.register(embeddings.sparkSession)
     val cand = embeddings.select(col(idCol).as("cid"), col(vecCol).as("cvec"))
     val cells =
       if (numCells > 0) numCells
@@ -1365,7 +1348,6 @@ object Dedup {
     */
   private def semDedupReport(cand: DataFrame, index: Similarity.CellIndex,
       threshold: Double): DataFrame = {
-    graft.functions.VectorFunctions.register(cand.sparkSession)
     val withCell = cand.join(index.route(cand), "cid")
     val pairs = withCell
       .select(col("cell"), col("cid").as("id_a"), col("cvec").as("va"))
@@ -1430,7 +1412,6 @@ object Dedup {
       stored: DataFrame, // (cid, cvec) — vectors for the verify cosines
       batch: DataFrame, // (cid, cvec) — incoming
       threshold: Double): DataFrame = {
-    graft.functions.VectorFunctions.register(stored.sparkSession)
     val storedCells = stored.join(storedAssign, "cid")
       .select(col("cell"), col("cid").as("sid"), col("cvec").as("sv"))
     val batchCells = batch
@@ -1495,8 +1476,6 @@ object Dedup {
       threshold: Double,
       bits: Int = 0,
       seed: Long = 42L): DataFrame = {
-    graft.functions.VectorFunctions.register(embeddings.sparkSession)
-    graft.functions.SketchFunctions.register(embeddings.sparkSession)
     val nBits =
       if (bits > 0) bits
       else {

@@ -436,7 +436,6 @@ object Graph {
   // 97 at sf0.1); a hub-heavy graph pairs this with the degree cap of
   // `ktrussCapped`.
   private def ktrussSupport(ed: DataFrame): DataFrame = {
-    graft.functions.SketchFunctions.register(ed.sparkSession)
     val adj = bothWays(ed, "n", "m")
       .groupBy(col("n")).agg(sort_array(collect_list(col("m"))).as("nbrs"))
     // shuffle_hash on the adjacency side of BOTH joins: under the

@@ -31,7 +31,6 @@ object Similarity {
 
   /** (query_id, neighbor_id, sim, rank) from a (qid, scored-pair) relation. */
   private def rankTopK(scored: DataFrame, k: Int): DataFrame = {
-    TopKFunctions.register(scored.sparkSession)
     scored
       .select(col("qid"),
         struct(col("sim").as("score"), col("cid").cast("long").as("id")).as("p"))
@@ -50,7 +49,6 @@ object Similarity {
       queries: DataFrame, // (qid, qvec)
       candidates: DataFrame, // (cid, cvec)
       k: Int): DataFrame = {
-    VectorFunctions.register(candidates.sparkSession)
     val scored = candidates.join(broadcast(queries), col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"),
         VectorFunctions.cosineSim(col("qvec"), col("cvec")).as("sim"))
@@ -72,7 +70,6 @@ object Similarity {
       queries: DataFrame, // (qid, qvec)
       candidates: DataFrame, // (cid, cvec)
       k: Int): DataFrame = {
-    VectorFunctions.register(candidates.sparkSession)
     val scored = candidates.join(broadcast(queries), col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"),
         VectorFunctions.innerProduct(col("qvec"), col("cvec")).as("sim"))
@@ -156,8 +153,6 @@ object Similarity {
       tables: Int = 12,
       seed: Long = 42L,
       probeHamming: Int = 2): DataFrame = {
-    VectorFunctions.register(candidates.sparkSession)
-    graft.functions.SketchFunctions.register(candidates.sparkSession)
     def tableSeed(t: Int): Long = seed + 0x9E3779B97F4A7C15L * t
     val m2 = candidates.agg(
       max(VectorFunctions.innerProduct(col("cvec"), col("cvec"))).as("__m2"))
@@ -202,7 +197,6 @@ object Similarity {
       queries: DataFrame, // (qid, qvec)
       candidates: DataFrame, // (cid, cvec)
       threshold: Double): DataFrame = {
-    VectorFunctions.register(candidates.sparkSession)
     candidates.join(broadcast(queries), col("qid") =!= col("cid"))
       .select(col("qid").as("query_id"), col("cid").as("neighbor_id"),
         VectorFunctions.cosineSim(col("qvec"), col("cvec")).as("sim"))
@@ -225,8 +219,6 @@ object Similarity {
       tables: Int = 4,
       seed: Long = 42L,
       probeHamming: Int = 1): DataFrame = {
-    VectorFunctions.register(candidates.sparkSession)
-    graft.functions.SketchFunctions.register(candidates.sparkSession)
     def tableSeed(t: Int): Long = seed + 0x9E3779B97F4A7C15L * t
     val q = queries
       .select(col("qid"), col("qvec"),
@@ -310,8 +302,6 @@ object Similarity {
       tables: Int = 4,
       seed: Long = 42L,
       probeHamming: Int = 1): DataFrame = {
-    VectorFunctions.register(candidates.sparkSession)
-    graft.functions.SketchFunctions.register(candidates.sparkSession)
     def tableSeed(t: Int): Long = seed + 0x9E3779B97F4A7C15L * t
     val q = queries
       .select(col("qid"), col("qvec"),
@@ -398,7 +388,6 @@ object Similarity {
     assignCells(centroids, vectors)
 
   private def assignCells(centroids: DataFrame, vectors: DataFrame): DataFrame = {
-    VectorFunctions.register(vectors.sparkSession)
     argmaxCell(vectors.crossJoin(broadcast(centroids))
       .select(col("cid"),
         VectorFunctions.cosineSim(col("cvec"), col("centroid")).as("sim"),
@@ -639,7 +628,6 @@ object Similarity {
       candidates: DataFrame, // (cid, cvec), vectors for scoring only
       k: Int,
       nProbe: Int): DataFrame = {
-    VectorFunctions.register(candidates.sparkSession)
     val cAssigned = assignments.join(candidates, "cid")
     val qProbes = rankTopK(
         queries.crossJoin(broadcast(centroids))
@@ -729,7 +717,6 @@ object Similarity {
       ksub: Int,
       spread: Boolean = true): (DataFrame, DataFrame) = {
     val s = candidates.sparkSession
-    VectorFunctions.register(s)
     val picked = pqSeedRows(candidates, ksub, spread)
     import s.implicits._
     val seeds = picked.toSeq.toDF("code", "vec")
@@ -753,7 +740,6 @@ object Similarity {
       queries: DataFrame, // (qid, qvec)
       k: Int,
       m: Int): DataFrame = {
-    VectorFunctions.register(codes.sparkSession)
     val mat = seedMatrix(seeds)
     val dts = queries.select(col("qid"),
       VectorFunctions.pqDtable(col("qvec"), mat, m).as("dt"))
@@ -808,7 +794,6 @@ object Similarity {
       k: Int,
       nProbe: Int,
       m: Int): DataFrame = {
-    VectorFunctions.register(codes.sparkSession)
     val mat = seedMatrix(seeds)
     val dts = queries.select(col("qid"),
       VectorFunctions.pqDtable(col("qvec"), mat, m).as("dt"))
@@ -901,7 +886,6 @@ object Similarity {
     * ⇒ the oracle replay is unchanged.
     */
   def sq8Index(candidates: DataFrame): DataFrame = {
-    VectorFunctions.register(candidates.sparkSession)
     candidates
       .select(col("cid"), VectorFunctions.sq8Encode(col("cvec")).as("e"))
       .select(col("cid"), col("e.scale").as("scale"), col("e.codes").as("codes"))
@@ -938,7 +922,6 @@ object Similarity {
       candidates: DataFrame, // (cid, cvec)
       k: Int,
       rerank: Int = 50): DataFrame = {
-    VectorFunctions.register(candidates.sparkSession)
     val approx = index.join(broadcast(queries), col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"),
         (col("scale") / lit(127.0d) *
@@ -1042,7 +1025,6 @@ object Similarity {
       k: Int,
       nProbe: Int,
       rerank: Int = 50): DataFrame = {
-    VectorFunctions.register(fused.sparkSession)
     val qProbes = rankTopK(
         queries.crossJoin(broadcast(centroids))
           .select(col("qid"), col("cell_id").as("cid"),
@@ -1094,7 +1076,6 @@ object Similarity {
       sampleN: Int = 1024,
       iters: Int = 8): (DataFrame, DataFrame) = {
     val s = candidates.sparkSession
-    VectorFunctions.register(s)
     val sample = candidates
       .orderBy(md5(col("cid").cast("string")), col("cid")).limit(sampleN)
       .select(col("cvec")).collect().map(_.getSeq[Float](0).toArray)
@@ -1176,7 +1157,6 @@ object Similarity {
       codesPath: String,
       m: Int,
       batchId: Option[Long] = None): Unit = {
-    VectorFunctions.register(incoming.sparkSession)
     val mat = seedMatrix(seeds)
     writeRotation(
       incoming.select(col("cid"),
@@ -1208,7 +1188,6 @@ object Similarity {
       storedSeeds: DataFrame, // (code, vec), the frozen quantizer
       vectors: DataFrame, // (cid, cvec), the CURRENT corpus
       m: Int): DataFrame = {
-    VectorFunctions.register(vectors.sparkSession)
     val ksub = storedSeeds.count().toInt
     val oldMat = seedMatrix(storedSeeds)
     val oldCodes = vectors.select(col("cid"),
@@ -1279,7 +1258,6 @@ object Similarity {
       val (s2, c2) = pqIndex(vectors, m, ksub, spread = false)
       (2, s2, c2)
     } else {
-      VectorFunctions.register(vectors.sparkSession)
       val mat = seedMatrix(storedSeeds)
       (1, storedSeeds, vectors.select(col("cid"),
         VectorFunctions.pqEncode(col("cvec"), mat, m).as("codes")))
@@ -1315,7 +1293,6 @@ object Similarity {
       k: Int,
       numCentroids: Option[Int] = None,
       nProbe: Int = 8): DataFrame = {
-    VectorFunctions.register(vectors.sparkSession)
     val v = vectors.select(col("vid"), col("vec"))
     // Cell count must grow with the corpus or the join is a quadratic
     // wall in disguise: fixed nc ⇒ cell size ∝ n ⇒ scored candidates
@@ -1393,7 +1370,7 @@ object Similarity {
       vectors: DataFrame, // (vid, vec)
       numCentroids: Int = 32,
       scaleBits: Int = 20): DataFrame = {
-    val v = prepKmeans(vectors)
+    val v = vectors.select(col("vid"), col("vec"))
     val (ids, mat) = seedCentroids(v, numCentroids)
     explodeCentroids(lloydAgg(v, ids, mat, scaleBits), scaleBits)
   }
@@ -1415,7 +1392,7 @@ object Similarity {
       vectors: DataFrame, // (vid, vec)
       numCentroids: Int = 32,
       scaleBits: Int = 20): DataFrame = {
-    val v = prepKmeans(vectors)
+    val v = vectors.select(col("vid"), col("vec"))
     val (ids, mat) = seedCentroids(v, numCentroids)
     val it1 = lloydState(v, ids, mat, scaleBits)
     explodeCentroids(lloydAgg(v, it1.map(_._1), it1.map(_._3.map(_.toFloat)), scaleBits),
@@ -1460,7 +1437,7 @@ object Similarity {
       s"maxIters must be >= 3 (convergence detection compares two " +
         s"collected states; use kmeansTwoStepSeeded for 2 iterations " +
         s"without the flag), got $maxIters")
-    val v = prepKmeans(vectors)
+    val v = vectors.select(col("vid"), col("vec"))
     val (ids0, mat0) = seedCentroids(v, numCentroids)
     def state(ids: Seq[Long], mat: Seq[Seq[Float]]) = lloydState(v, ids, mat, scaleBits)
     var cur = state(ids0, mat0)
@@ -1483,13 +1460,6 @@ object Similarity {
     v.sparkSession.createDataFrame(rows.asJava, StructType.fromDDL(
       "cell BIGINT NOT NULL, dim INT NOT NULL, n_members BIGINT NOT NULL, " +
         "comp_sum BIGINT NOT NULL, centroid_fp DOUBLE NOT NULL, converged BOOLEAN NOT NULL"))
-  }
-
-  private def prepKmeans(vectors: DataFrame): DataFrame = {
-    import graft.functions.VectorAggFunctions
-    VectorFunctions.register(vectors.sparkSession)
-    VectorAggFunctions.register(vectors.sparkSession)
-    vectors.select(col("vid"), col("vec"))
   }
 
   private def seedCentroids(v: DataFrame, numCentroids: Int): (Seq[Long], Seq[Seq[Float]]) = {
@@ -1552,7 +1522,6 @@ object Similarity {
       seed: Long = 42L): DataFrame = {
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
-    VectorFunctions.register(candidates.sparkSession)
 
     val trainDf = candidates.select(array_to_vector(col("cvec")).as("features"))
     // few iterations suffice: the quantizer only routes probes — recall

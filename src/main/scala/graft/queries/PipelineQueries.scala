@@ -808,7 +808,6 @@ object PipelineQueries extends QueryModule {
     QueryDef("dedup_canonical_quality",
       (s, dir) => {
         import s.implicits._
-        graft.functions.TextHashFunctions.register(s)
         val docs = Tables.load(s, dir, "documents")
         val clusters = Dedup.duplicateClusters(
           Dedup.ngramJaccardPairs(docs, "doc_id", "text", threshold = 0.8))
@@ -2151,7 +2150,6 @@ object PipelineQueries extends QueryModule {
       (s, dir) => {
         // one-pass kernels (TextProfileKernels) — bit-identical to the
         // langId/qualityScore Column compositions (TextFunctionsSpec)
-        graft.functions.TextHashFunctions.register(s)
         val d = Tables.load(s, dir, "documents")
         d.select(col("doc_id"), col("lang"),
             graft.functions.TextHashFunctions.textLangId(col("text")).as("lang_pred"),
@@ -2202,7 +2200,6 @@ object PipelineQueries extends QueryModule {
         // the split/rlike/array_intersect composition it replaced
         // (measured 9.6× at 10× data from the six per-doc passes; the
         // kernel is one scan inside codegen)
-        graft.functions.TextHashFunctions.register(s)
         val d = Tables.load(s, dir, "documents")
           .select($"doc_id",
             graft.functions.TextHashFunctions.gopherStats($"text").as("g"))
@@ -2375,7 +2372,6 @@ object PipelineQueries extends QueryModule {
     QueryDef("pipeline_full_curation",
       (s, dir) => {
         import s.implicits._
-        graft.functions.TextHashFunctions.register(s)
         val cur = Dedup.curatedDocs(Tables.load(s, dir, "documents"),
           "doc_id", "text", "source", spanWords = 4, minDocs = 5)
         val g = graft.functions.TextHashFunctions.gopherStats($"rebuilt")
@@ -2558,7 +2554,6 @@ object PipelineQueries extends QueryModule {
     QueryDef("pipeline_quality_bins",
       (s, dir) => {
         import s.implicits._
-        graft.functions.TextHashFunctions.register(s)
         val d = Tables.load(s, dir, "documents")
           .select($"doc_id",
             graft.functions.TextHashFunctions.gopherStats($"text").as("g"))
@@ -2843,7 +2838,6 @@ object PipelineQueries extends QueryModule {
     QueryDef("text_bpe_train3",
       (s, dir) => {
         import s.implicits._
-        graft.functions.TextHashFunctions.register(s)
         val types = Tables.load(s, dir, "documents")
           .select(explode(tokens($"text")).as("w"))
           .filter($"w".rlike("^[a-z]+$") && length($"w") >= 2)
@@ -3210,7 +3204,6 @@ object PipelineQueries extends QueryModule {
       (s, dir) => {
         import graft.functions.VectorFunctions
         import org.apache.spark.sql.expressions.Window
-        VectorFunctions.register(s)
         val emb = Tables.load(s, dir, "embeddings")
         val queries = emb.filter(col("vec_id") < 32)
           .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
@@ -3343,7 +3336,6 @@ object PipelineQueries extends QueryModule {
     QueryDef("sample_hard_negatives",
       (s, dir) => {
         import graft.functions.VectorFunctions
-        VectorFunctions.register(s)
         val emb = Tables.load(s, dir, "embeddings")
         val queries = emb.filter(col("vec_id") < 32)
           .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
@@ -3917,7 +3909,6 @@ object PipelineQueries extends QueryModule {
     //    are exact by the list_cosine_similarity bit-identity. ──────────
     QueryDef("text_hybrid_retrieval",
       (s, dir) => {
-        graft.functions.TopKFunctions.register(s)
         val qterms = Seq("spark", "stream", "vector")
         val docs = Tables.load(s, dir, "documents")
         val perDoc = docs.select(col("doc_id") +: size(tokens(col("text"))).as("dl") +:
@@ -4070,7 +4061,6 @@ object PipelineQueries extends QueryModule {
     //    stage (quality arithmetic, fingerprint dedup, md5 split) ───────
     QueryDef("pipeline_corpus_curation",
       (s, dir) => {
-        graft.functions.TextHashFunctions.register(s)
         val docs = Tables.load(s, dir, "documents")
         val quality = docs.filter(
           graft.functions.TextHashFunctions.textQuality(col("text")) >= 0.5)
@@ -4108,7 +4098,6 @@ object PipelineQueries extends QueryModule {
     //    count(DISTINCT fp) inside the same group. All-integer outputs. ──
     QueryDef("pipeline_dataset_card",
       (s, dir) => {
-        graft.functions.TextHashFunctions.register(s)
         val d = Tables.load(s, dir, "documents")
         val g = graft.functions.TextHashFunctions.gopherStats(col("text"))
         d.select(col("source"), col("lang"), col("n_chars"),
@@ -4162,7 +4151,6 @@ object PipelineQueries extends QueryModule {
     //    string shingles (same premise as dedup_ngram_jaccard). ─────────
     QueryDef("pipeline_decontaminate",
       (s, dir) => {
-        graft.functions.TextHashFunctions.register(s)
         val sh = graft.functions.TextHashFunctions.shingleHashes(col("text"), 8)
         val withSplit = graft.operators.Sampling.trainTestSplit(
           Tables.load(s, dir, "documents"), "doc_id", testSixteenths = 2)
@@ -4576,7 +4564,6 @@ object PipelineQueries extends QueryModule {
       (s, dir) => {
         import s.implicits._
         import graft.functions.VectorFunctions
-        VectorFunctions.register(s)
         val emb = Tables.load(s, dir, "embeddings")
         val qv = emb.filter($"vec_id" === 0L)
           .select($"embedding".as("qe"))
@@ -4934,7 +4921,6 @@ object PipelineQueries extends QueryModule {
     QueryDef("text_classifier_train",
       (s, dir) => {
         import s.implicits._
-        graft.functions.TextHashFunctions.register(s)
         val docs = Tables.load(s, dir, "documents")
         val lab = docs
           .select($"doc_id",
@@ -5337,7 +5323,6 @@ object PipelineQueries extends QueryModule {
         // it replaced paid O(tokens × distinct) boxed comparisons per doc
         // for the top-token count alone; counters are identical integers,
         // fractions the same double divisions, oracle unchanged
-        graft.functions.TextHashFunctions.register(s)
         Tables.load(s, dir, "documents")
           .filter($"doc_id" < 300)
           .select($"doc_id",
@@ -5379,7 +5364,6 @@ object PipelineQueries extends QueryModule {
     QueryDef("text_fingerprint_rolling",
       (s, dir) => {
         import org.apache.spark.sql.expressions.Window
-        graft.functions.TextHashFunctions.register(s)
         Tables.load(s, dir, "documents")
           .select(col("doc_id"),
             graft.functions.TextHashFunctions.tokenRollingHash64(tokens(col("text"))).as("fp"))
@@ -5627,7 +5611,6 @@ object PipelineQueries extends QueryModule {
     QueryDef("text_ngram_novelty",
       (s, dir) => {
         import s.implicits._
-        graft.functions.TextHashFunctions.register(s)
         val e = Tables.load(s, dir, "documents")
           .select($"doc_id",
             graft.functions.TextHashFunctions
@@ -6297,7 +6280,6 @@ object PipelineQueries extends QueryModule {
       (s, dir) => {
         import s.implicits._
         import org.apache.spark.sql.expressions.Window
-        graft.functions.VectorFunctions.register(s)
         val v = Tables.load(s, dir, "embeddings")
           .select($"vec_id", $"embedding")
         val cent = v.orderBy($"vec_id").limit(32)
@@ -6370,7 +6352,6 @@ object PipelineQueries extends QueryModule {
     QueryDef("pipeline_decontaminate_embed",
       (s, dir) => {
         import s.implicits._
-        graft.functions.VectorFunctions.register(s)
         val v = Tables.load(s, dir, "embeddings")
           .select($"vec_id", $"embedding")
         val cnt = v.agg(count(lit(1)).as("n_vecs"))
@@ -6422,7 +6403,6 @@ object PipelineQueries extends QueryModule {
     QueryDef("sim_maxsim_colbert",
       (s, dir) => {
         import s.implicits._
-        graft.functions.VectorFunctions.register(s)
         val v = Tables.load(s, dir, "embeddings")
           .select($"vec_id", $"embedding",
             expr("vec_id DIV 4").as("grp"),
@@ -6471,7 +6451,6 @@ object PipelineQueries extends QueryModule {
     QueryDef("text_langid_confusion",
       (s, dir) => {
         import s.implicits._
-        graft.functions.TextHashFunctions.register(s)
         val cells = Tables.load(s, dir, "documents")
           .select($"lang",
             graft.functions.TextHashFunctions.textLangId($"text")
@@ -6534,7 +6513,6 @@ object PipelineQueries extends QueryModule {
     QueryDef("embed_triplet_margin",
       (s, dir) => {
         import s.implicits._
-        graft.functions.VectorFunctions.register(s)
         val v = Tables.load(s, dir, "embeddings")
           .select($"vec_id", $"label".cast("long").as("lab"), $"embedding")
         val cnt = v.agg(count(lit(1)).as("n_vecs"))
@@ -6734,7 +6712,6 @@ object PipelineQueries extends QueryModule {
     QueryDef("sim_ivf_probe_sweep",
       (s, dir) => {
         import s.implicits._
-        graft.functions.VectorFunctions.register(s)
         import org.apache.spark.sql.expressions.Window
         val (queries, candidates) = querySplit(Tables.load(s, dir, "embeddings"))
         val (centroids, assign) = Similarity.ivfIndex(candidates, 64)
@@ -6990,7 +6967,6 @@ object PipelineQueries extends QueryModule {
     QueryDef("text_char_entropy",
       (s, dir) => {
         import s.implicits._
-        graft.functions.TextHashFunctions.register(s)
         val perDoc = Tables.load(s, dir, "documents")
           .select($"doc_id", $"source",
             graft.functions.TextHashFunctions.charStats($"text").as("cs"))
@@ -7201,7 +7177,6 @@ object PipelineQueries extends QueryModule {
     QueryDef("embed_nearest_centroid",
       (s, dir) => {
         import s.implicits._
-        graft.functions.VectorFunctions.register(s)
         val emb = Tables.load(s, dir, "embeddings")
           .select($"vec_id", $"label".cast("long").as("label"), $"embedding")
         val comp = emb
@@ -7341,8 +7316,6 @@ object PipelineQueries extends QueryModule {
     QueryDef("embed_intrinsic_dim",
       (s, dir) => {
         import s.implicits._
-        graft.functions.VectorFunctions.register(s)
-        graft.functions.TopKFunctions.register(s)
         val emb = Tables.load(s, dir, "embeddings")
         val queries = emb.filter(col("vec_id") < 256)
           .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
@@ -7696,7 +7669,6 @@ object PipelineQueries extends QueryModule {
       (s, dir) => {
         import s.implicits._
         import org.apache.spark.sql.expressions.Window
-        graft.functions.VectorFunctions.register(s)
         val v = Tables.load(s, dir, "embeddings").select($"vec_id", $"embedding")
         val cent = v.orderBy($"vec_id").limit(32)
           .select($"vec_id".as("cell"), $"embedding".as("ce"))
@@ -7758,7 +7730,6 @@ object PipelineQueries extends QueryModule {
       (s, dir) => {
         import s.implicits._
         import org.apache.spark.sql.expressions.Window
-        graft.functions.VectorFunctions.register(s)
         val v = Tables.load(s, dir, "embeddings").select($"vec_id", $"embedding")
         val cent = v.orderBy($"vec_id").limit(32)
           .select($"vec_id".as("cell"), $"embedding".as("ce"))
@@ -8050,7 +8021,6 @@ object PipelineQueries extends QueryModule {
       (s, dir) => {
         import s.implicits._
         import org.apache.spark.sql.expressions.Window
-        graft.functions.VectorFunctions.register(s)
         val v = Tables.load(s, dir, "embeddings")
           .select($"vec_id", $"label", $"embedding")
         val cent = v.orderBy($"vec_id").limit(32)
@@ -8365,7 +8335,6 @@ object PipelineQueries extends QueryModule {
       (s, dir) => {
         import s.implicits._
         import org.apache.spark.sql.expressions.Window
-        graft.functions.TextHashFunctions.register(s)
         val cells = Tables.load(s, dir, "documents")
           .select($"lang", graft.functions.TextHashFunctions
             .textLangId($"text").as("lang_pred"))
@@ -8594,7 +8563,6 @@ object PipelineQueries extends QueryModule {
       (s, dir) => {
         import s.implicits._
         import org.apache.spark.sql.expressions.Window
-        graft.functions.TopKFunctions.register(s)
         val v = Tables.load(s, dir, "embeddings")
           .select($"vec_id", $"label",
             transform($"embedding",
@@ -8960,7 +8928,6 @@ object PipelineQueries extends QueryModule {
     QueryDef("pipeline_doremi_update",
       (s, dir) => {
         import s.implicits._
-        graft.functions.TextHashFunctions.register(s)
         val f = Tables.load(s, dir, "documents")
           .select($"source", $"n_chars",
             graft.functions.TextHashFunctions.gopherStats($"text").as("g"))
@@ -9050,15 +9017,13 @@ object PipelineQueries extends QueryModule {
       (s, dir) => {
         import s.implicits._
         import org.apache.spark.sql.expressions.Window
-        graft.functions.SketchFunctions.register(s)
-        graft.functions.VectorFunctions.register(s)
         val v = Tables.load(s, dir, "embeddings")
           .select($"vec_id", $"embedding")
         val cent = v.filter($"vec_id" < 8)
           .select($"vec_id".as("cell"), $"embedding".as("ce"))
         val assign = v.crossJoin(broadcast(cent))
           .select($"vec_id", $"embedding", $"cell",
-            expr("cosine_sim(embedding, ce)").as("sim"))
+            graft.functions.VectorFunctions.cosineSim($"embedding", $"ce").as("sim"))
           .withColumn("rn", row_number().over(
             Window.partitionBy($"vec_id").orderBy($"sim".desc, $"cell")))
           .filter($"rn" === 1)
@@ -9068,7 +9033,8 @@ object PipelineQueries extends QueryModule {
         val hot = sizes.orderBy($"sz".desc, $"cell").limit(2)
         val subs = assign.join(broadcast(hot.select($"cell")), "cell")
           .select($"cell",
-            expr("rh_signature(embedding, 1, 7)").cast("long").as("sub"))
+            graft.functions.SketchFunctions.rhSignature($"embedding", 1, 7L).cast("long")
+              .as("sub"))
           .groupBy($"cell")
           .agg(sum(when($"sub" === 0L, 1L).otherwise(0L)).as("n_sub0"),
             sum(when($"sub" === 1L, 1L).otherwise(0L)).as("n_sub1"))

@@ -90,9 +90,8 @@ object RelationalQueries extends QueryModule {
       .distinct()
 
   // One tuned clone per parent session for join_bloom_pruned, not one
-  // per build: a fresh SessionState each call re-registers functions and
-  // re-infers every parquet footer (the per-session Tables memo starts
-  // cold). Weak on the parent; the clone shares context/sharedState but
+  // per build: a fresh SessionState each call re-infers every parquet
+  // footer (the per-session Tables memo starts cold). Weak on the parent; the clone shares context/sharedState but
   // holds no reference back to its parent, so entries stay collectable.
   private val bloomSessions =
     new java.util.WeakHashMap[SparkSession, SparkSession]()
@@ -326,13 +325,11 @@ object RelationalQueries extends QueryModule {
                             WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')) custsale
     GROUP BY cntrycode ORDER BY cntrycode"""
 
-  /** Shared nation-trade graph + 2-round label-propagation communities
-    * (the `graph_label_propagation` construction, factored so
-    * `graph_community_modularity` scores the SAME partition it
-    * registers): returns (undirected weighted edge list with both
-    * directions stored, final (node, lbl) frame).
+  /** The undirected weighted nation-trade graph without self-loops, both
+    * directions stored as (src, dst, w), checkpointed: the edge list of
+    * label propagation, modularity and assortativity.
     */
-  private def nationTradeCommunities(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+  private def nationTradeUndirected(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val dir0 = nationTradePairs(s, dir)
       .filter($"c_nationkey" =!= $"s_nationkey")
@@ -345,10 +342,9 @@ object RelationalQueries extends QueryModule {
     // re-ran the lineitem⋈orders⋈customer⋈supplier rollup 162 scans deep
     // (3,315 plan lines). One localCheckpoint makes the 4-table join run
     // once per query; everything downstream is nation-grid-sized.
-    val edges = Graph.bothWays(dir0, "src", "dst")
+    Graph.bothWays(dir0, "src", "dst")
       .groupBy($"src", $"dst").agg(sum($"w").as("w"))
       .localCheckpoint()
-    (edges, Graph.labelPropagation(edges, nations(s, dir)))
   }
 
   val defs: Seq[QueryDef] = Seq(
@@ -887,8 +883,7 @@ object RelationalQueries extends QueryModule {
     QueryDef("graph_label_propagation",
       (s, dir) => {
         import s.implicits._
-        val (_, labels) = nationTradeCommunities(s, dir)
-        labels
+        Graph.labelPropagation(nationTradeUndirected(s, dir), nations(s, dir))
           .select($"node", $"lbl".cast("long").as("community"))
           .orderBy($"node")
       },
@@ -1939,7 +1934,6 @@ object RelationalQueries extends QueryModule {
     QueryDef("agg_countmin_bounds",
       (s, dir) => {
         import s.implicits._
-        graft.functions.SketchFunctions.register(s)
         import graft.functions.SketchFunctions.cmsEstimate
         val ev = Tables.load(s, dir, "events")
         val sk = ev.agg(
@@ -6595,14 +6589,14 @@ object RelationalQueries extends QueryModule {
     //    partition): with W = Σw (both directions), Q = Σ_c (in_c/W −
     //    (d_c/W)²) is reported as the exact integer contribution
     //    W·in_c − d_c² per community (Q = Σ contrib / W², no float
-    //    summation anywhere). Reuses the factored graph+labels build;
+    //    summation anywhere). Scores the label-propagation partition;
     //    all joins against the ≤|nations|-row label/degree frames are
     //    broadcast; the 1-row W recombine is the documented scalar
     //    shape. ──────────────────────────────────────────────────────────
     QueryDef("graph_community_modularity",
       (s, dir) => {
-        val (edges, labels) = nationTradeCommunities(s, dir)
-        Graph.modularity(edges, labels)
+        val edges = nationTradeUndirected(s, dir)
+        Graph.modularity(edges, Graph.labelPropagation(edges, nations(s, dir)))
       },
       Some("""WITH d0 AS (
           SELECT c.c_nationkey AS a, s.s_nationkey AS b, CAST(count(*) AS BIGINT) AS w
@@ -6662,7 +6656,7 @@ object RelationalQueries extends QueryModule {
     //    digits at sf10, the split pair never does. One broadcast deg
     //    join + ONE aggregate over the |nations|²-bounded edge list. ────
     QueryDef("graph_assortativity",
-      (s, dir) => Graph.assortativity(nationTradeCommunities(s, dir)._1),
+      (s, dir) => Graph.assortativity(nationTradeUndirected(s, dir)),
       Some("""WITH d0 AS (
           SELECT c.c_nationkey AS a, s.s_nationkey AS b, CAST(count(*) AS BIGINT) AS w
           FROM lineitem l
@@ -11170,7 +11164,6 @@ object RelationalQueries extends QueryModule {
     QueryDef("agg_theta_sketch_setops",
       (s, dir) => {
         import s.implicits._
-        graft.functions.TopKFunctions.register(s)
         val ue = Tables.load(s, dir, "events")
           .filter($"event_type".isin("click", "view"))
           .select($"event_type".as("et"),

@@ -34,7 +34,6 @@ object Streaming {
     */
   def kmvDailyDistinct(events: DataFrame, k: Int = 32): DataFrame = {
     val s = events.sparkSession
-    graft.functions.TopKFunctions.register(s)
     import s.implicits._
     val e = events.select(
       expr("unix_micros(ts) DIV 86400000000").as("day"), col("user_id"),

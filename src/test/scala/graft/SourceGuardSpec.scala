@@ -9,8 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Source guards: the local session is configured in one function
   * (`SparkEntry.localSession`), only Bench's between-pass sweep
   * releases RDDs through the global registry — a registry sweep inside a
-  * query can free a concurrently running query's checkpoint — and no
-  * code tunes Spark's code generation.
+  * query can free a concurrently running query's checkpoint — no code
+  * tunes Spark's code generation, and no code writes the session's
+  * function registry.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -59,5 +60,13 @@ class SourceGuardSpec extends AnyFunSuite {
     // the same settings through SQLConf's entries (CODEGEN_CACHE_MAX_ENTRIES,
     // WHOLESTAGE_CODEGEN_ENABLED, ...)
     assert(codeLines("CODEGEN", "src/main", "tools").isEmpty)
+  }
+
+  test("no engine or tool code writes the session function registry") {
+    // graft functions build their Columns from their expressions
+    // (graft.functions.*Functions); SQL sees them through the one table
+    // in GraftExtensions.
+    for (token <- Seq("createOrReplaceTempFunction", "functionRegistry", "Functions.register("))
+      assert(codeLines(token, "src/main", "tools").isEmpty, token)
   }
 }

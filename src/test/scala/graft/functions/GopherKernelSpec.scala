@@ -30,7 +30,6 @@ class GopherKernelSpec extends AnyFunSuite {
 
   test("kernel counters equal the built-in composition on edge cases") {
     val df = cases.toDF("text")
-    TextHashFunctions.register(spark)
     val toks = split(lower(trim(col("text"))), "\\s+")
     val viaBuiltins = df.select(
       size(toks).cast("long"),
@@ -55,7 +54,6 @@ class GopherKernelSpec extends AnyFunSuite {
     // composition counts "212K" as an alpha token; the kernel folds
     // ASCII only and must NOT (GopherKernel scaladoc pins this choice).
     val df = Seq("212K the").toDF("text")
-    TextHashFunctions.register(spark)
     val g = df.select(TextHashFunctions.gopherStats(col("text")).as("g"))
       .select(col("g").getItem(0), col("g").getItem(4), col("g").getItem(5))
       .head().toSeq

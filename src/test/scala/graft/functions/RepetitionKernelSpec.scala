@@ -27,7 +27,6 @@ class RepetitionKernelSpec extends AnyFunSuite {
 
   test("kernel counters equal the HOF composition") {
     val df = cases.toDF("text")
-    TextHashFunctions.register(spark)
     val toks = split(lower(trim(col("text"))), "\\s+")
     val grams = transform(
       sequence(lit(0), size(toks) - 2),
@@ -52,7 +51,6 @@ class RepetitionKernelSpec extends AnyFunSuite {
   }
 
   test("single-token and empty inputs stay defined (n_bigrams = 0)") {
-    TextHashFunctions.register(spark)
     val r = Seq("solo", "", "   ").toDF("text")
       .select(TextHashFunctions.repetitionStats(col("text")).as("r"))
       .collect().map(_.getSeq[Long](0))

@@ -29,7 +29,6 @@ class SortedIntersectSpec extends AnyFunSuite {
   }
 
   test("SQL path (codegen) matches array_intersect on real adjacency shapes") {
-    SketchFunctions.register(spark)
     val df = Seq(
       (Seq(1L, 3L, 5L, 9L), Seq(2L, 3L, 5L, 10L)),
       (Seq.empty[Long], Seq(1L, 2L)),
@@ -37,7 +36,7 @@ class SortedIntersectSpec extends AnyFunSuite {
       (Seq(-3L, 0L, 4L), Seq(-3L, 0L, 4L))
     ).toDF("a", "b")
     val rows = df.select(
-      call_function("sorted_intersect_count", $"a", $"b").as("fast"),
+      SketchFunctions.sortedIntersectCount($"a", $"b").as("fast"),
       size(array_intersect($"a", $"b")).cast("long").as("ref")).collect()
     rows.foreach(r => assert(r.getLong(0) == r.getLong(1), r.toString))
   }

@@ -14,8 +14,6 @@ class SpanKernelSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
 
-  TextHashFunctions.register(spark)
-
   private def builtin(df: DataFrame, spanWords: Int): DataFrame = {
     val toks = split(lower(trim(col("t"))), "\\s+")
     val nspans = floor((size(toks) + lit(spanWords - 1)) / lit(spanWords)).cast("int")

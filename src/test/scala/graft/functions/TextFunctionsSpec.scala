@@ -54,7 +54,6 @@ class TextFunctionsSpec extends AnyFunSuite {
   }
 
   test("one-pass text kernels are bit-identical to the Column compositions") {
-    TextHashFunctions.register(spark)
     import org.apache.spark.sql.functions.col
     // the whole driver corpus plus adversarial edges: empty, whitespace
     // variants (tab/newline/vertical-tab survive trim), CJK, punct-only,
@@ -86,7 +85,6 @@ class TextFunctionsSpec extends AnyFunSuite {
     * exact-substring oracle's per-window list_reduce replay rests on.
     */
   test("tokenWindowHash64 windows equal the rolling fold of each slice") {
-    TextHashFunctions.register(spark)
     val text = "The quick  Brown fox jumps over the quick brown fox again and again"
     val k = 4
     val toks = text.trim.toLowerCase.split("\\s+")
@@ -108,7 +106,6 @@ class TextFunctionsSpec extends AnyFunSuite {
   }
 
   test("rollingHash64 and simhash64 registered expressions evaluate") {
-    TextHashFunctions.register(spark)
     val h1 = one[Long](TextHashFunctions.rollingHash64(col("t")), "abc")
     val h2 = one[Long](TextHashFunctions.rollingHash64(col("t")), "abd")
     assert(h1 != h2)
@@ -116,5 +113,22 @@ class TextFunctionsSpec extends AnyFunSuite {
     val s1 = one[Long](TextHashFunctions.simhash64(tokens(col("t"))), "a b c a")
     val s2 = one[Long](TextHashFunctions.simhash64(tokens(col("t"))), "a a b c")
     assert(s1 == s2)
+  }
+
+  test("Column helpers evaluate on a session nobody registered functions into") {
+    // the helpers build their Catalyst expressions directly, so no name
+    // has to resolve in the session's function registry
+    val fresh = spark.newSession()
+    import fresh.implicits._
+    val df = Seq(("a b c d", 1L, 0.5, Seq(1.0f, 2.0f)), ("a b c", 2L, 0.9, Seq(0.5f, 0.25f)))
+      .toDF("t", "id", "score", "vec")
+    assert(df.select(size(TextHashFunctions.shingleHashes(col("t"), 3))).as[Int]
+      .collect().toSeq == Seq(2, 1))
+    val top = df.agg(TopKFunctions.topKPairs(struct(col("score"), col("id")), 1).as("top"))
+      .select(col("top.id")).head().getSeq[Long](0)
+    assert(top == Seq(2L))
+    // Σ floor(x · 2²) per component: (4 + 2, 8 + 1)
+    val sums = df.agg(VectorAggFunctions.vecFixedPointSum(col("vec"), 2)).head().getSeq[Long](0)
+    assert(sums == Seq(6L, 9L))
   }
 }

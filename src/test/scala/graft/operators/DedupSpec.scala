@@ -311,7 +311,6 @@ class DedupSpec extends AnyFunSuite {
 
   test("simhashPairs honors the 4-band hamming<=3 guarantee") {
     import graft.functions.TextHashFunctions
-    TextHashFunctions.register(spark)
     import org.apache.spark.sql.functions._
     import graft.functions.TextFunctions.tokens
     // all-pairs hamming distances, brute force
@@ -330,7 +329,6 @@ class DedupSpec extends AnyFunSuite {
 
   test("simhashPairs md5 variant equals brute force (the oracle's exactness premise)") {
     import graft.functions.TextHashFunctions
-    TextHashFunctions.register(spark)
     import org.apache.spark.sql.functions._
     import graft.functions.TextFunctions.tokens
     val hashes = corpus

@@ -164,7 +164,6 @@ class SimilaritySpec extends AnyFunSuite {
     val pairs = Seq(
       (1L, 10L, 0.5), (1L, 11L, 0.5), (1L, 12L, 0.5), (1L, 13L, 0.9)
     ).toDF("qid", "cid", "sim")
-    graft.functions.TopKFunctions.register(spark)
     val top = pairs
       .select(col("qid"), struct(col("sim").as("score"), col("cid").as("id")).as("p"))
       .groupBy("qid")

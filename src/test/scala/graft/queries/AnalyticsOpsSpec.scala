@@ -222,7 +222,6 @@ class AnalyticsOpsSpec extends AnyFunSuite {
     }
     // Σ n_novel over docs == distinct shingles in the corpus (each
     // shingle is first-seen by exactly one doc)
-    graft.functions.TextHashFunctions.register(spark)
     val distinctShingles = Tables.load(spark, dir, "documents")
       .select(explode(graft.functions.TextHashFunctions
         .shingleHashes(col("text"), 3)).as("h"))

@@ -742,7 +742,6 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming KMV: micro-batched sketch state merges to the one-shot sketch") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    graft.functions.TopKFunctions.register(spark)
     val dir = "/root/testdata/sf0.001"
     val base = graft.Tables.load(spark, dir, "events")
       .selectExpr("unix_micros(ts) DIV 86400000000 AS day",

@@ -762,34 +762,90 @@ case class CharStats(child: Expression) extends UnaryExpression {
 /** One BPE training round's view of a word type: its characters with the
   * learned merges applied in order, each merge one greedy left-to-right
   * pass (a symbol pair equal to the merge becomes one symbol, and the
-  * merged symbol can take part in the next pair), then one (a, b, w) row
-  * per adjacent pair weighted by the word's count, plus one
-  * (null, null, count·|symbols|) row carrying the word's token total.
+  * merged symbol can take part in the next pair). [[pairs]] emits one
+  * (a, b, w) row per adjacent pair weighted by the word's count, plus one
+  * (null, null, count·|symbols|) row carrying the word's token total;
+  * [[Counts]] folds the same into a table's pair counts.
   */
 object BpeKernel {
   import org.apache.spark.sql.catalyst.InternalRow
   import org.apache.spark.sql.catalyst.util.GenericArrayData
 
-  def pairs(word: UTF8String, weight: Long, merges: ArrayData): ArrayData = {
-    var syms = Array.tabulate(word.numChars())(i => word.substring(i, i + 1))
-    var m = 0
-    while (m < merges.numElements()) {
-      val pair = merges.getStruct(m, 2)
-      val (ma, mb) = (pair.getUTF8String(0), pair.getUTF8String(1))
-      val acc = new scala.collection.mutable.ArrayBuffer[UTF8String](syms.length)
-      syms.foreach { x =>
-        if (acc.nonEmpty && acc.last == ma && x == mb) acc(acc.length - 1) = UTF8String.concat(ma, mb)
-        else acc += x
-      }
-      syms = acc.toArray
-      m += 1
+  /** The word's symbols after the merges. `substring` and `concat` copy,
+    * so no symbol points into the word's buffer.
+    */
+  def symbols(word: UTF8String, merges: Seq[(UTF8String, UTF8String)]): Array[UTF8String] =
+    merges.foldLeft(Array.tabulate(word.numChars())(i => word.substring(i, i + 1))) {
+      case (syms, (ma, mb)) =>
+        val acc = new scala.collection.mutable.ArrayBuffer[UTF8String](syms.length)
+        syms.foreach { x =>
+          if (acc.nonEmpty && acc.last == ma && x == mb)
+            acc(acc.length - 1) = UTF8String.concat(ma, mb)
+          else acc += x
+        }
+        acc.toArray
     }
+
+  def pairs(word: UTF8String, weight: Long, merges: ArrayData): ArrayData = {
+    val syms = symbols(word, (0 until merges.numElements()).map { m =>
+      val pair = merges.getStruct(m, 2)
+      (pair.getUTF8String(0), pair.getUTF8String(1))
+    })
     val n = syms.length
     val out = new Array[Any](n)
     var i = 0
     while (i < n - 1) { out(i) = InternalRow(syms(i), syms(i + 1), weight); i += 1 }
     if (n > 0) out(n - 1) = InternalRow(null, null, Math.multiplyExact(weight, n.toLong))
     new GenericArrayData(out)
+  }
+
+  /** A word-type table's weighted adjacent pair counts and token total
+    * after some merges, folded one word at a time. It also keeps what
+    * merging each pair would save: two different symbols never overlap,
+    * so merging (a, b) saves its count, while a run of k equal symbols
+    * merges ⌊k/2⌋ times. The token total after the next merge is then
+    * known without another pass.
+    */
+  final class Counts extends Serializable {
+    val pairs = scala.collection.mutable.HashMap.empty[(UTF8String, UTF8String), Long]
+    private val runSaved = scala.collection.mutable.HashMap.empty[UTF8String, Long]
+    private var tokens = 0L
+
+    private def bump[K](m: scala.collection.mutable.HashMap[K, Long], k: K, n: Long): Unit =
+      m(k) = Math.addExact(m.getOrElse(k, 0L), n)
+
+    def add(word: UTF8String, weight: Long, merges: Seq[(UTF8String, UTF8String)]): Counts = {
+      val syms = symbols(word, merges)
+      tokens = Math.addExact(tokens, Math.multiplyExact(weight, syms.length.toLong))
+      var run = 1 // equal symbols ending at i - 1
+      for (i <- 1 to syms.length) {
+        if (i < syms.length) bump(pairs, (syms(i - 1), syms(i)), weight)
+        if (i < syms.length && syms(i) == syms(i - 1)) run += 1
+        else {
+          if (run >= 2) bump(runSaved, syms(i - 1), Math.multiplyExact(weight, (run / 2).toLong))
+          run = 1
+        }
+      }
+      this
+    }
+
+    def merge(other: Counts): Counts = {
+      other.pairs.foreach { case (k, n) => bump(pairs, k, n) }
+      other.runSaved.foreach { case (k, n) => bump(runSaved, k, n) }
+      tokens = Math.addExact(tokens, other.tokens)
+      this
+    }
+
+    /** The pair to merge next — highest count, ties to the smaller (a, b)
+      * in binary string order — with its count and the token total after
+      * merging it; None when no word has two symbols.
+      */
+    def best: Option[(UTF8String, UTF8String, Long, Long)] =
+      if (pairs.isEmpty) None
+      else {
+        val ((a, b), n) = pairs.minBy { case ((a, b), n) => (-n, a, b) }
+        Some((a, b, n, tokens - (if (a == b) runSaved(a) else n)))
+      }
   }
 }
 
@@ -834,8 +890,6 @@ object TextHashFunctions {
   def textLangId(c: Column): Column = column(TextLangId(expression(c)))
   def gopherStats(c: Column): Column = column(GopherStats(expression(c)))
   def repetitionStats(c: Column): Column = column(RepetitionStats(expression(c)))
-  def bpePairs(word: Column, weight: Column, merges: Column): Column =
-    column(BpePairs(expression(word), expression(weight), expression(merges)))
   def shingleHashes(c: Column, n: Int): Column = column(ShingleHashes(expression(c), n))
   def spanMd5s(c: Column, spanWords: Int): Column = column(SpanMd5s(expression(c), spanWords))
   def spanTexts(c: Column, spanWords: Int): Column = column(SpanTexts(expression(c), spanWords))

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.columnshim.ExpressionColumns.{column, expression}
 import org.apache.spark.sql.types._
 
@@ -52,30 +52,13 @@ case class FixedPointVecSum(
 
   override def createAggregationBuffer(): Array[Long] = Array.emptyLongArray
 
-  private def grown(buf: Array[Long], n: Int): Array[Long] =
-    if (buf.length >= n) buf else java.util.Arrays.copyOf(buf, n)
-
   override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
     val v = child.eval(input)
-    if (v == null) return buf
-    val arr = v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    val n = arr.numElements()
-    val b = grown(buf, n)
-    var i = 0
-    while (i < n) {
-      if (!arr.isNullAt(i))
-        b(i) = Math.addExact(b(i), math.floor(arr.getFloat(i).toDouble * scale).toLong)
-      i += 1
-    }
-    b
+    if (v == null) buf else FixedPointKernel.add(buf, v.asInstanceOf[ArrayData], scale)
   }
 
-  override def merge(buf: Array[Long], other: Array[Long]): Array[Long] = {
-    val b = grown(buf, other.length)
-    var i = 0
-    while (i < other.length) { b(i) = Math.addExact(b(i), other(i)); i += 1 }
-    b
-  }
+  override def merge(buf: Array[Long], other: Array[Long]): Array[Long] =
+    FixedPointKernel.merge(buf, other)
 
   override def eval(buf: Array[Long]): Any = new GenericArrayData(buf)
 
@@ -103,6 +86,36 @@ case class FixedPointVecSum(
   override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): FixedPointVecSum =
     copy(child = cs.head)
   override def prettyName: String = "vec_fixedpoint_sum"
+}
+
+/** The fixed-point vector sum of [[FixedPointVecSum]] and the k-means
+  * fold: a sum buffer grows to the longest vector it has seen, null
+  * components add nothing, and overflow throws.
+  */
+object FixedPointKernel {
+  private def grown(buf: Array[Long], n: Int): Array[Long] =
+    if (buf.length >= n) buf else java.util.Arrays.copyOf(buf, n)
+
+  /** Adds floor(x · scale) of each component x of `v` into `buf`. */
+  def add(buf: Array[Long], v: ArrayData, scale: Double): Array[Long] = {
+    val n = v.numElements()
+    val b = grown(buf, n)
+    var i = 0
+    while (i < n) {
+      if (!v.isNullAt(i))
+        b(i) = Math.addExact(b(i), math.floor(v.getFloat(i).toDouble * scale).toLong)
+      i += 1
+    }
+    b
+  }
+
+  /** Adds the sums in `other` into `buf`. */
+  def merge(buf: Array[Long], other: Array[Long]): Array[Long] = {
+    val b = grown(buf, other.length)
+    var i = 0
+    while (i < other.length) { b(i) = Math.addExact(b(i), other(i)); i += 1 }
+    b
+  }
 }
 
 object VectorAggFunctions {

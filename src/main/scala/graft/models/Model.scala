@@ -124,26 +124,31 @@ object ModelDag {
           spark.sql(s"DROP TABLE IF EXISTS `${m.name}`")
           df.write.mode("overwrite").option("path", p).saveAsTable(m.name)
           spark.table(m.name)
+        // A materialized model is read back with the schema it was
+        // written with, so no footer-inference job runs.
         case (Materialization.Table, Some(dir)) =>
           val p = s"$dir/${m.name}"
           df.write.mode("overwrite").parquet(p)
-          spark.read.parquet(p)
+          spark.read.schema(df.schema).parquet(p)
         case (Materialization.Incremental(keys), Some(dir)) =>
           val p = s"$dir/${m.name}"
           val target = new java.io.File(p)
-          if (target.exists()) {
+          val written = if (target.exists()) {
             // merge: new rows win on uniqueKey; the merged plan reads the
             // parquet it replaces, so it is written to a stage directory
-            // and swapped in by rename
+            // and swapped in by rename. The stored table is read with
+            // inference: its schema can differ from this run's build.
             val existing = spark.read.parquet(p)
             val merged = existing.join(df, keys, "left_anti").unionByName(df)
             val stage = s"$dir/${m.name}__stage"
             merged.write.mode("overwrite").parquet(stage)
             Maintenance.swapIn(Paths.get(stage), Paths.get(p))
+            merged.schema
           } else {
             df.write.mode("overwrite").parquet(p)
+            df.schema
           }
-          spark.read.parquet(p)
+          spark.read.schema(written).parquet(p)
         case _ => df
       }
       (m.materialization, m.sqlText) match {

@@ -1,7 +1,8 @@
 package graft.operators
 
-import scala.jdk.CollectionConverters._
+import scala.collection.mutable
 
+import graft.Bounded
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -307,25 +308,29 @@ object Graph {
   }
 
   /** Hops from node 0 over directed BIGINT (src, dst) edges after 3
-    * synchronous relaxation rounds, (node, hops). The edge set must be
-    * small (node-pair bounded): it is collected once and the rounds run
-    * on the driver, so the operator runs one job and its rounds add no
-    * plan or class.
+    * synchronous relaxation rounds, (node, hops). The distinct edge set
+    * must hold at most `maxEdges` pairs (node-pair bounded): one fold
+    * ([[graft.Bounded.aggregate]]) brings it to the driver, where the
+    * rounds run, so the operator runs one job and its rounds add no plan
+    * or class.
     */
-  def shortestHops(edges: DataFrame): DataFrame = {
-    val s = edges.sparkSession
-    import s.implicits._
-    val pairs = edges.as[(Long, Long)].collect()
+  def shortestHops(edges: DataFrame, maxEdges: Long): DataFrame = {
+    val pairs = Bounded.aggregate(edges, maxEdges)(mutable.HashSet.empty[(Long, Long)])(
+      (set, r) => {
+        require(!r.isNullAt(0) && !r.isNullAt(1), "shortestHops: an edge has a null endpoint")
+        set += (r.getLong(0) -> r.getLong(1))
+      },
+      _ ++= _, _.size.toLong)
     var dist = Map(0L -> 0L)
     for (_ <- 1 to 3) {
       // synchronous: every relaxation reads the previous round's set
-      val relaxed = pairs.flatMap { case (src, dst) => dist.get(src).map(h => dst -> (h + 1)) }
+      val relaxed = pairs.toSeq.flatMap { case (src, dst) => dist.get(src).map(h => dst -> (h + 1)) }
       dist = relaxed.foldLeft(dist) { case (d, (node, hops)) =>
         if (d.get(node).forall(_ > hops)) d + (node -> hops) else d
       }
     }
-    s.createDataFrame(dist.toSeq.sorted.map { case (n, h) => Row(n, h) }.asJava,
-      StructType.fromDDL("node BIGINT NOT NULL, hops BIGINT NOT NULL"))
+    Bounded.frame(edges.sparkSession, dist.toSeq.sorted.map { case (n, h) => Row(n, h) },
+      "node BIGINT NOT NULL, hops BIGINT NOT NULL")
   }
 
   /** Distance histogram (d = -1: unreached) of a 4-round frontier BFS

@@ -1,11 +1,11 @@
 package graft.operators
 
-import scala.jdk.CollectionConverters._
+import scala.collection.mutable.ArrayBuffer
 
-import graft.functions.{MmrKernel, TopKFunctions, VectorFunctions}
+import graft.Bounded
+import graft.functions.{FixedPointKernel, IvfRouter, MmrKernel, TopKFunctions, VectorFunctions}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.functions._
 
 /** Approximate-nearest-neighbor search over an embedding column
@@ -85,9 +85,10 @@ object Similarity {
     * step, so the selection is a pure function of the data.
     *
     * Plan shape: one job. The pool is the bounded-heap top-k (|Q|·poolK
-    * rows), joined to the candidate vectors and collected: the query set
-    * is broadcast by contract, and poolK is a constant, so nothing
-    * collected scales with the corpus. The greedy loop is one
+    * rows), joined to the candidate vectors and collected with that bound
+    * ([[graft.Bounded.collect]], at most [[MaxRerankQueries]] queries):
+    * the query set is broadcast by contract, and poolK is a constant, so
+    * nothing collected scales with the corpus. The greedy loop is one
     * [[graft.functions.MmrKernel]] call per query on the driver
     * (poolK·selectK cosines in doubles), and the result is a local frame
     * sorted by (query_id, rank).
@@ -99,13 +100,12 @@ object Similarity {
       selectK: Int,
       lambda: Double): DataFrame = {
     require(selectK >= 1 && selectK <= poolK, s"selectK $selectK vs poolK $poolK")
-    val spark = candidates.sparkSession
-    val pool = bruteForceTopK(queries, candidates, poolK)
+    val poolPlan = bruteForceTopK(queries, candidates, poolK)
       .select(col("query_id").as("qid"), col("neighbor_id").as("cid"),
         col("sim").as("rel"))
       .join(candidates.select(col("cid"), col("cvec")), "cid")
       .select(col("qid"), col("cid"), col("rel"), col("cvec"))
-      .collect()
+    val pool = Bounded.collect(poolPlan, poolK.toLong * MaxRerankQueries)
     val picks = pool.groupBy(_.getLong(0)).toSeq.sortBy(_._1).flatMap { case (qid, rows) =>
       val entries = rows.toSeq.map { r =>
         require(!r.isNullAt(3), s"mmrRerank: null vector for cid ${r.getLong(1)}")
@@ -115,9 +115,15 @@ object Similarity {
         Row(qid, rank, cid, rel)
       }
     }
-    spark.createDataFrame(picks.asJava, StructType.fromDDL(
-      "query_id BIGINT NOT NULL, rank INT NOT NULL, neighbor_id BIGINT NOT NULL, rel DOUBLE NOT NULL"))
+    Bounded.frame(candidates.sparkSession, picks,
+      "query_id BIGINT NOT NULL, rank INT NOT NULL, neighbor_id BIGINT NOT NULL, rel DOUBLE NOT NULL")
   }
+
+  /** The most queries one [[mmrRerank]] call takes: the query set is
+    * broadcast by contract, and the pool of |Q|·poolK rows with their
+    * vectors is collected, so a larger set is reranked in batches.
+    */
+  private val MaxRerankQueries = 1 << 16
 
   /** MIPS at scale: the norm-augmentation reduction to angular LSH
     * (Bachrach et al., RecSys'14 / Shrivastava & Li, NIPS'14 ALSH).
@@ -1350,29 +1356,30 @@ object Similarity {
         col("sim"), col("rank"))
   }
 
-  /** One exact distributed Lloyd iteration over the seeded quantizer —
-    * the training step that turns [[ivfKnnJoinSeeded]]'s lowest-id seed
-    * pick into a principled coarse quantizer. Assignment is the same
-    * codegen'd `ivf_route` kernel (nProbe=1: nearest centroid, cosine
-    * ties to the lower cell); the update is one hash aggregate per cell
-    * with [[graft.functions.FixedPointVecSum]] — per-component FIXED-POINT
-    * integer sums, so the reduction is order-independent and bit-exact
-    * under any partitioning (the reason k-means on doubles is normally
-    * non-reproducible across cluster layouts). Only |cells| rows reach
-    * the shuffle: the aggregate state is one long per dimension per cell,
-    * combined map-side — the plan a 100 TB k-means needs.
+  /** One exact Lloyd iteration over the seeded quantizer — the training
+    * step that turns [[ivfKnnJoinSeeded]]'s lowest-id seed pick into a
+    * principled coarse quantizer. Assignment is [[graft.functions.IvfRouter]]
+    * (the `ivf_route` kernel with nProbe=1: nearest centroid, cosine ties
+    * to the lower cell); the update sums each cell's components in FIXED
+    * POINT ([[graft.functions.FixedPointKernel]], the add behind
+    * `vec_fixedpoint_sum`), so the reduction is integer arithmetic,
+    * order-independent and bit-exact under any partitioning (the reason
+    * k-means on doubles is normally non-reproducible across cluster
+    * layouts). The state is one long per dimension per cell, combined on
+    * the executors: only numCentroids cells reach the driver, the state a
+    * 100 TB k-means needs.
     *
-    * Returns one row per (cell, dimension): member count, exact
-    * fixed-point component sum, and the implied new centroid component
-    * (a single integer÷integer double division — reproducible anywhere).
+    * Returns one row per (cell, dimension), sorted by (cell, dim): member
+    * count, exact fixed-point component sum, and the implied new centroid
+    * component (a single integer÷integer double division — reproducible
+    * anywhere). Rows with a null vid or vector take no part.
     */
   def kmeansStepSeeded(
       vectors: DataFrame, // (vid, vec)
       numCentroids: Int = 32,
       scaleBits: Int = 20): DataFrame = {
     val v = vectors.select(col("vid"), col("vec"))
-    val (ids, mat) = seedCentroids(v, numCentroids)
-    explodeCentroids(lloydAgg(v, ids, mat, scaleBits), scaleBits)
+    centroidFrame(v, lloydRound(v, seedCentroids(v, numCentroids), scaleBits), scaleBits, None)
   }
 
   /** TWO exact Lloyd iterations — the iterative form of
@@ -1382,8 +1389,8 @@ object Similarity {
     * are the round-1 INTEGER component sums themselves (no division —
     * dividing by n·2^scaleBits changes no assignment), cast long→float
     * by both engines' identical IEEE round-to-nearest. Per iteration:
-    * one corpus scan + a |cells|-row shuffle; the only driver traffic is
-    * the ≤numCentroids×dim sum matrix — the broadcast every distributed
+    * one fold over the corpus; the only driver traffic is the
+    * ≤numCentroids×dim sum matrix — the broadcast every distributed
     * k-means round makes.
     *
     * Output shape = [[kmeansStepSeeded]] (cell label = its seed's vid).
@@ -1393,10 +1400,8 @@ object Similarity {
       numCentroids: Int = 32,
       scaleBits: Int = 20): DataFrame = {
     val v = vectors.select(col("vid"), col("vec"))
-    val (ids, mat) = seedCentroids(v, numCentroids)
-    val it1 = lloydState(v, ids, mat, scaleBits)
-    explodeCentroids(lloydAgg(v, it1.map(_._1), it1.map(_._3.map(_.toFloat)), scaleBits),
-      scaleBits)
+    val it1 = lloydRound(v, seedCentroids(v, numCentroids), scaleBits)
+    centroidFrame(v, lloydRound(v, centroidsOf(it1), scaleBits), scaleBits, None)
   }
 
   /** Lloyd to CONVERGENCE (bounded): run up to `maxIters` exact
@@ -1411,14 +1416,14 @@ object Similarity {
     * that always runs exactly `maxIters` iterations produces the
     * identical final state, so early exit changes cost, never results.
     *
-    * Per iteration: one corpus scan + a |cells|-row shuffle; driver
-    * traffic is the ≤numCentroids×dim integer sum matrix (the broadcast
-    * every distributed k-means round makes). Every iteration, the last
-    * included, runs the same plan and collects its ≤ numCentroids rows,
-    * so later iterations compile no new class. The returned frame is a
-    * local frame of the final state's rows sorted by (cell, dim), with a
-    * `converged` flag — true iff the fixpoint appeared among the
-    * `maxIters - 1` earlier states.
+    * Seeding and every iteration fold over the same planned input
+    * ([[graft.Bounded.aggregate]]), so later iterations plan nothing and
+    * compile no new class. Driver traffic per iteration is the
+    * ≤numCentroids×dim integer sum matrix (the broadcast every distributed
+    * k-means round makes). The returned frame is a local frame of the
+    * final state's rows sorted by (cell, dim), with a `converged` flag —
+    * true iff the fixpoint appeared among the `maxIters - 1` earlier
+    * states.
     *
     * `maxIters >= 3` is required because convergence DETECTION needs two
     * earlier states to compare: with maxIters = 2 the fixpoint loop body
@@ -1438,80 +1443,104 @@ object Similarity {
         s"collected states; use kmeansTwoStepSeeded for 2 iterations " +
         s"without the flag), got $maxIters")
     val v = vectors.select(col("vid"), col("vec"))
-    val (ids0, mat0) = seedCentroids(v, numCentroids)
-    def state(ids: Seq[Long], mat: Seq[Seq[Float]]) = lloydState(v, ids, mat, scaleBits)
-    var cur = state(ids0, mat0)
+    var cur = lloydRound(v, seedCentroids(v, numCentroids), scaleBits)
     var converged = false
     var it = 1
     while (it < maxIters - 1 && !converged) {
-      val next = state(cur.map(_._1), cur.map(_._3.map(_.toFloat)))
+      val next = lloydRound(v, centroidsOf(cur), scaleBits)
       converged = next == cur
       if (!converged) cur = next
       it += 1
     }
-    // final iteration: centroids = last collected state's sums; the
-    // explode and division of explodeCentroids, on the driver
+    // final iteration: centroids = last state's sums
+    centroidFrame(v, lloydRound(v, centroidsOf(cur), scaleBits), scaleBits, Some(converged))
+  }
+
+  /** A Lloyd state: (cell label, member count, fixed-point component sums)
+    * per non-empty cell, sorted by label.
+    */
+  private type LloydState = Seq[(Long, Long, Seq[Long])]
+
+  /** Centroids as (labels, matrix), rows in label order, so a cosine tie
+    * routes to the lower label.
+    */
+  private type Centroids = (Seq[Long], Array[Array[Float]])
+
+  /** The `numCentroids` lowest-vid vectors, in one fold that keeps them
+    * sorted by vid.
+    */
+  private def seedCentroids(v: DataFrame, numCentroids: Int): Centroids = {
+    def keep(buf: ArrayBuffer[(Long, Array[Float])], vid: Long,
+        vec: => Array[Float]): ArrayBuffer[(Long, Array[Float])] = {
+      if (buf.size < numCentroids || vid < buf.last._1) {
+        buf.insert(buf.lastIndexWhere(_._1 <= vid) + 1, vid -> vec)
+        if (buf.size > numCentroids) buf.remove(numCentroids)
+      }
+      buf
+    }
+    val seeds = Bounded.aggregate(v, numCentroids)(ArrayBuffer.empty[(Long, Array[Float])])(
+      (buf, r) =>
+        if (r.isNullAt(0) || r.isNullAt(1)) buf
+        else keep(buf, r.getLong(0), r.getArray(1).toFloatArray()),
+      (a, b) => b.foldLeft(a) { case (buf, (vid, vec)) => keep(buf, vid, vec) },
+      _.size.toLong)
+    (seeds.map(_._1).toSeq, seeds.map(_._2).toArray)
+  }
+
+  /** The next round's centroids: cosine is scale-invariant, so a cell's
+    * integer sums, cast to float, are its centroid.
+    */
+  private def centroidsOf(state: LloydState): Centroids =
+    (state.map(_._1), state.map(_._3.map(_.toFloat).toArray).toArray)
+
+  /** Assignment (nearest centroid, ties to the lower cell position) and
+    * the per-cell member count and fixed-point sums, in one fold over the
+    * vectors: numCentroids cells by construction.
+    */
+  private def lloydRound(v: DataFrame, centroids: Centroids, scaleBits: Int): LloydState = {
+    val (ids, mat) = centroids
+    val nc = ids.size
+    val router = new IvfRouter(mat, 1)
+    val scale = (1L << scaleBits).toDouble
+    val (counts, sums) = Bounded.aggregate(v, nc)(
+        (new Array[Long](nc), Array.fill(nc)(Array.emptyLongArray)))(
+      (s, r) => {
+        if (!r.isNullAt(1)) {
+          val vec = r.getArray(1)
+          val c = router.route(vec).getInt(0)
+          s._1(c) += 1
+          s._2(c) = FixedPointKernel.add(s._2(c), vec, scale)
+        }
+        s
+      },
+      (a, b) => {
+        for (c <- 0 until nc) {
+          a._1(c) += b._1(c)
+          a._2(c) = FixedPointKernel.merge(a._2(c), b._2(c))
+        }
+        a
+      },
+      _._1.length.toLong)
+    (0 until nc).filter(counts(_) > 0).map(c => (ids(c), counts(c), sums(c).toSeq))
+      .sortBy(_._1)
+  }
+
+  /** One row per (cell, dim) of a Lloyd state, sorted by (cell, dim), with
+    * the `converged` flag when given.
+    */
+  private def centroidFrame(v: DataFrame, state: LloydState, scaleBits: Int,
+      converged: Option[Boolean]): DataFrame = {
     val scale = 1L << scaleBits
     val rows = for {
-      (cell, n, sums) <- state(cur.map(_._1), cur.map(_._3.map(_.toFloat)))
+      (cell, n, sums) <- state
       (sum, pos) <- sums.zipWithIndex
-    } yield Row(cell, pos + 1, n, sum, sum.toDouble / Math.multiplyExact(n, scale).toDouble,
-      converged)
-    v.sparkSession.createDataFrame(rows.asJava, StructType.fromDDL(
+    } yield Row.fromSeq(Seq[Any](cell, pos + 1, n, sum,
+      sum.toDouble / Math.multiplyExact(n, scale).toDouble) ++ converged)
+    Bounded.frame(v.sparkSession, rows,
       "cell BIGINT NOT NULL, dim INT NOT NULL, n_members BIGINT NOT NULL, " +
-        "comp_sum BIGINT NOT NULL, centroid_fp DOUBLE NOT NULL, converged BOOLEAN NOT NULL"))
+        "comp_sum BIGINT NOT NULL, centroid_fp DOUBLE NOT NULL" +
+        converged.fold("")(_ => ", converged BOOLEAN NOT NULL"))
   }
-
-  private def seedCentroids(v: DataFrame, numCentroids: Int): (Seq[Long], Seq[Seq[Float]]) = {
-    val centRows = v.orderBy(col("vid")).limit(numCentroids).collect()
-    (centRows.map(_.getLong(0)).toSeq, centRows.map(_.getSeq[Float](1).toSeq).toSeq)
-  }
-
-  /** Assignment (nearest centroid, ties to the lower cell position) +
-    * per-cell fixed-point sum aggregate — one Lloyd half-step. The
-    * routing runs in the scan's own stage, so the only shuffle is the
-    * |cells|-row partial aggregate: no job or class per iteration moves
-    * the vectors themselves. Every vector gets a constant 1 appended, so
-    * the last component of a cell's `sums` is its member count times
-    * 2^scaleBits (exactly: floor(1·2^scaleBits) is 2^scaleBits). The
-    * aggregate is then `vec_fixedpoint_sum` alone, with no `count` beside
-    * it: the buffer projections of an aggregate of imperative functions
-    * only are one generated class that every such aggregate shares.
-    */
-  private def lloydAgg(v: DataFrame, ids: Seq[Long], mat: Seq[Seq[Float]],
-      scaleBits: Int): DataFrame = {
-    import graft.functions.VectorAggFunctions
-    val idsLit = typedlit(ids)
-    v.withColumn("cpos", element_at(
-        VectorFunctions.ivfRoute(col("vec"), typedlit(mat), 1), 1))
-      .select(element_at(idsLit, col("cpos") + 1).as("cell"),
-        concat(col("vec"), array(lit(1.0f))).as("vec"))
-      .groupBy(col("cell"))
-      .agg(VectorAggFunctions.vecFixedPointSum(col("vec"), scaleBits).as("sums"))
-  }
-
-  /** [[lloydAgg]] collected: (cell, member count, component sums) per
-    * cell, at most numCentroids rows, sorted on the driver rather than by
-    * a range shuffle.
-    */
-  private def lloydState(v: DataFrame, ids: Seq[Long], mat: Seq[Seq[Float]],
-      scaleBits: Int): Seq[(Long, Long, Seq[Long])] =
-    lloydAgg(v, ids, mat, scaleBits).collect().sortBy(_.getLong(0)).map { r =>
-      val sums = r.getSeq[Long](1)
-      (r.getLong(0), sums.last >> scaleBits, sums.init.toSeq)
-    }.toSeq
-
-  private def explodeCentroids(agg: DataFrame, scaleBits: Int): DataFrame =
-    agg.select(col("cell"),
-        shiftright(element_at(col("sums"), -1), scaleBits).as("n_members"),
-        posexplode(slice(col("sums"), lit(1), size(col("sums")) - 1))
-          .as(Seq("pos", "comp_sum")))
-      .select(col("cell"),
-        (col("pos") + 1).cast("int").as("dim"),
-        col("n_members"), col("comp_sum"),
-        (col("comp_sum").cast("double") /
-          (col("n_members") * lit(1L << scaleBits)).cast("double"))
-          .as("centroid_fp"))
 
   def ivfTopK(
       queries: DataFrame, // (qid, qvec)

@@ -1,13 +1,13 @@
 package graft.queries
 
-import scala.jdk.CollectionConverters._
-
-import graft.Tables
+import graft.{Bounded, Tables}
+import graft.functions.BpeKernel
 import graft.functions.TextFunctions._
 import graft.operators.{Dedup, Similarity}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** LLM-training-data pipeline operators (north-star) as oracle-checked
   * queries over the driver's `documents` / `embeddings` tables:
@@ -2007,13 +2007,12 @@ object PipelineQueries extends QueryModule {
            |GROUP BY emb.label ORDER BY emb.label""".stripMargin)),
 
     // ── one exact distributed Lloyd (k-means) iteration: assignment via
-    //    the codegen'd ivf_route kernel, update via the FixedPointVecSum
-    //    aggregate — per-component integer sums of floor(x·2^20), so the
-    //    reduction is order-independent and bit-exact under any
-    //    partitioning (doubles would drift by merge order), and only
-    //    |cells| rows reach the shuffle (state = dim longs per cell,
-    //    combined map-side; the posexplode runs on the 32-row aggregate
-    //    OUTPUT, never on the corpus). The oracle replays assignment
+    //    the ivf_route kernel, update via the fixed-point add behind
+    //    vec_fixedpoint_sum — per-component integer sums of floor(x·2^20),
+    //    so the reduction is order-independent and bit-exact under any
+    //    partitioning (doubles would drift by merge order), and only the
+    //    32 cells' states reach the driver (one bounded fold, dim longs
+    //    per cell, combined on the executors). The oracle replays assignment
     //    (list_cosine_similarity is bit-identical to the kernel) and the
     //    fixed-point sums: floor of the identical IEEE product, then
     //    integer aggregation — associative in both engines. ──────────────
@@ -2021,8 +2020,8 @@ object PipelineQueries extends QueryModule {
       (s, dir) => {
         val emb = Tables.load(s, dir, "embeddings")
           .select(col("vec_id").as("vid"), col("embedding").as("vec"))
+        // rows come sorted by (cell, dim)
         Similarity.kmeansStepSeeded(emb, numCentroids = 32, scaleBits = 20)
-          .orderBy("cell", "dim")
       },
       Some("""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
         cent AS (SELECT vec_id AS cell, e AS ce FROM
@@ -2053,8 +2052,8 @@ object PipelineQueries extends QueryModule {
       (s, dir) => {
         val emb = Tables.load(s, dir, "embeddings")
           .select(col("vec_id").as("vid"), col("embedding").as("vec"))
+        // rows come sorted by (cell, dim)
         Similarity.kmeansTwoStepSeeded(emb, numCentroids = 32, scaleBits = 20)
-          .orderBy("cell", "dim")
       },
       Some("""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
         cent AS (SELECT vec_id AS cell, e AS ce FROM
@@ -2824,17 +2823,15 @@ object PipelineQueries extends QueryModule {
     //    learned merge per round plus the corpus token count after it —
     //    the compression trajectory. A round with no pair left ends the
     //    loop. 100 TB: the corpus collapses to the vocabulary in the
-    //    FIRST aggregate, which is checkpointed once; the only driver
-    //    traffic is one collected row per round. Every round runs the
-    //    same plan: the `bpe_pairs` kernel splits each word type, applies
-    //    the merges learned so far (an array literal, referenced by the
-    //    generated code) and emits its adjacent pairs weighted c_w plus
-    //    one (null, null) row weighted c_w·|syms|. Grouped, the null
-    //    group is the table's token total and sorts first, the best pair
-    //    second, so one count per round yields both the best pair and the
-    //    token total after the previous merge; one more count after the
-    //    last merge yields its total. Rounds 2+ and the result compile no
-    //    new class: the result is a local frame of the collected rounds.
+    //    FIRST aggregate, which is checkpointed once. Each round is one
+    //    fold over that checkpoint (graft.Bounded): the `BpeKernel`
+    //    splits each word type, applies the merges learned so far and
+    //    adds its adjacent pairs weighted c_w into a pair → count table
+    //    of at most (26 + merges)² entries, the only driver traffic. The
+    //    fold also keeps the token total and what merging each pair
+    //    saves, so the round knows the total after its own merge. Rounds
+    //    2+ plan nothing and compile no class; the result is a local
+    //    frame of the rounds.
     QueryDef("text_bpe_train3",
       (s, dir) => {
         import s.implicits._
@@ -2843,31 +2840,27 @@ object PipelineQueries extends QueryModule {
           .filter($"w".rlike("^[a-z]+$") && length($"w") >= 2)
           .groupBy($"w").agg(count(lit(1)).as("c_w"))
           .localCheckpoint()
-        def pairCounts(merges: Seq[(String, String)]) =
-          types.select(explode(graft.functions.TextHashFunctions.bpePairs(
-              $"w", $"c_w", typedlit(merges))).as("p"))
-            .groupBy($"p.a".as("a"), $"p.b".as("b"))
-            .agg(sum($"p.w").as("n"))
-            .orderBy($"a".isNotNull, $"n".desc, $"a", $"b").limit(2)
-            .collect()
-        // (round, merge_a, merge_b, pair_count, tokens after the merge):
-        // the next round's count fills in the token total
-        val rounds = scala.collection.mutable.ArrayBuffer
-          .empty[(Int, String, String, Long, Long)]
+        // (round, merge_a, merge_b, pair_count, tokens after the merge)
+        val rounds = scala.collection.mutable.ArrayBuffer.empty[Row]
+        var merges = Vector.empty[(UTF8String, UTF8String)]
         var done = false
-        while (!done) {
-          val counted = pairCounts(rounds.map(r => (r._2, r._3)).toSeq)
-          if (rounds.nonEmpty)
-            rounds(rounds.size - 1) = rounds.last.copy(_5 = counted.head.getLong(2))
-          counted.find(!_.isNullAt(0)) match {
-            case Some(b) if rounds.size < 3 =>
-              rounds += ((rounds.size + 1, b.getString(0), b.getString(1), b.getLong(2), 0L))
-            case _ => done = true
+        while (!done && rounds.size < 3) {
+          val learned = merges
+          // ^[a-z]+$ words: 26 letters plus one symbol per merge
+          val symbols = 26L + learned.size
+          val counted = Bounded.aggregate(types, symbols * symbols)(new BpeKernel.Counts)(
+            (c, r) => c.add(r.getUTF8String(0), r.getLong(1), learned), _ merge _,
+            _.pairs.size.toLong)
+          counted.best match {
+            case Some((a, b, n, tokensAfter)) =>
+              rounds += Row(rounds.size + 1, a.toString, b.toString, n, tokensAfter)
+              merges :+= (a -> b)
+            case None => done = true
           }
         }
-        s.createDataFrame(rounds.map(Row.fromTuple).asJava, StructType.fromDDL(
+        Bounded.frame(s, rounds.toSeq,
           "round INT NOT NULL, merge_a STRING, merge_b STRING, pair_count BIGINT NOT NULL, " +
-            "corpus_tokens_after BIGINT NOT NULL"))
+            "corpus_tokens_after BIGINT NOT NULL")
       },
       Some("""WITH toks AS (SELECT unnest(string_split_regex(lower(trim(text)), '\s+')) AS w
           FROM documents),

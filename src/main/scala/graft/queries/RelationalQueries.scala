@@ -44,6 +44,10 @@ object RelationalQueries extends QueryModule {
   private def copurchaseEdges(s: SparkSession, dir: String): DataFrame =
     copurchasePairsRaw(s, dir).distinct().localCheckpoint()
 
+  // TPC-H's nation table has 25 rows at every scale factor, so the
+  // nation-trade graph has at most 25² directed edges.
+  private val TpchNations = 25
+
   // The nation-trade graph's fact join, written once for the graph family
   // and agg_gravity_model: every lineitem with its buyer's nation
   // (c_nationkey) and its supplier's nation (s_nationkey). One
@@ -7232,9 +7236,10 @@ object RelationalQueries extends QueryModule {
     //    graph_pagerank_fixed bounded-iteration contract — a fixed round
     //    count is what keeps a data-dependent frontier oracle-checkable),
     //    over the distinct edge set. `src` and `dst` are nation keys, so
-    //    that set holds at most nations² rows by construction: it is
-    //    collected once and the rounds relax it on the driver, so the
-    //    query runs one job and its rounds add no plan or class.
+    //    that set holds at most nations² pairs by construction: one fold
+    //    over the fact join dedups it into a driver-side set, no shuffle
+    //    for the distinct, and the rounds relax it on the driver, so the
+    //    query's rounds add no plan or class.
     //    Distances are pure integers; unreached nodes are absent by
     //    construction in both engines. ──────────────────────────────────
     QueryDef("graph_shortest_hops",
@@ -7242,8 +7247,8 @@ object RelationalQueries extends QueryModule {
         import s.implicits._
         Graph.shortestHops(nationTradePairs(s, dir)
           .select($"c_nationkey".cast("long").as("src"),
-            $"s_nationkey".cast("long").as("dst"))
-          .distinct())
+            $"s_nationkey".cast("long").as("dst")),
+          maxEdges = TpchNations.toLong * TpchNations)
       },
       Some("""WITH e AS (SELECT DISTINCT CAST(c.c_nationkey AS BIGINT) AS src,
             CAST(s.s_nationkey AS BIGINT) AS dst

@@ -692,11 +692,12 @@ class PlanAuditSpec extends AnyFunSuite {
     // Build-time collects and the jobs of the written result count alike:
     // a loop may move its rounds onto the driver when its total falls.
     // Pinned at the counts measured at sf0.001 with one noop write; a rise
-    // means a new barrier, collect or stage.
+    // means a new barrier, collect or stage. Each bounded round
+    // (graft.Bounded) is one job.
     val pinned = Map(
-      "embed_kmeans_converged" -> 8,
-      "text_bpe_train3" -> 11,
-      "graph_shortest_hops" -> 6,
+      "embed_kmeans_converged" -> 5,
+      "text_bpe_train3" -> 6,
+      "graph_shortest_hops" -> 5,
       "sim_rerank_mmr" -> 5)
     val got = pinned.keys.toSeq.sorted.map { name =>
       name -> buildJobs(name)(_.write.format("noop").mode("overwrite").save())
@@ -710,7 +711,8 @@ class PlanAuditSpec extends AnyFunSuite {
     // stage to any of them. Pinned at the counts measured at sf0.001 with
     // one noop write before the operators were shared, except
     // graph_assortativity (20 then): it no longer builds the label
-    // propagation it discarded.
+    // propagation it discarded, and graph_shortest_hops (6 then): its
+    // edge fold dedups without a shuffle.
     val pinned = Map(
       "agg_gravity_model" -> 14,
       "graph_assortativity" -> 11,
@@ -728,7 +730,7 @@ class PlanAuditSpec extends AnyFunSuite {
       "graph_neighbor_jaccard" -> 10,
       "graph_pagerank_fixed" -> 20,
       "graph_personalized_pagerank" -> 20,
-      "graph_shortest_hops" -> 6,
+      "graph_shortest_hops" -> 5,
       "graph_triangle_count" -> 10,
       "graph_triangle_doulion" -> 9)
     val got = pinned.keys.toSeq.sorted.map { name =>

@@ -10,8 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * (`SparkEntry.localSession`), only Bench's between-pass sweep
   * releases RDDs through the global registry — a registry sweep inside a
   * query can free a concurrently running query's checkpoint — no code
-  * tunes Spark's code generation, and no code writes the session's
-  * function registry.
+  * tunes Spark's code generation, no code writes the session's
+  * function registry, and driver loops fold their input only through
+  * `graft.Bounded`.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -60,6 +61,16 @@ class SourceGuardSpec extends AnyFunSuite {
     // the same settings through SQLConf's entries (CODEGEN_CACHE_MAX_ENTRIES,
     // WHOLESTAGE_CODEGEN_ENABLED, ...)
     assert(codeLines("CODEGEN", "src/main", "tools").isEmpty)
+  }
+
+  test("only graft.Bounded folds a planned Dataset RDD or builds a local frame of Rows") {
+    // A driver loop folds its input through Bounded, which checks the
+    // state against its bound and plans the input once for every round.
+    for (token <- Seq("toRdd", "treeAggregate"))
+      assert(codeLines(token, "src/main", "tools").map(_._1).distinct ==
+        Seq("src/main/scala/graft/Bounded.scala"), token)
+    assert(codeLines("createDataFrame(", "src/main", "tools").filter(_._2.contains("asJava"))
+      .map(_._1) == Seq("src/main/scala/graft/Bounded.scala"))
   }
 
   test("no engine or tool code writes the session function registry") {

@@ -49,6 +49,48 @@ class ModelDagSpec extends AnyFunSuite with TempDirs {
     assert(out("inc_t").collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L, 3L, 4L, 5L))
   }
 
+  test("materialized models are read back with their written schema, without a job") {
+    import org.apache.spark.sql.{DataFrame, SparkSession}
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types.Metadata
+    val wh = tempDir("readback").toString
+    val keyMeta = Metadata.fromJson("""{"comment":"model key"}""")
+    // a non-null key with field metadata, a nullable flag, an all-null string
+    def build(lo: Long)(s: SparkSession): DataFrame = s.range(lo, lo + 3).toDF("k")
+      .select(col("k").as("k", keyMeta), when(col("k") % 2 === 0, true).as("even"),
+        lit(null).cast("string").as("note"))
+    def jobs(body: => Unit): Int = {
+      val n = new java.util.concurrent.atomic.AtomicInteger()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          n.incrementAndGet(); ()
+        }
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try { body; Thread.sleep(1500) } // the listener bus is async
+      finally spark.sparkContext.removeSparkListener(listener)
+      n.get()
+    }
+    def readBack(m: Model): (Int, DataFrame) = {
+      var out: DataFrame = null
+      (jobs { out = ModelDag.run(spark, Seq(m), Some(wh))(m.name) }, out)
+    }
+    // the read-back adds no job to the write's own
+    val writeJobs = jobs(build(0)(spark).write.mode("overwrite").parquet(s"$wh/probe"))
+    val table = Model("rb_table", Nil, Materialization.Table, build(0))
+    val inc = Model("rb_inc", Nil, Materialization.Incremental(Seq("k")), build(0))
+    for (m <- Seq(table, inc)) {
+      val (n, out) = readBack(m)
+      assert(n == writeJobs, s"${m.name}: $n jobs, the write alone ran $writeJobs")
+      assert(out.schema == spark.read.parquet(s"$wh/${m.name}").schema, m.name)
+      assert(out.schema("k").metadata == keyMeta, m.name)
+    }
+    // after a merge, too; the merge reads the stored table with inference
+    val merged = ModelDag.run(spark, Seq(inc.copy(build = build(2))), Some(wh))("rb_inc")
+    assert(merged.schema == spark.read.parquet(s"$wh/rb_inc").schema)
+    assert(merged.select("k").collect().map(_.getLong(0)).sorted.toSeq == (0L to 4L))
+  }
+
   test("table materialization persists to the warehouse dir") {
     val dir = tempDir("wh").toString
     val out = ModelDag.run(spark, ExampleModels.all, warehouseDir = Some(dir))

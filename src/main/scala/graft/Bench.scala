@@ -52,9 +52,11 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = SparkEntry.localSession()
 
-    /** Release every persisted RDD block after a pass. The iterative
-      * queries (graph family, dedup_clusters, MMR) barrier 3-6
-      * localCheckpoint frames each; ContextCleaner only reclaims those
+    /** Release every persisted RDD block after a pass. The loops over
+      * data-sized frames (k-core, k-truss, BFS distance, dedup_clusters)
+      * barrier 3-6 localCheckpoint frames each; the loops whose state is
+      * fixed by a dimension run on the driver (graft.Bounded) and pin
+      * none. ContextCleaner only reclaims those
       * blocks when GC happens to collect the RDD reference, so across a
       * 452-query suite they accumulate, heap pressure mounts, and
       * whichever query draws the resulting GC pauses pays 2-4× — the r12

@@ -2,10 +2,9 @@ package graft.operators
 
 import scala.collection.mutable
 
-import graft.Bounded
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import graft.{Ansi, Bounded}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Graph operators over edge-list DataFrames: each algorithm behind the
   * `graph_*` queries, defined once. Edge lists are plain frames — (a, b)
@@ -15,9 +14,13 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * operators and keeps the oracle SQL.
   *
   * Scale posture: fixed round counts (a data-dependent frontier stays
-  * oracle-checkable), a localCheckpoint barrier wherever a loop would
-  * otherwise re-plan its input exponentially, and broadcast joins only
-  * against node-sized frames.
+  * oracle-checkable). A loop whose state is fixed by a dimension (the
+  * nation grid's nodes and edges) folds its edge list to the driver once
+  * through [[graft.Bounded]], with the dimension's size as its bound, runs
+  * its rounds there in [[graft.Ansi]] arithmetic and returns a local
+  * frame. A loop over data-sized edges keeps its rounds in Spark behind a
+  * localCheckpoint barrier per round, and joins by broadcast only against
+  * node-sized frames.
   */
 object Graph {
 
@@ -55,95 +58,103 @@ object Graph {
         s"not a checkpointed frame (plan root ${p.nodeName})")
     }
 
-  // ── damped rank (PageRank, personalized PageRank) ────────────────────
+  // ── nation-grid loops on the driver ──────────────────────────────────
+
+  /** Column `i` of a collected row as a node id: integral, and a null fails. */
+  private def id(r: Row, i: Int): Long = r.getAs[Number](i).longValue
+
+  /** Every row of a node frame with its `node` id, in id order; at most
+    * `maxNodes` rows.
+    */
+  private def nodeRows(nodes: DataFrame, maxNodes: Long): Seq[(Long, Row)] = {
+    val i = nodes.schema.fieldIndex("node")
+    Bounded.collect(nodes, maxNodes).toSeq.map(r => id(r, i) -> r).sortBy(_._1)
+  }
+
+  /** The (src, dst, w) triples of a weighted edge list over at most
+    * `maxNodes` nodes, so at most `maxNodes`² edges.
+    */
+  private def weighted(edges: DataFrame, maxNodes: Long): Seq[(Long, Long, Long)] =
+    Bounded.collect(edges.select(col("src"), col("dst"), col("w")), maxNodes * maxNodes)
+      .toSeq.map(r => (id(r, 0), id(r, 1), r.getLong(2)))
+
+  /** A local frame with a row per node: its `keys` columns as `nodes`
+    * types them, then the BIGINT `cols`, valued by `f` of the node id.
+    */
+  private def nodeFrame(nodes: DataFrame, ns: Seq[(Long, Row)], keys: Seq[String],
+      cols: String*)(f: Long => Seq[Long]): DataFrame =
+    Bounded.frame(nodes.sparkSession,
+      ns.map { case (n, r) => Row.fromSeq(keys.map(r.getAs[Any]) ++ f(n)) },
+      (keys.map(k => s"$k ${nodes.schema(k).dataType.sql}") ++ cols.map(_ + " BIGINT"))
+        .map(_ + " NOT NULL").mkString(", "))
 
   /** Two damped rounds over weighted directed (src, dst, w) edges in
     * fixed-point BIGINT ranks: in(dst) = Σ_src (r(src)·w) DIV ow(src),
-    * r'(node) = teleport + (85·in) DIV 100. `mass` is a 1-row aggregate
-    * over `nodes`, crossed onto every node; `start` and `teleport` are
-    * SQL over the node columns and the mass. Returns the rank frames of
-    * rounds 1 and 2: the node columns plus `r`.
+    * r'(node) = teleport + (85·in) DIV 100. The restart mass sits on the
+    * nodes whose `seed` is 1: with M = Σ seed, a seed starts at 1e9 DIV M
+    * and teleports 15e9 DIV (100·M), any other node 0. Returns the node
+    * rows and the ranks after rounds 1 and 2.
     */
-  private def dampedRank(edges: DataFrame, nodes: DataFrame, mass: Column,
-      start: String, teleport: String): (DataFrame, DataFrame) = {
-    val m = nodes.agg(mass) // 1-row broadcast scalar
-    val outw = edges.groupBy(col("src")).agg(sum(col("w")).as("ow"))
-    val r0 = nodes.crossJoin(broadcast(m)).selectExpr(nodes.columns.toSeq :+ s"$start AS r": _*)
-    def iterate(r: DataFrame): DataFrame = {
-      val incoming = edges
-        .join(broadcast(outw), "src")
-        .join(broadcast(r.withColumnRenamed("node", "src").select(col("src"), col("r"))), "src")
-        .selectExpr("dst", "(r * w) DIV ow AS c")
-        .groupBy(col("dst")).agg(sum(col("c")).as("inr"))
-      nodes.crossJoin(broadcast(m))
-        .join(broadcast(incoming), col("node") === col("dst"), "left")
-        .selectExpr(nodes.columns.toSeq :+ s"$teleport + (85 * coalesce(inr, 0)) DIV 100 AS r": _*)
+  private def dampedRank(edges: DataFrame, nodes: DataFrame, maxNodes: Long)(
+      seed: Row => Long): (Seq[(Long, Row)], Map[Long, Long], Map[Long, Long]) = {
+    val ns = nodeRows(nodes, maxNodes)
+    val es = weighted(edges, maxNodes)
+    val mass = ns.map(n => seed(n._2)).foldLeft(0L)(Math.addExact)
+    val outw = es.groupMapReduce(_._1)(_._3)(Math.addExact)
+    def seeded(r: Row, x: => Long): Long = if (seed(r) == 1L) x else 0L
+    def iterate(r: Map[Long, Long]): Map[Long, Long] = {
+      val in = es.filter(e => r.contains(e._1)).groupMapReduce(_._2)(
+        e => Ansi.div(Math.multiplyExact(r(e._1), e._3), outw(e._1)))(Math.addExact)
+      ns.map { case (n, row) =>
+        n -> Math.addExact(seeded(row, Ansi.div(15000000000L, Math.multiplyExact(100L, mass))),
+          Ansi.div(Math.multiplyExact(85L, in.getOrElse(n, 0L)), 100L))
+      }.toMap
     }
-    val r1 = iterate(r0)
-    (r1, iterate(r1))
+    val r1 = iterate(
+      ns.map { case (n, row) => n -> seeded(row, Ansi.div(1000000000L, mass)) }.toMap)
+    (ns, r1, iterate(r1))
   }
 
   /** PageRank (d = 0.85, ranks scaled by 1e9) of every `node`: the
-    * uniform-teleport damped rank, (node, rank_i1, rank_i2).
+    * uniform-teleport damped rank, (node, rank_i1, rank_i2). The graph
+    * has at most `maxNodes` nodes; its rounds run on the driver.
     */
-  def pageRank(edges: DataFrame, nodes: DataFrame): DataFrame = {
-    val (r1, r2) = dampedRank(edges, nodes, count(lit(1)).as("nn"),
-      "1000000000 DIV nn", "15000000000 DIV (100 * nn)")
-    r1.withColumnRenamed("r", "rank_i1")
-      .join(r2.withColumnRenamed("r", "rank_i2"), "node")
-      .orderBy(col("node"))
+  def pageRank(edges: DataFrame, nodes: DataFrame, maxNodes: Long): DataFrame = {
+    val (ns, r1, r2) = dampedRank(edges, nodes, maxNodes)(_ => 1L)
+    nodeFrame(nodes, ns, Seq("node"), "rank_i1", "rank_i2")(n => Seq(r1(n), r2(n)))
   }
 
   /** Personalized PageRank: the damped rank whose start and teleport mass
     * sit on the nodes with `seed` = 1, (node, seed, ppr_i1, ppr_i2).
     */
-  def personalizedPageRank(edges: DataFrame, nodes: DataFrame): DataFrame = {
-    val (r1, r2) = dampedRank(edges, nodes, sum(col("seed")).as("ns"),
-      "CASE WHEN seed = 1 THEN 1000000000 DIV ns ELSE 0L END",
-      "CASE WHEN seed = 1 THEN 15000000000 DIV (100 * ns) ELSE 0L END")
-    r1.withColumnRenamed("r", "ppr_i1")
-      .join(r2.select(col("node").as("node2"), col("r").as("ppr_i2")),
-        col("node") === col("node2"))
-      .select(col("node"), col("seed"), col("ppr_i1"), col("ppr_i2"))
-      .orderBy(col("node"))
+  def personalizedPageRank(edges: DataFrame, nodes: DataFrame, maxNodes: Long): DataFrame = {
+    val (ns, r1, r2) = dampedRank(edges, nodes, maxNodes)(_.getAs[Long]("seed"))
+    nodeFrame(nodes, ns, Seq("node", "seed"), "ppr_i1", "ppr_i2")(n => Seq(r1(n), r2(n)))
   }
 
   /** HITS over weighted directed (src, dst, w) edges: two
     * mutual-reinforcement rounds a(v) = Σ h(u)·w, h(u) = Σ a(v)·w, each
-    * rescaled to max = 1e9, (node, authority, hub).
+    * rescaled to max = 1e9 by an exact DECIMAL(38,0) DIV, (node,
+    * authority, hub).
     */
-  def hits(flows: DataFrame, nodes: DataFrame): DataFrame = {
-    // all 4 mutual-reinforcement steps reference `edges`, each rescale
-    // references its input twice, and the output joins a2 twice —
-    // without a barrier the final plan re-evaluates the edge build ~44×
-    // (measured 5.7 s at sf0.1 vs ~1 s checkpointed). Each |nodes|-row
-    // step checkpoints too so the tiny-join fan-out doesn't compound.
-    val edges = flows.localCheckpoint()
-    // the ×1e9 product passes 2^63 at sf10 — DECIMAL(38,0) DIV is
-    // exact integral division in Spark (bigint result), HUGEINT //
-    // its DuckDB twin
-    def rescale(x: DataFrame, col0: String): DataFrame = {
-      val mx = x.agg(max(col(col0)).as("mx"))
-      x.crossJoin(broadcast(mx))
-        .selectExpr("node",
-          s"(CAST($col0 AS DECIMAL(38,0)) * 1000000000) DIV mx AS $col0")
-        .localCheckpoint()
+  def hits(flows: DataFrame, nodes: DataFrame, maxNodes: Long): DataFrame = {
+    val ns = nodeRows(nodes, maxNodes)
+    val isNode = ns.map(_._1).toSet
+    val es = weighted(flows, maxNodes).filter(e => isNode(e._1) && isNode(e._2))
+    // score x on the `from` end of each edge, pushed to its `to` end: the
+    // authority step runs src → dst, the hub step mirrors it
+    def step(x: Map[Long, Long], from: ((Long, Long, Long)) => Long,
+        to: ((Long, Long, Long)) => Long): Map[Long, Long] = {
+      val pushed = es.groupMapReduce(to)(e => Math.multiplyExact(x(from(e)), e._3))(Math.addExact)
+      val raw = ns.map { case (n, _) => n -> pushed.getOrElse(n, 0L) }
+      lazy val mx = raw.map(_._2).max
+      raw.map { case (n, v) => n -> Ansi.div(Ansi.dec38(BigInt(v) * 1000000000L), mx) }.toMap
     }
-    // score `in` on the `from` end of each edge, pushed to its `to` end
-    // as `out`: the authority step runs src → dst, the hub step mirrors it
-    def step(x: DataFrame, in: String, out: String, from: String, to: String): DataFrame =
-      rescale(
-        nodes.join(broadcast(edges
-            .join(broadcast(x.withColumnRenamed("node", from)), from)
-            .groupBy(col(to)).agg(sum(col(in) * col("w")).as(out))),
-          col("node") === col(to), "left")
-          .selectExpr("node", s"coalesce($out, 0) AS $out"), out)
-    val h0 = nodes.selectExpr("node", "CAST(1000000000 AS BIGINT) AS h")
-    val a1 = step(h0, "h", "a", "src", "dst"); val h1 = step(a1, "a", "h", "dst", "src")
-    val a2 = step(h1, "h", "a", "src", "dst"); val h2 = step(a2, "a", "h", "dst", "src")
-    a2.withColumnRenamed("a", "authority")
-      .join(h2.withColumnRenamed("h", "hub"), "node")
-      .orderBy(col("node"))
+    def authority(h: Map[Long, Long]) = step(h, _._1, _._2)
+    def hub(a: Map[Long, Long]) = step(a, _._2, _._1)
+    val a2 = authority(hub(authority(ns.map(_._1 -> 1000000000L).toMap)))
+    val h2 = hub(a2)
+    nodeFrame(nodes, ns, Seq("node"), "authority", "hub")(n => Seq(a2(n), h2(n)))
   }
 
   // ── triangles ────────────────────────────────────────────────────────
@@ -204,25 +215,23 @@ object Graph {
 
   /** Two synchronous label-propagation rounds: every node starts with its
     * own id and adopts its neighbours' weighted modal label, ties to the
-    * smallest via `max(struct(wsum, −lbl))`; isolated nodes keep theirs.
-    * Returns the checkpointed (node, lbl).
+    * smallest (the SQL statement's `max(struct(wsum, −lbl))`); isolated
+    * nodes keep theirs. The graph has at most `maxNodes` nodes; the rounds
+    * run on the driver. Returns the local (node, lbl) frame.
     */
-  def labelPropagation(edges: DataFrame, nodes: DataFrame): DataFrame = {
-    def round(lbl: DataFrame): DataFrame = {
-      val adopted = edges
-        .join(broadcast(lbl.withColumnRenamed("node", "dst")), "dst")
-        .groupBy(col("src"), col("lbl")).agg(sum(col("w")).as("wsum"))
-        .groupBy(col("src"))
-        .agg(max(struct(col("wsum"), (-col("lbl")).as("nl"))).as("m"))
-        .select(col("src").as("node"), (-col("m.nl")).as("lbl"))
-      // isolated nodes keep their label
-      nodes.join(broadcast(adopted), Seq("node"), "left")
-        .select(col("node"), coalesce(col("lbl"), col("node").cast("long")).as("lbl"))
+  def labelPropagation(edges: DataFrame, nodes: DataFrame, maxNodes: Long): DataFrame = {
+    val ns = nodeRows(nodes, maxNodes)
+    val es = weighted(edges, maxNodes)
+    def round(lbl: Map[Long, Long]): Map[Long, Long] = {
+      val wsum = es.filter(e => lbl.contains(e._2))
+        .groupMapReduce(e => (e._1, lbl(e._2)))(_._3)(Math.addExact)
+      val adopted = wsum.groupMapReduce(_._1._1) { case ((_, l), w) => (w, l) } { (x, y) =>
+        if (x._1 > y._1 || (x._1 == y._1 && x._2 < y._2)) x else y
+      }
+      ns.map { case (n, _) => n -> adopted.get(n).fold(n)(_._2) }.toMap
     }
-    val l0 = nodes.select(col("node"), col("node").cast("long").as("lbl"))
-    // labels are |nodes| rows and modularity's internal-weight join
-    // references them twice — checkpoint so the two rounds run once
-    round(round(l0)).localCheckpoint()
+    val lbl = round(round(ns.map { case (n, _) => n -> n }.toMap))
+    nodeFrame(nodes, ns, Seq("node"), "lbl")(n => Seq(lbl(n)))
   }
 
   /** Weighted modularity per community of a (node, lbl) partition: the
@@ -285,26 +294,36 @@ object Graph {
 
   // ── distances ────────────────────────────────────────────────────────
 
-  /** Harmonic centrality Σ_v 6 DIV d(u, v) over an undirected (a, b)
-    * edge set (each edge once): all-sources BFS with 3 min-relaxation
-    * rounds, so every finite distance is ≤ 3 and 6/d is an integer.
+  /** Harmonic centrality Σ_v 6 DIV d(u, v) over the undirected graph of
+    * the BIGINT pairs in `pairs`' first two columns (any orientation,
+    * repeats and self-loops allowed) on at most `maxNodes` nodes:
+    * all-sources BFS bounded at 3 hops, so every finite distance is ≤ 3
+    * and 6/d is an integer. One fold ([[graft.Bounded.aggregate]]) brings
+    * the distinct edges to the driver and the searches run there; a
+    * source that reaches nothing is absent.
     */
-  def harmonicCentrality(e0: DataFrame): DataFrame = {
-    val edges = bothWays(e0, "a", "b").localCheckpoint()
-    val nodes = edges.select(col("a").as("node")).distinct()
-    val d0 = nodes.select(col("node").as("src"), col("node").as("v"), lit(0L).as("d"))
-    val dist = (1 to 3).foldLeft(d0.localCheckpoint()) { (dst, _) =>
-      dst.union(
-        dst.join(edges, dst("v") === edges("a"))
-          .select(dst("src"), edges("b").as("v"), (dst("d") + 1L).as("d")))
-        .groupBy(col("src"), col("v")).agg(min(col("d")).as("d"))
-        .localCheckpoint()
+  def harmonicCentrality(pairs: DataFrame, maxNodes: Long): DataFrame = {
+    val adj = Bounded.aggregate(pairs, maxNodes * maxNodes)(mutable.HashSet.empty[(Long, Long)])(
+      (set, r) => {
+        require(!r.anyNull, "harmonicCentrality: an edge has a null endpoint")
+        set += (r.getLong(0) -> r.getLong(1)) += (r.getLong(1) -> r.getLong(0))
+      },
+      _ ++= _, _.size.toLong).groupMap(_._1)(_._2)
+    val rows = adj.keys.toSeq.sorted.flatMap { src =>
+      // the nodes first reached in round d are at distance d
+      var seen = Set(src)
+      var frontier = Set(src)
+      var reached, hx6 = 0L
+      for (d <- 1 to 3) {
+        frontier = frontier.flatMap(adj) -- seen
+        seen ++= frontier
+        reached += frontier.size
+        hx6 += frontier.size * (6L / d)
+      }
+      if (reached > 0) Some(Row(src, reached, hx6)) else None
     }
-    dist.filter(col("d") > 0L)
-      .groupBy(col("src"))
-      .agg(count(lit(1)).as("n_reached"),
-        sum(expr("6 DIV d")).as("harmonic_x6"))
-      .orderBy(col("src"))
+    Bounded.frame(pairs.sparkSession, rows,
+      "src BIGINT NOT NULL, n_reached BIGINT NOT NULL, harmonic_x6 BIGINT NOT NULL")
   }
 
   /** Hops from node 0 over directed BIGINT (src, dst) edges after 3
@@ -519,7 +538,8 @@ object Graph {
       .localCheckpoint()
     releaseCheckpoint(e0)
     // each cap collapses to a collected 1-row verdict and its edge
-    // checkpoint is released, blocking, before the next cap runs
+    // checkpoint is released, blocking, before the next cap runs; the
+    // caps run in ascending order, so the rows come out sorted
     val collected = Seq(30L, 60L, 120L).map { cap =>
       val nHubs = deg.filter(col("deg") > cap).count()
       val ec = dm.filter(col("dmax") <= cap).select(col("a"), col("b"))
@@ -529,20 +549,9 @@ object Graph {
           max(col("sup")).as("max_support"), sum(col("sup")).as("sum_support"))
         .head()
       releaseCheckpoint(ec)
-      Row(cap, nHubs, r.getLong(0),
-        if (r.isNullAt(1)) null else r.getLong(1),
-        if (r.isNullAt(2)) null else r.getLong(2),
-        if (r.isNullAt(3)) null else r.getLong(3))
+      Row(cap, nHubs, r.getLong(0), r.get(1), r.get(2), r.get(3))
     }
-    val schema = StructType(Seq(
-      StructField("cap", LongType, nullable = false),
-      StructField("n_hubs", LongType, nullable = false),
-      StructField("n_edges", LongType, nullable = false),
-      StructField("n_sup_pos", LongType, nullable = true),
-      StructField("max_support", LongType, nullable = true),
-      StructField("sum_support", LongType, nullable = true)))
-    val s = e0.sparkSession
-    s.createDataFrame(s.sparkContext.parallelize(collected, 1), schema)
-      .orderBy(col("cap"))
+    Bounded.frame(e0.sparkSession, collected, "cap BIGINT NOT NULL, n_hubs BIGINT NOT NULL, " +
+      "n_edges BIGINT NOT NULL, n_sup_pos BIGINT, max_support BIGINT, sum_support BIGINT")
   }
 }

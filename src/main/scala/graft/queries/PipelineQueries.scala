@@ -1,9 +1,10 @@
 package graft.queries
 
-import graft.{Bounded, Tables}
+import graft.{Ansi, Bounded, Tables}
 import graft.functions.BpeKernel
 import graft.functions.TextFunctions._
-import graft.operators.{Dedup, Similarity}
+import graft.operators.{Dedup, Graph, Similarity}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types.{IntegerType, LongType}
@@ -4906,17 +4907,20 @@ object PipelineQueries extends QueryModule {
     //    the output row (and spec-pinned strictly-greater). Perceptron
     //    unroll: w₁ = Σ y·x over all train docs (w₀ = 0 mispredicts
     //    everything), then 7 mispredicted-set updates. Scale shape:
-    //    the (doc, bucket, tf) feature matrix builds once (one explode
-    //    + one hash aggregate, localCheckpointed); each step is one
-    //    broadcast join against the ≤4097-row weight table + two
-    //    bounded aggregates — O(features) per step, weights never
-    //    leave the driver-broadcast size class. ────────────────────────
+    //    the per-doc (label, token buckets) table builds once, map-only
+    //    and localCheckpointed; each step is one fold over it
+    //    (graft.Bounded) that scores, finds the mispredicted docs and
+    //    sums their update in one pass, into a state of the 4,097
+    //    weights — O(features) per step, the weights stay on the
+    //    driver, and the held-out fifth is scored in one more fold. ────
     QueryDef("text_classifier_train",
       (s, dir) => {
         import s.implicits._
+        // per doc: its label and its tokens' hashed buckets, one entry per
+        // token, so a bucket's multiplicity is its tf — built once, then
+        // every round folds it
         val docs = Tables.load(s, dir, "documents")
-        val lab = docs
-          .select($"doc_id",
+          .select($"doc_id", $"text",
             graft.functions.TextHashFunctions.gopherStats($"text").as("g"))
           .select($"doc_id",
             when($"g".getItem(0) >= 50L && $"g".getItem(0) <= 100000L &&
@@ -4924,89 +4928,64 @@ object PipelineQueries extends QueryModule {
               $"g".getItem(1) <= lit(10L) * $"g".getItem(0) &&
               lit(10L) * ($"g".getItem(2) + $"g".getItem(3)) <= $"g".getItem(0) &&
               lit(5L) * $"g".getItem(4) >= lit(4L) * $"g".getItem(0) &&
-              $"g".getItem(5) >= 2L, 1L).otherwise(-1L).as("y"))
-        val tf = docs
-          .select($"doc_id", explode(tokens($"text")).as("tok"))
-          .select($"doc_id",
-            pmod(conv(substring(md5($"tok"), 1, 8), 16, 10).cast("long"),
-              lit(4096L)).as("bucket"))
-          .groupBy($"doc_id", $"bucket").agg(count(lit(1)).as("tf"))
-          // the bias feature: constant x = 8 on bucket 4096 for every doc
-          .unionByName(docs.select($"doc_id", lit(4096L).as("bucket"),
-            lit(8L).as("tf")))
-          .join(lab, "doc_id")
-        // r16 (guide §2.4, share one exchange): the checkpointed feature
-        // table loses its partitioning through the bias union, so every
-        // training round's groupBy(doc_id, y) re-shuffled it — 7 full
-        // feature-table exchanges. Repartition by doc_id ONCE before the
-        // checkpoint (LogicalRDD preserves outputPartitioning): the
-        // per-round score aggregate, the mis semi-join and the n_train
-        // distinct all cluster by doc_id and now reuse that layout.
-        val train = tf.filter(pmod($"doc_id", lit(5L)) < 4L)
-          .repartition($"doc_id").localCheckpoint()
-        // heldout feeds BOTH final scoring branches (trained + standin);
-        // checkpointed so the explode + tf aggregate over the heldout
-        // fifth runs once, not twice (guide §5 reuse).
-        val heldout = tf.filter(pmod($"doc_id", lit(5L)) === 4L)
+              $"g".getItem(5) >= 2L, 1L).otherwise(-1L).as("y"),
+            transform(tokens($"text"), t =>
+              pmod(conv(substring(md5(t), 1, 8), 16, 10).cast("long"), lit(4096L)))
+              .as("buckets"))
           .localCheckpoint()
-        def misSet(w: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = train
-          .join(broadcast(w), Seq("bucket"))
-          .groupBy($"doc_id", $"y")
-          .agg(sum($"tf" * $"w").as("sc"))
-          .filter($"y" * $"sc" <= 0L)
-          .select($"doc_id")
-        // the delta aggregation stays map-side partial; the mis join side
-        // is hinted by the caller (broadcast only when its measured count
-        // is broadcast-sized — r15 ADVICE: round 1 can mispredict nearly
-        // every train doc, and at 100 TB an unconditional hint would blow
-        // the 8 GB / 512 M-row broadcast cap)
-        def update(w: org.apache.spark.sql.DataFrame, mis: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = w
-          .join(train.join(mis, "doc_id")
-            .groupBy($"bucket").agg(sum($"y" * $"tf").as("dw")),
-            Seq("bucket"), "left")
-          .select($"bucket", ($"w" + coalesce($"dw", lit(0L))).as("w"))
-        // step 1 (w0 = 0 mispredicts every doc) + 7 update rounds; the
-        // per-round misprediction counts ride along as the convergence
-        // witness the output reports
-        var w = train.groupBy($"bucket").agg(sum($"y" * $"tf").as("w"))
-          .localCheckpoint()
-        val misCounts = scala.collection.mutable.ArrayBuffer.empty[Long]
-        (1 to 7).foreach { _ =>
-          val mis = misSet(w).localCheckpoint()
-          val nMis = mis.count()
-          misCounts += nMis
-          // guide §3.1: broadcast the mispredicted-id set only when its
-          // just-measured cardinality is safely under the broadcast size
-          // class (~50 M longs ≈ 400 MB framed); otherwise let the
-          // planner shuffle-join — train is doc_id-partitioned, so the
-          // fallback co-locates on the checkpoint layout. At sf0.1 every
-          // round broadcasts (≤ ~8 k ids), identical plan to r15.
-          val misJ = if (nMis <= 50000000L) broadcast(mis) else mis
-          w = update(w, misJ).localCheckpoint()
+        val train = docs.filter(pmod($"doc_id", lit(5L)) < 4L)
+        val heldout = docs.filter(pmod($"doc_id", lit(5L)) === 4L)
+        // the weights: 4096 md5 buckets plus the bias (bucket 4096, x = 8)
+        val nW = 4097
+        def tokensOf(r: InternalRow): Iterator[Int] =
+          if (r.isNullAt(2)) Iterator.empty
+          else { val b = r.getArray(2); Iterator.range(0, b.numElements).map(b.getLong(_).toInt) }
+        def score(r: InternalRow, w: Array[Long]): Long =
+          tokensOf(r).foldLeft(Math.multiplyExact(8L, w(4096)))((sc, b) => Math.addExact(sc, w(b)))
+        def plus(a: Array[Long], b: Array[Long]) =
+          Array.tabulate(a.length)(i => Math.addExact(a(i), b(i)))
+        // one perceptron step under w: each mispredicted train doc adds y·x
+        // to the delta and 1 to its last slot, the mispredicted count
+        def step(w: Array[Long]): Array[Long] =
+          Bounded.aggregate(train, nW + 1L)(new Array[Long](nW + 1))((dw, r) => {
+            val y = r.getLong(1)
+            if (Math.multiplyExact(y, score(r, w)) <= 0L) {
+              tokensOf(r).foreach(b => dw(b) = Math.addExact(dw(b), y))
+              dw(4096) = Math.addExact(dw(4096), Math.multiplyExact(8L, y))
+              dw(nW) += 1L
+            }
+            dw
+          }, plus, _.length.toLong)
+        // 8 steps from w₀ = 0, under which every train doc mispredicts, so
+        // step 0's count is n_train; mis(t) is the count under w_t, and
+        // plus(w, dw) keeps w's 4,097 slots
+        val (w, mis) = (0 until 8).foldLeft((new Array[Long](nW), Vector.empty[Long])) {
+          case ((w, mis), _) => val dw = step(w); (plus(w, dw), mis :+ dw(nW))
         }
-        def accuracy(scored: org.apache.spark.sql.DataFrame, tag: String): org.apache.spark.sql.DataFrame = scored
-          .agg(count(lit(1)).as("n"),
-            sum(when(($"sc" > 0L) === ($"y" === 1L), 1L).otherwise(0L))
-              .as("nc"))
-          .select($"n", expr("nc * 1000000 DIV n").as(tag + "_ppm"))
-        val trained = heldout.join(broadcast(w), Seq("bucket"), "left")
-          .groupBy($"doc_id", $"y")
-          .agg(sum($"tf" * coalesce($"w", lit(0L))).as("sc"))
-        val standin = heldout.filter($"bucket" < 4096L)
-          .withColumn("w", pmod($"bucket" * lit(2654435761L), lit(2001L)) - lit(1000L))
-          .groupBy($"doc_id", $"y").agg(sum($"tf" * $"w").as("sc"))
-        val nTrain = train.select($"doc_id").distinct()
-          .agg(count(lit(1)).as("n_train"))
-        nTrain
-          .crossJoin(broadcast(
-            accuracy(trained, "acc_trained").withColumnRenamed("n", "n_heldout")))
-          .crossJoin(broadcast(
-            accuracy(standin, "acc_standin").drop("n")))
-          .select($"n_train", $"n_heldout",
-            lit(misCounts(0)).as("n_mis1"),
-            lit(misCounts(6)).as("n_mis7"),
-            $"acc_trained_ppm", $"acc_standin_ppm",
-            ($"acc_trained_ppm" > $"acc_standin_ppm").as("improved"))
+        // held out: (docs, correct under w) and, for the r13 stand-in
+        // weights on the md5 buckets alone, (docs with a token, correct)
+        val held = Bounded.aggregate(heldout, 4L)(new Array[Long](4))((st, r) => {
+          val y = r.getLong(1)
+          def correct(sc: Long) = if ((sc > 0L) == (y == 1L)) 1L else 0L
+          st(0) += 1L
+          st(1) += correct(score(r, w))
+          val bs = tokensOf(r).toSeq
+          if (bs.nonEmpty) {
+            st(2) += 1L
+            st(3) += correct(bs.foldLeft(0L)((sc, b) => Math.addExact(sc,
+              Math.floorMod(Math.multiplyExact(b.toLong, 2654435761L), 2001L) - 1000L)))
+          }
+          st
+        }, plus, _.length.toLong)
+        Graph.releaseCheckpoint(docs)
+        def ppm(nc: Long, n: Long): java.lang.Long =
+          if (n == 0L) null else Ansi.div(Math.multiplyExact(nc, 1000000L), n)
+        val (accT, accS) = (ppm(held(1), held(0)), ppm(held(3), held(2)))
+        val improved = if (accT == null || accS == null) null else accT.longValue > accS.longValue
+        Bounded.frame(s, Seq(Row(mis(0), held(0), mis(1), mis(7), accT, accS, improved)),
+          "n_train BIGINT NOT NULL, n_heldout BIGINT NOT NULL, n_mis1 BIGINT NOT NULL, " +
+            "n_mis7 BIGINT NOT NULL, acc_trained_ppm BIGINT, acc_standin_ppm BIGINT, " +
+            "improved BOOLEAN")
       },
       Some {
         // 7 unrolled update rounds (the sqlPcaCtes device): score under

@@ -1,8 +1,8 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Ansi, Bounded, Tables}
 import graft.operators.Graph
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import java.sql.Timestamp
@@ -12,7 +12,8 @@ import java.sql.Timestamp
   *
   * Scale posture: filters/projections reach the parquet scan (Catalyst
   * pushdown); dimension joins are broadcast; aggregations are partial+final
-  * hash aggregates; no driver-side collection anywhere.
+  * hash aggregates; driver-side state only through `graft.Bounded`, bounded
+  * by dimension sizes.
   */
 object RelationalQueries extends QueryModule {
   import Exact._
@@ -47,6 +48,9 @@ object RelationalQueries extends QueryModule {
   // TPC-H's nation table has 25 rows at every scale factor, so the
   // nation-trade graph has at most 25² directed edges.
   private val TpchNations = 25
+
+  // TPC-H's customer table has 5 market segments at every scale factor.
+  private val TpchSegments = 5
 
   // The nation-trade graph's fact join, written once for the graph family
   // and agg_gravity_model: every lineitem with its buyer's nation
@@ -597,14 +601,15 @@ object RelationalQueries extends QueryModule {
     //    can never hash-match across engines; fixed-point is also how
     //    you'd make it reproducible on a real cluster). Plan shape: the
     //    edge build is the one heavy join (fact ⋈ orders shuffle + three
-    //    broadcast dims, one groupBy(src,dst) aggregate); each iteration
-    //    after that joins the |edges|-row table against a broadcast
-    //    |nodes|-row rank frame and aggregates by dst — iteration cost
-    //    scales with |edges|, never re-touches the fact table. Dangling
+    //    broadcast dims, one groupBy(src,dst) aggregate); the ≤ nations²
+    //    edges and the nations then come to the driver, one bounded
+    //    collect each, where both iterations run in ANSI-exact Long
+    //    arithmetic — no iteration re-touches the fact table or plans a
+    //    join. Dangling
     //    nodes (no out-edges) contribute nothing; their mass evaporates
     //    (the standard simplified variant — documented, deterministic).
     QueryDef("graph_pagerank_fixed",
-      (s, dir) => Graph.pageRank(nationTradeFlows(s, dir), nations(s, dir)),
+      (s, dir) => Graph.pageRank(nationTradeFlows(s, dir), nations(s, dir), TpchNations),
       Some("""WITH e AS (
           SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
             CAST(count(*) AS BIGINT) AS w
@@ -636,12 +641,13 @@ object RelationalQueries extends QueryModule {
     //    buyers — the two-score decomposition PageRank's single score
     //    can't express): two mutual-reinforcement iterations in
     //    fixed-point integers — a(v) = Σ h(u)·w, h(u) = Σ a(v)·w, each
-    //    rescaled to max = 1e9 via an integral DIV against the 1-row
-    //    broadcast max (the pagerank_fixed discipline: BIGINT sums,
-    //    order-independent, partitioning-proof). Iteration cost is
-    //    |edges|-sized; the fact table is touched once. ─────────────────
+    //    rescaled to max = 1e9 via an exact DECIMAL(38,0) DIV by the
+    //    round's max (the pagerank_fixed discipline: BIGINT sums,
+    //    order-independent, partitioning-proof). The fact table is
+    //    touched once; the ≤ nations² edges come to the driver and the
+    //    four steps run there. ─────────────────────────────────────────
     QueryDef("graph_hits_power",
-      (s, dir) => Graph.hits(nationTradeFlows(s, dir), nations(s, dir)),
+      (s, dir) => Graph.hits(nationTradeFlows(s, dir), nations(s, dir), TpchNations),
       Some("""WITH e AS (
           SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
             CAST(count(*) AS BIGINT) AS w
@@ -878,19 +884,15 @@ object RelationalQueries extends QueryModule {
     //    community-detection baseline on the nation trade graph. Every
     //    node starts labeled with its own id; each round it adopts its
     //    neighbors' WEIGHTED modal label, ties to the SMALLEST label —
-    //    the argmax is `max(struct(weight_sum, −label))`, a
-    //    partial-mergeable aggregate, so a round is ONE join + ONE
-    //    hash aggregate over the undirected edge list (no window, no
-    //    iteration state on the driver). Synchronous rounds + total
+    //    the argmax is `max(struct(weight_sum, −label))` in the SQL
+    //    statement; the engine collects the ≤ nations² undirected edges
+    //    once and runs both rounds on the driver with the same tie
+    //    order. Synchronous rounds + total
     //    tie order ⇒ the fixpoint trajectory is a pure function of the
     //    graph — engine-exact. ─────────────────────────────────────────
     QueryDef("graph_label_propagation",
-      (s, dir) => {
-        import s.implicits._
-        Graph.labelPropagation(nationTradeUndirected(s, dir), nations(s, dir))
-          .select($"node", $"lbl".cast("long").as("community"))
-          .orderBy($"node")
-      },
+      (s, dir) => Graph.labelPropagation(nationTradeUndirected(s, dir), nations(s, dir),
+        TpchNations).withColumnRenamed("lbl", "community"),
       Some("""WITH d0 AS (
           SELECT c.c_nationkey AS a, s.s_nationkey AS b, CAST(count(*) AS BIGINT) AS w
           FROM lineitem l
@@ -2836,20 +2838,18 @@ object RelationalQueries extends QueryModule {
     //    disconnected-safe closeness: C(u) = Σ_v 1/d(u,v) — unreachable
     //    nodes contribute 0 instead of poisoning the mean, which is why
     //    it replaced classic closeness in practice): all-sources BFS on
-    //    the bounded |nations|² state (3 fixed min-relaxation rounds,
-    //    the graph_bfs_distance contract, localCheckpoint per round),
-    //    and because every finite distance here is ≤ 3, the reciprocal
-    //    sum is EXACT INTEGER arithmetic — Σ 6 DIV d with 6/d ∈
+    //    the bounded |nations|² state (3 fixed rounds, the
+    //    graph_bfs_distance contract), run on the driver over the edge
+    //    set one bounded fold of the fact join dedups and brings there,
+    //    no shuffle; because every finite distance here is ≤ 3, the
+    //    reciprocal sum is EXACT INTEGER arithmetic — Σ 6 DIV d with 6/d ∈
     //    {6,3,2} — no float anywhere. Beyond-3-hop pairs count as
     //    unreached (documented bounded-round contract). ──────────────────
     QueryDef("graph_harmonic_centrality",
       (s, dir) => {
         import s.implicits._
         Graph.harmonicCentrality(nationTradePairs(s, dir)
-          .filter($"c_nationkey" =!= $"s_nationkey")
-          .select(least($"c_nationkey", $"s_nationkey").cast("long").as("a"),
-            greatest($"c_nationkey", $"s_nationkey").cast("long").as("b"))
-          .distinct())
+          .select($"c_nationkey".cast("long"), $"s_nationkey".cast("long")), TpchNations)
       },
       Some("""WITH e0 AS MATERIALIZED (
           SELECT DISTINCT CAST(least(c.c_nationkey, s.s_nationkey) AS BIGINT)
@@ -6600,7 +6600,7 @@ object RelationalQueries extends QueryModule {
     QueryDef("graph_community_modularity",
       (s, dir) => {
         val edges = nationTradeUndirected(s, dir)
-        Graph.modularity(edges, Graph.labelPropagation(edges, nations(s, dir)))
+        Graph.modularity(edges, Graph.labelPropagation(edges, nations(s, dir), TpchNations))
       },
       Some("""WITH d0 AS (
           SELECT c.c_nationkey AS a, s.s_nationkey AS b, CAST(count(*) AS BIGINT) AS w
@@ -11552,15 +11552,16 @@ object RelationalQueries extends QueryModule {
     //    BIGINT rank units, (r·w) DIV ow edge pushes, teleport
     //    15e9 DIV (100·|S|) only at seeds — order-independent and
     //    partitioning-proof. Same scale shape as pagerank_fixed: the
-    //    fact-side edge aggregation dominates; iterations are
-    //    |nations|²-bounded joins. ────────────────────────────────────
+    //    fact-side edge aggregation dominates; the iterations run on
+    //    the driver over the ≤ |nations|² collected edges. ─────────────
     QueryDef("graph_personalized_pagerank",
       (s, dir) => {
         import s.implicits._
         Graph.personalizedPageRank(nationTradeFlows(s, dir),
           Tables.load(s, dir, "nation")
             .select($"n_nationkey".as("node"),
-              when($"n_nationkey".isin(0, 1, 2), 1L).otherwise(0L).as("seed")))
+              when($"n_nationkey".isin(0, 1, 2), 1L).otherwise(0L).as("seed")),
+          TpchNations)
       },
       Some("""WITH e AS (
     SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
@@ -11605,8 +11606,9 @@ object RelationalQueries extends QueryModule {
     //    step w′ = (w·target·10⁶) DIV current in decimal(38,0) integer
     //    micro-weights, so every iterate is engine-exact; the final
     //    max row/col margin gaps (ppm) ship as the convergence proof.
-    //    Scale: one corpus aggregate to |segments|×|bands| = 25 cells;
-    //    the iterations are 25-row joins — free at any corpus size. ────
+    //    Scale: one corpus aggregate to the |segments|×|bands| = 25
+    //    cells, collected under that bound; the iterations run on the
+    //    driver over 25 cells — free at any corpus size. ───────────────
     QueryDef("agg_survey_raking",
       (s, dir) => {
         import s.implicits._
@@ -11616,55 +11618,43 @@ object RelationalQueries extends QueryModule {
             expr("""CASE WHEN CAST(conv(substring(md5(CAST(c_custkey AS STRING)), 1, 2), 16, 10) AS BIGINT)
                 < 128 + 24 * (length(c_mktsegment) % 3) THEN 1L ELSE 0L END""")
               .as("in_samp"))
-        val cells = fullC.groupBy($"seg", $"band")
-          .agg(count(lit(1)).as("n_full"), sum($"in_samp").as("n_samp"))
-          .localCheckpoint()
-        val rowm = cells.groupBy($"seg").agg(sum($"n_full").as("r_t"))
-        val colm = cells.groupBy($"band").agg(sum($"n_full").as("c_t"))
-        val w0 = cells.filter($"n_samp" > 0L)
-          .withColumn("w", lit(1000000L))
-        // r16 (guide §5, truncate exponentially-shared plans): each
-        // half-round references its predecessor TWICE (margin aggregate
-        // + the rescale join), so the unbarriered 3-round fold built a
-        // plan with ~4³ copies of the w0 subtree — dozens of duplicate
-        // tiny aggregates and broadcasts in one query. The state is
-        // |segments|·|bands| rows (25 at any SF — margins, not corpus),
-        // so a localCheckpoint per half-round costs microseconds and
-        // keeps the plan linear in rounds.
-        val wFinal = (0 until 3).foldLeft(w0) { (prev, _) =>
-          val rw = prev.groupBy($"seg")
-            .agg(sum($"w".cast("decimal(38,0)") * $"n_samp").as("cur"))
-          val a = prev
-            .join(broadcast(rw), "seg").join(broadcast(rowm), "seg")
-            .select($"seg", $"band", $"n_full", $"n_samp",
-              expr("(CAST(w AS DECIMAL(38,0)) * r_t * 1000000) div cur")
-                .as("w"))
-            .localCheckpoint()
-          val cw = a.groupBy($"band")
-            .agg(sum($"w".cast("decimal(38,0)") * $"n_samp").as("cur"))
-          a.join(broadcast(cw), "band").join(broadcast(colm), "band")
-            .select($"seg", $"band", $"n_full", $"n_samp",
-              expr("(CAST(w AS DECIMAL(38,0)) * c_t * 1000000) div cur")
-                .as("w"))
-            .localCheckpoint()
+        // the 25 (seg, band) cells' (n_full, n_samp) come to the driver,
+        // where the IPF rounds and the margin gaps run in the statement's
+        // DECIMAL(38,0) / BIGINT arithmetic
+        val cells = Bounded.collect(fullC.groupBy($"seg", $"band")
+            .agg(count(lit(1)).as("n_full"), sum($"in_samp").as("n_samp")),
+          TpchSegments.toLong * (TpchNations / 5)).map { r =>
+          require(!r.anyNull, "agg_survey_raking: a null cell")
+          (r.getString(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3))
+        }.toMap
+        val rowT = cells.groupMapReduce(_._1._1)(_._2._1)(Math.addExact)
+        val colT = cells.groupMapReduce(_._1._2)(_._2._1)(Math.addExact)
+        type Cell = (String, Long)
+        // Σ w·n_samp per margin key
+        def cur[K](w: Map[Cell, Long], key: Cell => K): Map[K, BigInt] =
+          w.groupMapReduce(e => key(e._1))(e => Ansi.dec38(BigInt(e._2) * cells(e._1)._2))(
+            (x, y) => Ansi.dec38(x + y))
+        // w′ = (w·target·10⁶) DIV cur
+        def rake[K](w: Map[Cell, Long], key: Cell => K, target: Map[K, Long]): Map[Cell, Long] = {
+          val c = cur(w, key)
+          w.map { case (k, v) =>
+            k -> Ansi.div(Ansi.dec38(Ansi.dec38(BigInt(v) * target(key(k))) * 1000000), c(key(k)))
+          }
         }
-        val wc = wFinal.localCheckpoint()
-        val rowGap = wc.groupBy($"seg")
-          .agg(sum($"w".cast("decimal(38,0)") * $"n_samp").as("cur"))
-          .join(broadcast(rowm), "seg")
-          .agg(max(expr("""(abs(cur - CAST(r_t AS DECIMAL(38,0)) * 1000000)
-              * 1000000) div (CAST(r_t AS DECIMAL(38,0)) * 1000000)"""))
-            .as("max_row_gap_ppm"))
-        val colGap = wc.groupBy($"band")
-          .agg(sum($"w".cast("decimal(38,0)") * $"n_samp").as("cur"))
-          .join(broadcast(colm), "band")
-          .agg(max(expr("""(abs(cur - CAST(c_t AS DECIMAL(38,0)) * 1000000)
-              * 1000000) div (CAST(c_t AS DECIMAL(38,0)) * 1000000)"""))
-            .as("max_col_gap_ppm"))
-        wc.crossJoin(broadcast(rowGap)).crossJoin(broadcast(colGap))
-          .select($"seg", $"band", $"n_full", $"n_samp",
-            $"w".as("w_e6"), $"max_row_gap_ppm", $"max_col_gap_ppm")
-          .orderBy($"seg", $"band")
+        // the largest |cur − target·10⁶| in ppm of target·10⁶
+        def maxGap[K](w: Map[Cell, Long], key: Cell => K, target: Map[K, Long]): Long =
+          cur(w, key).map { case (g, c) =>
+            val t = Ansi.dec38(BigInt(target(g)) * 1000000)
+            Ansi.div(Ansi.dec38(Ansi.dec38(c - t).abs * 1000000), t)
+          }.max
+        val w0 = cells.collect { case (k, (_, ns)) if ns > 0L => k -> 1000000L }
+        val w = (0 until 3).foldLeft(w0)((w, _) => rake(rake(w, _._1, rowT), _._2, colT))
+        lazy val gaps = (maxGap(w, _._1, rowT), maxGap(w, _._2, colT))
+        Bounded.frame(s, w.toSeq.sortBy(_._1).map { case (k @ (seg, band), we6) =>
+            Row(seg, band, cells(k)._1, cells(k)._2, we6, gaps._1, gaps._2) },
+          "seg STRING NOT NULL, band BIGINT NOT NULL, n_full BIGINT NOT NULL, " +
+            "n_samp BIGINT NOT NULL, w_e6 BIGINT NOT NULL, " +
+            "max_row_gap_ppm BIGINT NOT NULL, max_col_gap_ppm BIGINT NOT NULL")
       },
       Some("""WITH full_c AS (SELECT c_mktsegment AS seg,
       CAST(c_nationkey // 5 AS BIGINT) AS band,

@@ -279,7 +279,9 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   // Every BroadcastNestedLoopJoin in the suite must be one of these
-  // documented bounded shapes; anything new is a scale regression.
+  // documented bounded shapes; anything new is a scale regression. Every
+  // entry must name a query whose audited plan has one: a join behind a
+  // checkpoint or a graft.Bounded fold is not in that plan.
   //  - histogram / profile_stats / incremental_distinct_exact /
   //    sketch_error_bounds: cross join against a 1-row broadcast
   //    (scalar recombine)
@@ -290,9 +292,6 @@ class PlanAuditSpec extends AnyFunSuite {
     "agg_incremental_distinct_exact", "agg_sketch_error_bounds",
     "agg_approx_topk_bounds", "agg_hll_mergeable_bounds", "agg_countmin_bounds",
     "dedup_embedding_cosine", "sim_topk_brute", "sim_topk_filtered", "sim_topk_ivf",
-    // mmr rerank: its pool is topk_brute (the same non-equi qid≠cid probe
-    // broadcast); the per-query greedy after it is a kernel, no join
-    "sim_rerank_mmr",
     // index_probe/rotate: same vector×centroid routing cross join as
     // topk_ivf, against the STORED |centroids|-row broadcast table
     "sim_index_probe", "sim_index_rotate",
@@ -302,9 +301,6 @@ class PlanAuditSpec extends AnyFunSuite {
     // PQ drift audit: same shape — two ksub-row codebook encodes are
     // narrow maps, the BNLJ is the 1-row drift-share broadcast recombine
     "sim_index_pq_reversion",
-    // classifier training: the final 1-row accuracy/count broadcast
-    // recombines (each step's weight join is an equi join on bucket)
-    "text_classifier_train",
     // domain_mix / median / pack_chunks: 1-row broadcast scalar recombine
     // (pack_chunks rebases its data-derived shard bucket on broadcast
     // min/max ids — see the scaladoc at its QueryDef)
@@ -340,12 +336,6 @@ class PlanAuditSpec extends AnyFunSuite {
     // broadcast recombined onto the candidate side (the bucketed
     // probe join itself is an equi hash join)
     "sim_topk_mips_norm",
-    // pagerank: |nodes|-row teleport frame × 1-row node-count broadcast
-    // (per iteration); the edge build and contributions are equi joins
-    "graph_pagerank_fixed",
-    // personalized pagerank: the same |nodes|-row teleport frame ×
-    // 1-row seed-count broadcast per iteration
-    "graph_personalized_pagerank",
     // semdedup (+ its incremental probe): the same vector×centroid
     // routing cross join as topk_ivf; the broadcast side is the COARSE
     // quantizer tier only — ~√n up to maxFlatCells=4096 flat, ~n^(1/4)
@@ -382,9 +372,6 @@ class PlanAuditSpec extends AnyFunSuite {
     // token budget: 1-row j*/waterline broadcast recombines onto the
     // |sources|-row frame
     "pipeline_token_budget",
-    // HITS: per-iteration 1-row max broadcast rescale onto the
-    // |nodes|-row frame (the pagerank teleport shape)
-    "graph_hits_power",
     // Brown-Forsythe: the |types|-row frame × 1-row grand-moment
     // broadcast recombine (the anova shape)
     "agg_levene_bf",
@@ -408,8 +395,6 @@ class PlanAuditSpec extends AnyFunSuite {
     "agg_psi_bands",
     // catalog coverage: per entity a 1-row dimension-total broadcast
     "dq_catalog_coverage",
-    // friedman: the 1-row type-count broadcast (complete-block filter)
-    "agg_friedman_test",
     // neyman: 1-row weight-total + used-budget broadcasts onto the
     // |strata|-row frame
     "sample_neyman_allocation",
@@ -487,9 +472,6 @@ class PlanAuditSpec extends AnyFunSuite {
     // approx-quantile bound check: exact-rank scan against the 1-row
     // broadcast sketch estimates (the *_bounds scalar-recombine shape)
     "agg_approx_quantile_bounds",
-    // pca power iteration: 1-row broadcast recombines (overflow-envelope
-    // guard + per-iteration norm); the matvec joins are equi joins
-    "embed_pca_power",
     // bpe apply: the 1-row broadcast merge-list array recombined onto
     // the TakeOrdered word-type side
     "text_bpe_apply",
@@ -602,9 +584,6 @@ class PlanAuditSpec extends AnyFunSuite {
     // margin sampling + prototype pruning: the corpus×32-centroid
     // routing cross join (the embed_silhouette shape)
     "sample_uncertainty_margin", "embed_prune_prototypes",
-    // knn shapley: the 1-row corpus-count broadcast (stride device) +
-    // the ≤17-row broadcast eval-set probe (decontaminate_embed shape)
-    "embed_knn_shapley",
     // recall eval: topk_ivf's query×centroid routing cross joins +
     // topk_brute's non-equi qid≠cid probe broadcast (both bounded)
     "sim_recall_eval",
@@ -619,9 +598,6 @@ class PlanAuditSpec extends AnyFunSuite {
     // stratified ATE: the 1-row folded-estimate broadcast recombine
     // onto the |strata|-row frame (the anova scalar-recombine shape)
     "agg_stratified_ate",
-    // truncated knn shapley: the same 1-row corpus-count + ≤17-row
-    // eval-set probe broadcasts as embed_knn_shapley
-    "embed_knn_shapley_trunc",
     // theta sketch: three 1-row recombines (click-θ × view-θ × exact
     // intersection count) — all single-row sketch summaries
     "agg_theta_sketch_setops",
@@ -643,8 +619,6 @@ class PlanAuditSpec extends AnyFunSuite {
     // jackknife: the 1-row totals/mean/SE recombines onto the |G|=25
     // per-group frame (the anova scalar-recombine shape)
     "agg_jackknife_ratio_ci",
-    // raking: two 1-row margin-gap recombines onto the 25-cell frame
-    "agg_survey_raking",
     // doremi: the 1-row corpus-totals + update-normalizer recombines
     // onto the |sources|-row frame
     "pipeline_doremi_update",
@@ -657,18 +631,21 @@ class PlanAuditSpec extends AnyFunSuite {
 
   /** Spark jobs started while `f` runs. Query construction is counted
     * after one warm build, so the memoized table-footer inference job of
-    * a first table touch is not charged to the query.
+    * a first table touch is not charged to the query. The listener bus is
+    * asynchronous, so the warm build's job events can reach the listener
+    * after it is added: a job counts only if it was submitted after that.
     */
   private def buildJobs(name: String)(f: org.apache.spark.sql.DataFrame => Unit): Int = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    @volatile var since = Long.MaxValue
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (j.time >= since) { jobs.incrementAndGet(); () }
     }
     SparkEntry.queries(name)(spark, sfDir)
     spark.sparkContext.addSparkListener(listener)
+    since = System.currentTimeMillis()
     try {
       f(SparkEntry.queries(name)(spark, sfDir))
       Thread.sleep(1500) // listener bus is async; give any job event time to land
@@ -695,8 +672,10 @@ class PlanAuditSpec extends AnyFunSuite {
     // means a new barrier, collect or stage. Each bounded round
     // (graft.Bounded) is one job.
     val pinned = Map(
+      "agg_survey_raking" -> 3,
       "embed_kmeans_converged" -> 5,
       "text_bpe_train3" -> 6,
+      "text_classifier_train" -> 11,
       "graph_shortest_hops" -> 5,
       "sim_rerank_mmr" -> 5)
     val got = pinned.keys.toSeq.sorted.map { name =>
@@ -711,25 +690,27 @@ class PlanAuditSpec extends AnyFunSuite {
     // stage to any of them. Pinned at the counts measured at sf0.001 with
     // one noop write before the operators were shared, except
     // graph_assortativity (20 then): it no longer builds the label
-    // propagation it discarded, and graph_shortest_hops (6 then): its
-    // edge fold dedups without a shuffle.
+    // propagation it discarded; graph_shortest_hops (6 then): its edge
+    // fold dedups without a shuffle; and the nation-grid loops whose
+    // rounds run on the driver (PageRank, HITS, label propagation,
+    // harmonic centrality) plus the k-truss cap sweep's local frame.
     val pinned = Map(
       "agg_gravity_model" -> 14,
       "graph_assortativity" -> 11,
       "graph_bfs_distance" -> 32,
       "graph_clustering_coeff" -> 13,
-      "graph_community_modularity" -> 25,
+      "graph_community_modularity" -> 20,
       "graph_copurchase_projection" -> 3,
-      "graph_harmonic_centrality" -> 26,
-      "graph_hits_power" -> 35,
+      "graph_harmonic_centrality" -> 6,
+      "graph_hits_power" -> 7,
       "graph_kcore_peel" -> 22,
-      "graph_ktruss_cap_sweep" -> 31,
+      "graph_ktruss_cap_sweep" -> 29,
       "graph_ktruss_capped" -> 14,
       "graph_ktruss_peel" -> 19,
-      "graph_label_propagation" -> 18,
+      "graph_label_propagation" -> 11,
       "graph_neighbor_jaccard" -> 10,
-      "graph_pagerank_fixed" -> 20,
-      "graph_personalized_pagerank" -> 20,
+      "graph_pagerank_fixed" -> 7,
+      "graph_personalized_pagerank" -> 7,
       "graph_shortest_hops" -> 5,
       "graph_triangle_count" -> 10,
       "graph_triangle_doulion" -> 9)
@@ -904,13 +885,17 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("no registered query plans a cartesian product; BNLJ only in documented bounded shapes") {
-    val offenders = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
-      val p = plan(name)
-      val cart = p.contains("CartesianProduct")
-      val bnlj = p.contains("BroadcastNestedLoopJoin") && !allowedBnlj(name)
-      if (cart || bnlj) Some(s"$name cartesian=$cart unexpectedBnlj=$bnlj") else None
-    }
-    assert(offenders.isEmpty, offenders.mkString("\n"))
+    val plans = SparkEntry.queries.keys.toSeq.sorted.map(name => name -> plan(name))
+    val cartesian = plans.collect { case (name, p) if p.contains("CartesianProduct") => name }
+    val withBnlj = plans.collect { case (name, p) if p.contains("BroadcastNestedLoopJoin") => name }.toSet
+    assert(cartesian.isEmpty, "cartesian products: " + cartesian.mkString(", "))
+    assert((withBnlj -- allowedBnlj).isEmpty,
+      "undocumented BNLJ: " + (withBnlj -- allowedBnlj).toSeq.sorted.mkString(", "))
+    // two-way: an entry whose query plans no BNLJ, or names no registered
+    // query, would let a new BNLJ in unreviewed
+    assert((allowedBnlj -- withBnlj).isEmpty,
+      "allowed BNLJ entries without one (remove them): " +
+        (allowedBnlj -- withBnlj).toSeq.sorted.mkString(", "))
   }
 
   test("no registered query carries a hint Spark ignores") {

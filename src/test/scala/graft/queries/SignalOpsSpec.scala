@@ -553,13 +553,14 @@ class SignalOpsSpec extends AnyFunSuite {
   }
 
   test("checkpointing graph queries return their serial rows when run concurrently") {
-    // with the k-means and BPE loops, whose rounds are bounded folds
-    // (graft.Bounded) over one planned input
+    // with the loops whose rounds are bounded folds (graft.Bounded) over
+    // one planned input: k-means, BPE, raking, the classifier, PageRank
     val names = Seq("graph_ktruss_capped", "graph_ktruss_cap_sweep", "graph_kcore_peel",
       "graph_shortest_hops", "graph_hits_power", "graph_harmonic_centrality",
       "graph_bfs_distance", "graph_label_propagation", "graph_community_modularity",
       "graph_triangle_doulion", "graph_ktruss_peel", "embed_kmeans_converged",
-      "text_bpe_train3")
+      "text_bpe_train3", "agg_survey_raking", "text_classifier_train",
+      "graph_pagerank_fixed", "graph_personalized_pagerank")
     val serial = names.map(n => run(n).toSeq)
     assert(serial.forall(_.nonEmpty))
     (1 to 3).foreach { _ =>
